@@ -66,10 +66,10 @@ WHERE mod(o_orderkey, 10) = 0
 def _flat_warehouse(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     """The shared bulk single-batch warehouse for q_warehouse_rollup and
     q_top10_avg_salary (identical STAGING_SQL, dims, and fact build —
-    building it twice was pure waste): staging cached (each scalable
+    building it twice was pure waste): staging cached (each key
     assigner's sizing job plus the twice-consumed dims would otherwise
-    re-execute the staging SQL subtree, ~3s of wall at sf0.1), dims and
-    fact via the bucketed (scalable) assigner — the no-global-sort key
+    re-execute the staging SQL subtree, ~3s of wall at sf0.1); at this
+    size the probe picks the bucketed no-global-sort key plan, so that
     path itself sits under both hash-match gates."""
 
     def build() -> list[DataFrame]:
@@ -78,14 +78,10 @@ def _flat_warehouse(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
             "skills", F.lit(None).cast("array<string>")
         ).cache()
         run_date = RUN_TS.date()
-        dim_job = scd2_merge(
-            None, staging, DIM_JOB_CONFIG, run_date, scalable=True
-        ).dim.cache()
-        dim_company = scd2_merge(
-            None, staging, DIM_COMPANY_CONFIG, run_date, scalable=True
-        ).dim.cache()
+        dim_job = scd2_merge(None, staging, DIM_JOB_CONFIG, run_date).dim.cache()
+        dim_company = scd2_merge(None, staging, DIM_COMPANY_CONFIG, run_date).dim.cache()
         incoming = facts_plan.build_fact_batch(staging, dim_job, dim_company, RUN_TS)
-        fact = facts_plan.merge_facts(None, incoming, scalable=True).cache()
+        fact = facts_plan.merge_facts(None, incoming).cache()
         return [staging, dim_job, dim_company, fact]
 
     return _gate_frames(spark, "flat_warehouse", sf_dir, build)
@@ -247,11 +243,11 @@ def _ensure_views_warehouse(spark: SparkSession, sf_dir: str):
     )
     run_date = RUN_TS.date()
 
-    dim_job = scd2_merge(None, staging, DIM_JOB_CONFIG, run_date, scalable=True).dim.cache()
-    dim_company = scd2_merge(None, staging, DIM_COMPANY_CONFIG, run_date, scalable=True).dim.cache()
-    dim_location = build_dim_location(None, staging, run_date, scalable=True).dim.cache()
+    dim_job = scd2_merge(None, staging, DIM_JOB_CONFIG, run_date).dim.cache()
+    dim_company = scd2_merge(None, staging, DIM_COMPANY_CONFIG, run_date).dim.cache()
+    dim_location = build_dim_location(None, staging, run_date).dim.cache()
     incoming = facts_plan.build_fact_batch(staging, dim_job, dim_company, RUN_TS)
-    fact = facts_plan.merge_facts(None, incoming, scalable=True).cache()
+    fact = facts_plan.merge_facts(None, incoming).cache()
     bridge = facts_plan.build_bridge(
         fact, incoming, staging, dim_job, dim_location, None
     ).cache()

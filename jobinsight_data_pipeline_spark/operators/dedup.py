@@ -97,11 +97,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     )
 
 
-def _drop_hot_shingles(
-    sh: DataFrame,
-    max_shingle_freq: int | None,
-    distribute: bool = False,
-) -> DataFrame:
+def _drop_hot_shingles(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
     """Drop shingles whose document frequency exceeds the cap BEFORE any
     pair join. The inverted-index self-join emits ~df² candidate rows per
     shingle; one boilerplate 3-gram in 10⁶ docs would yield ~5·10¹¹ pairs
@@ -123,42 +119,14 @@ def _drop_hot_shingles(
     those rows would otherwise feed."""
     if max_shingle_freq is None:
         return sh
-    return _cap_key_freq(sh, "shingle", max_shingle_freq, distribute)
+    return _cap_key_freq(sh, "shingle", max_shingle_freq)
 
 
-def _cap_key_freq(
-    df: DataFrame, key: str, cap: int, distribute: bool = False
-) -> DataFrame:
-    """Generic hot-key frequency cap.
-
-    Default: count-over-window (see _drop_hot_shingles for the plan
-    rationale — AQE exchange reuse collapses the shuffle across the
-    self-join's twin subtrees; measured 2× faster than the alternative
-    at sf0.1). The window DOES route one hot key's rows through a
-    single task for the counting pass — a linear scan, but at extreme
-    document frequency (≳10⁷ occurrences of one key) that task becomes
-    the straggler.
-
-    ``distribute=True`` is the straggler-bounded form for such corpora:
-    a plain ``groupBy(key).count()`` — whose hash aggregate partial-
-    aggregates map-side, so no task ever sees more than its partition's
-    share of a hot key — then a broadcast anti-join of the (tiny)
-    over-cap key list. A/B at sf0.1 (ngram_jaccard_pairs end-to-end,
-    best-of-3, round-6 build): with the default no-op cap the window is
-    marginally faster (1.90 s vs 2.05 s — AQE exchange reuse across the
-    self-join's twin subtrees), which is why it stays the default; with
-    a BITING cap (max_shingle_freq=50 on this corpus) the distributed
-    form already wins at test scale (1.81 s vs 2.28 s) — and at
-    extreme per-key frequency it is the only shape without a straggler
-    task. Results are identical (pinned by test)."""
-    if distribute:
-        hot = (
-            df.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > cap)
-            .select(key)
-        )
-        return df.join(F.broadcast(hot), key, "left_anti")
+def _cap_key_freq(df: DataFrame, key: str, cap: int) -> DataFrame:
+    """Generic hot-key frequency cap: count-over-window (see
+    _drop_hot_shingles for the plan rationale — AQE exchange reuse
+    collapses the shuffle across the self-join's twin subtrees; measured
+    2× faster than a groupBy + anti-join at sf0.1)."""
     w = Window.partitionBy(key)
     return (
         df.withColumn("_df", F.count(F.lit(1)).over(w))
@@ -173,17 +141,9 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.2,
-    prefix_filter: bool = False,
     max_shingle_freq: int | None = 100_000,
-    distribute_cap: bool = False,
 ) -> DataFrame:
     """All pairs (a < b) with shingle-set Jaccard ≥ threshold.
-
-    ``distribute_cap=True`` switches the frequency cap to the
-    straggler-bounded groupBy + broadcast-anti form (see
-    ``_cap_key_freq``) for corpora where a single shingle's document
-    frequency exceeds ~10⁷ — slower at test scale (A/B in
-    ``_cap_key_freq``'s docstring), identical results.
 
     ``max_shingle_freq`` bounds the candidate join: shingles appearing in
     more than that many documents are dropped from the inverted index
@@ -192,122 +152,51 @@ def ngram_jaccard_pairs(
     pair set is a subset of the exact one). The default (10⁵) is a no-op
     below ~10⁵ docs — exact at test scale — while bounding any one join
     key to ~10¹⁰ candidate pairs at corpus scale; pass ``None`` for
-    strict exact mode.
-
-    Decision rule for the two join strategies (this docstring is the one
-    place it lives): with the frequency cap active (the default), the
-    plain inverted-index join is bounded and measured ~2x faster, so use
-    it. Reach for ``prefix_filter=True`` (PPJoin-style prefix filtering,
-    Xiao et al., "Efficient Similarity Joins for Near Duplicate
-    Detection", WWW'08 — shingles ordered globally by (frequency,
-    shingle); a pair with J ≥ t must share a shingle within each doc's
-    first ``|x| - ceil(t·|x|) + 1`` shingles, so only prefixes are
-    joined) only when you need EXACT results (``max_shingle_freq=None``)
-    on a zipfian corpus: it is lossless yet still prunes hot-shingle
-    candidates, at the price of extra freq-join/window shuffles that
-    make it ~2x slower on near-unique-shingle corpora. MinHash-LSH
-    (``minhash_lsh_pairs``) is the true 100 TB path either way.
-    Verification intersects per-doc shingle sets (bounded by doc length,
-    no second corpus-wide join).
+    strict exact mode. MinHash-LSH (``minhash_lsh_pairs``) is the true
+    100 TB path.
     """
     sh = shingles(df, id_col, text_col, n)
 
-    if not prefix_filter:
-        # |a ∩ b| falls straight out of the inverted-index join: count
-        # matching shingles per pair. No collect_set materialization, no
-        # array_intersect verify, and the per-doc size frame is small
-        # enough to broadcast — two shuffles total (index join + pair
-        # count) instead of four (measured 6.2s → 2.5s at sf0.1).
-        # Sizes come from the FULL shingle sets (exact denominators);
-        # only the index join is frequency-capped.
-        sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
-        sh = _drop_hot_shingles(sh, max_shingle_freq, distribute_cap)
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .groupBy(
-                F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
-            )
-            .agg(F.count("*").alias("inter"))
-        )
-        # no STATIC broadcast hint on the per-doc size frame: AQE's
-        # runtime-measured size gate picks broadcast when sizes is
-        # genuinely small (it is, at any corpus this exact mode should
-        # see) and falls back to a shuffled join on a billion-doc
-        # input instead of OOMing the driver — the r8-verdict nit.
-        # Measured at sf0.1: identical plan (AQE converts to broadcast)
-        # and identical wall time vs the old forced hint.
-        return (
-            inter.join(
-                sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a")),
-                "doc_a",
-            )
-            .join(
-                sizes.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b")),
-                "doc_b",
-            )
-            .filter(
-                F.least("sz_a", "sz_b") >= F.lit(threshold) * F.greatest("sz_a", "sz_b")
-            )
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
-        )
-
-    # prefix-filtered path: candidates come from prefixes only, so the
-    # full intersection must be verified against the complete sets
-    docsets = sh.groupBy("doc").agg(
-        F.collect_set("shingle").alias("sset"), F.count("*").alias("sz")
-    ).cache()
-
-    # verification stays on the full sets; the cap only prunes the
-    # candidate-generating prefix index
+    # |a ∩ b| falls straight out of the inverted-index join: count
+    # matching shingles per pair. No collect_set materialization, no
+    # array_intersect verify, and the per-doc size frame is small
+    # enough to broadcast — two shuffles total (index join + pair
+    # count) instead of four (measured 6.2s → 2.5s at sf0.1).
+    # Sizes come from the FULL shingle sets (exact denominators);
+    # only the index join is frequency-capped.
+    sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     sh = _drop_hot_shingles(sh, max_shingle_freq)
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("freq"))
-    w = Window.partitionBy("doc").orderBy("freq", "shingle")
-    ranked = (
-        sh.join(freq, "shingle")
-        .withColumn("rn", F.row_number().over(w))
-    )
-    prefix_len = (
-        F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    )
-    index = (
-        ranked.join(docsets.select("doc", "sz"), "doc")
-        .filter(F.col("rn") <= prefix_len)
-        .select("doc", "shingle")
-    )
-    a, b = index.alias("a"), index.alias("b")
-    cand = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    da = docsets.select(
-        F.col("doc").alias("doc_a"), F.col("sset").alias("set_a"), F.col("sz").alias("sz_a")
-    )
-    db = docsets.select(
-        F.col("doc").alias("doc_b"), F.col("sset").alias("set_b"), F.col("sz").alias("sz_b")
-    )
-    return (
-        cand
-        # length filter: J ≥ t requires t·max(|a|,|b|) ≤ min(|a|,|b|)
-        .join(da, "doc_a")
-        .join(db, "doc_b")
-        .filter(
-            F.least("sz_a", "sz_b")
-            >= F.lit(threshold) * F.greatest("sz_a", "sz_b")
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc") < F.col("b.doc")),
         )
-        .withColumn("inter", F.size(F.array_intersect("set_a", "set_b")))
+        .groupBy(
+            F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
+        )
+        .agg(F.count("*").alias("inter"))
+    )
+    # no STATIC broadcast hint on the per-doc size frame: AQE's
+    # runtime-measured size gate picks broadcast when sizes is
+    # genuinely small (it is, at any corpus this exact mode should
+    # see) and falls back to a shuffled join on a billion-doc
+    # input instead of OOMing the driver.
+    # Measured at sf0.1: identical plan (AQE converts to broadcast)
+    # and identical wall time vs the old forced hint.
+    return (
+        inter.join(
+            sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a")),
+            "doc_a",
+        )
+        .join(
+            sizes.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b")),
+            "doc_b",
+        )
+        .filter(
+            F.least("sz_a", "sz_b") >= F.lit(threshold) * F.greatest("sz_a", "sz_b")
+        )
         .withColumn(
             "jaccard",
             F.round(

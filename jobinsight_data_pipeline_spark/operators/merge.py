@@ -11,9 +11,11 @@ Scale notes (100 TB posture):
 - ``upsert_by_key`` shuffles both sides on the key — on a real deployment
   partition/bucket the base table by the same key so AQE can plan a
   shuffle-free merge; incoming batches are typically small → broadcast.
-- surrogate-key assignment uses max()+row_number over the *incoming batch
-  only* (dims/facts grow by small daily deltas), never a global resort of
-  the base table.
+- surrogate-key assignment numbers the *incoming batch only* from the
+  table's max() (dims/facts grow by small daily deltas), never a global
+  resort of the base table; :func:`_ordered_offsets` is the one
+  global-offset primitive (probe → delta or bucketed plan, unless the
+  caller passes ``bounds``), shared with operators/packing.
 """
 
 from __future__ import annotations
@@ -124,95 +126,105 @@ def _split_points(df: DataFrame, col: str, parts: int) -> list:
     return out
 
 
-def assign_surrogate_keys(
+def _ordered_offsets(
     df: DataFrame,
-    sk_col: str,
-    existing_max: int,
+    weight: Column,
     order_by: list[str],
-    scalable: bool | None = None,
+    out_col: str,
+    bounds: list | None = None,
 ) -> DataFrame:
-    """SC5: dense surrogate keys without a sequence object —
-    ``existing_max + row_number() over (order by natural key)``.
+    """Attach ``out_col``: the exclusive running sum of ``weight`` in the
+    total ``order_by`` order (nulls last) — the one global-offset
+    primitive behind surrogate keys (weight 1) and sequence packing
+    (weight = tokens).
 
-    Two forms, chosen by the CALLER's knowledge of the input size:
+    The plan is picked by ONE rule: the ``_split_points`` probe (one
+    column-pruned sizing job — the bottom-k hash sample doubles as the
+    smallness probe, so no ``count()`` pass executes the upstream DAG)
+    returns split points on the leading order column, unless the caller
+    supplies ``bounds`` itself (skipping the probe).
 
-    **Delta mode** (default): one local sort over a deliberate constant
-    partition key. By contract the input is a bounded daily delta (the
-    reference's cadence — incoming batches, never the base table), so
-    single-partition work is the right plan; the constant key states that
-    intent and keeps the plan free of the "No Partition Defined" smell
-    that flags *accidental* global windows. Zero extra jobs: the delta
-    subtree stays fused and lazy.
+    **No split points** (a bounded daily delta, or a constant leading
+    column): one local sort over a deliberate constant partition key —
+    the single-partition window is the right plan there, and the
+    constant key states that intent (it keeps the plan free of the "No
+    Partition Defined" smell that flags *accidental* global windows).
 
-    **Bucketed mode** (``scalable=True`` — bulk/initial loads, wired in
-    plans/pipeline.py): identical keys with no global sort:
+    **Split points** (bulk loads): the same sums with no global sort —
 
-    1. bucket each row by comparing its FIRST order column against ≤ P-1
-       split points (a bounded sample, collected once and inlined as plan
-       literals) — a pure function of the row's key, deterministic across
-       plan re-executions, unlike repartitionByRange's sampled
-       RangePartitioner or spark_partition_id (which made this path
-       unsafe for multi-consumer plans in its first incarnation);
-    2. ``row_number`` within each bucket (parallel local sorts — the
+    1. bucket each row by comparing its FIRST order column against the
+       split points, frozen as plan literals — a pure function of the
+       row's key, deterministic across plan re-executions, unlike
+       repartitionByRange's sampled RangePartitioner or
+       spark_partition_id (which made this path unsafe for
+       multi-consumer plans in its first incarnation); NULLs sort last
+       → the final bucket;
+    2. running sum within each bucket (parallel local sorts — the
        window's partitionBy supplies the hash shuffle);
-    3. global position = local rank + cumulative count of earlier buckets
-       (a window over ≤ P rows).
-    Sizing is ONE column-pruned job (see ``_split_points`` — the bottom-k
-    hash sample doubles as the smallness probe, so no ``count()`` pass
-    executes the upstream DAG; round 2's separate count + sample jobs per
-    call regressed the bench 1.8×). Inputs with < k non-null keys fall
-    back to the delta plan. The output is NOT persisted here — keys are
-    reproducible on re-execution (frozen literals, total-order ranks), so
-    callers own the caching decision at their materialization boundaries.
+    3. add the broadcast total of all earlier buckets (a window over
+       ≤ P rows).
 
-    Keys are reproducible across reruns/layout changes when ``order_by``
-    is unique per row (true for every caller: dims key on the deduped
-    natural key, facts on the grain) — global rank depends only on the
-    total key order, never on the split points, which only steer balance.
-    Rows tying on the first order column land in one bucket; with a
-    near-unique leading column (all callers) buckets stay even. The
-    reference seeds sequences at 10000 (sql/schema_dwh.sql:3-6); callers
-    pass ``existing_max=9999`` for an empty table to match.
+    When ``order_by`` is unique per row (every caller: dims key on the
+    deduped natural key, facts on the grain, packing on the document
+    id), the sums depend only on the total order, never on the split
+    points, which only steer partition balance — so both plans give the
+    same values. Rows tying on the first order column land in one
+    bucket. The output is NOT persisted here: sums are reproducible on
+    re-execution, so callers own the caching decision at their
+    materialization boundaries.
     """
     cols = [F.col(c).asc_nulls_last() for c in order_by]
-    if scalable is None:
-        scalable = False
-    single = Window.partitionBy(F.lit(0)).orderBy(*cols)
-    if not scalable:
-        return df.withColumn(
-            sk_col, (F.row_number().over(single) + F.lit(existing_max)).cast("long")
-        )
-    parts = df.sparkSession.sparkContext.defaultParallelism
-    bounds = _split_points(df, order_by[0], parts)
+    if bounds is None:
+        parts = df.sparkSession.sparkContext.defaultParallelism
+        bounds = _split_points(df, order_by[0], parts)
     if not bounds:
-        # small bulk (or constant leading key) — the delta plan is right
-        return df.withColumn(
-            sk_col, (F.row_number().over(single) + F.lit(existing_max)).cast("long")
+        single = (
+            Window.partitionBy(F.lit(0))
+            .orderBy(*cols)
+            .rowsBetween(Window.unboundedPreceding, -1)
         )
+        return df.withColumn(out_col, F.coalesce(F.sum(weight).over(single), F.lit(0)))
+
     first = F.col(order_by[0])
-    # bucket = number of split points strictly below the key; NULLs sort
-    # last (asc_nulls_last) → the final bucket
     bucket = sum((first > F.lit(b)).cast("int") for b in bounds)
     bucketed = df.withColumn(
         "_pid", F.when(first.isNull(), F.lit(len(bounds))).otherwise(bucket)
     )
-    local = bucketed.withColumn(
-        "_lrn", F.row_number().over(Window.partitionBy("_pid").orderBy(*cols))
+    local_w = (
+        Window.partitionBy("_pid")
+        .orderBy(*cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    counts = bucketed.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
+    local = bucketed.withColumn(
+        "_lstart", F.coalesce(F.sum(weight).over(local_w), F.lit(0))
+    )
+    totals = bucketed.groupBy("_pid").agg(F.sum(weight).alias("_t"))
     prior = (
         Window.partitionBy(F.lit(0))
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = counts.withColumn("_off", F.coalesce(F.sum("_n").over(prior), F.lit(0)))
+    offsets = totals.withColumn("_off", F.coalesce(F.sum("_t").over(prior), F.lit(0)))
     return (
         local.join(F.broadcast(offsets.select("_pid", "_off")), "_pid")
-        .withColumn(
-            sk_col,
-            (F.col("_lrn") + F.col("_off") + F.lit(existing_max)).cast("long"),
-        )
-        .drop("_pid", "_lrn", "_off")
+        .withColumn(out_col, F.col("_lstart") + F.col("_off"))
+        .drop("_pid", "_lstart", "_off")
+    )
+
+
+def assign_surrogate_keys(
+    df: DataFrame, sk_col: str, existing_max: int, order_by: list[str]
+) -> DataFrame:
+    """SC5: dense surrogate keys without a sequence object —
+    ``existing_max + 1 + (number of rows before this one in order_by
+    order)``, i.e. :func:`_ordered_offsets` with weight 1, so the probe
+    picks the delta or bucketed plan. The reference seeds sequences at
+    10000 (sql/schema_dwh.sql:3-6); callers pass ``existing_max=9999``
+    for an empty table to match.
+    """
+    ranked = _ordered_offsets(df, F.lit(1), order_by, sk_col)
+    return ranked.withColumn(
+        sk_col, (F.col(sk_col) + F.lit(existing_max + 1)).cast("long")
     )
 
 

@@ -7,21 +7,23 @@ document, its global token ``start_offset`` in that stream and the
 packing semantics, a pure deterministic function of the document order.
 
 The global running sum is the scale problem: a naive
-``sum() over (order by id)`` is a single-partition global sort. This
-reuses the bucketed-assigner pattern (operators/merge.py:127-216, the
-SC5 surrogate-key design): bucket rows by frozen split-point literals
-from ONE bottom-k sizing job, cumsum locally per bucket (parallel local
-sorts), then add broadcast prior-bucket token totals — shuffle-bounded,
-deterministic across re-executions, no global sort at any size. Inputs
-too small to sample fall back to the fused single-partition plan.
+``sum() over (order by id)`` is a single-partition global sort. The
+offsets come from operators/merge's ordered-offset primitive (the same
+one that numbers surrogate keys), which follows one rule: a sizing probe
+picks the fused single-partition plan for inputs too small to sample,
+and otherwise buckets rows by frozen split-point literals, cumsums
+locally per bucket and adds broadcast prior-bucket token totals —
+deterministic across re-executions, no global sort at any size. A
+caller that already knows the key distribution passes ``bounds``, which
+skips the probe.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jobinsight_data_pipeline_spark.operators.merge import _split_points
+from jobinsight_data_pipeline_spark.operators.merge import _ordered_offsets
 from jobinsight_data_pipeline_spark.operators.parallelism import ordered_collect
 from jobinsight_data_pipeline_spark.operators.sampling import reserve_columns
 
@@ -31,7 +33,6 @@ def pack_sequences(
     tokens_col: str,
     capacity: int,
     order_by: list[str],
-    scalable: bool | None = None,
     bounds: list | None = None,
 ) -> DataFrame:
     """Attach ``start_offset`` (exclusive global token cumsum in
@@ -39,64 +40,19 @@ def pack_sequences(
 
     ``order_by`` must be unique per row (callers order by the document
     id) — offsets then depend only on the total order, never on the
-    split points, which only steer partition balance. ``bounds`` lets a
-    caller who already knows the key distribution supply split-point
-    literals directly (skipping the sizing job); inputs smaller than the
-    sampler's threshold otherwise take the single-partition delta plan.
+    split points, which only steer partition balance. The probe picks
+    the delta or bucketed plan unless ``bounds`` supplies split-point
+    literals directly (``[]`` forces the single-partition delta plan).
     Reserves/emits ``start_offset`` and ``pack_id``.
     """
     reserve_columns(
         df, ["start_offset", "pack_id", "_pid", "_lstart", "_off"], "pack_sequences"
     )
-    cols = [F.col(c).asc_nulls_last() for c in order_by]
-    toks = F.col(tokens_col).cast("long")
-    single = (
-        Window.partitionBy(F.lit(0))
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    with_start = _ordered_offsets(
+        df, F.col(tokens_col).cast("long"), order_by, "start_offset", bounds
     )
-
-    def finish(with_start: DataFrame) -> DataFrame:
-        return with_start.withColumn(
-            "pack_id", F.expr(f"start_offset div {int(capacity)}")
-        )
-
-    if bounds is None:
-        parts = df.sparkSession.sparkContext.defaultParallelism
-        bounds = _split_points(df, order_by[0], parts) if scalable is not False else []
-    if not bounds:
-        # bounded delta (or constant leading key): single local sort is
-        # the right plan, stated by the constant partition key
-        return finish(
-            df.withColumn(
-                "start_offset", F.coalesce(F.sum(toks).over(single), F.lit(0))
-            )
-        )
-
-    first = F.col(order_by[0])
-    bucket = sum((first > F.lit(b)).cast("int") for b in bounds)
-    bucketed = df.withColumn(
-        "_pid", F.when(first.isNull(), F.lit(len(bounds))).otherwise(bucket)
-    )
-    local_w = (
-        Window.partitionBy("_pid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = bucketed.withColumn(
-        "_lstart", F.coalesce(F.sum(toks).over(local_w), F.lit(0))
-    )
-    totals = bucketed.groupBy("_pid").agg(F.sum(toks).alias("_t"))
-    prior = (
-        Window.partitionBy(F.lit(0))
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn("_off", F.coalesce(F.sum("_t").over(prior), F.lit(0)))
-    return finish(
-        local.join(F.broadcast(offsets.select("_pid", "_off")), "_pid")
-        .withColumn("start_offset", F.col("_lstart") + F.col("_off"))
-        .drop("_pid", "_lstart", "_off")
+    return with_start.withColumn(
+        "pack_id", F.expr(f"start_offset div {int(capacity)}")
     )
 
 
@@ -105,7 +61,6 @@ def shuffle_shard(
     key_col: str,
     shard_size: int,
     salt: str = "",
-    scalable: bool | None = None,
     bounds: list | None = None,
 ) -> DataFrame:
     """Deterministic global shuffle + fixed-size training shards.
@@ -131,7 +86,7 @@ def shuffle_shard(
         "_h", F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     ).withColumn("_one", F.lit(1))
     packed = pack_sequences(
-        hashed, "_one", shard_size, ["_h", key_col], scalable, bounds
+        hashed, "_one", shard_size, ["_h", key_col], bounds
     )
     return (
         packed.withColumn("rank", F.col("start_offset"))
@@ -180,7 +135,6 @@ def pack_spans(
     tokens_col: str,
     capacity: int,
     order_by: list[str],
-    scalable: bool | None = None,
     bounds: list | None = None,
 ) -> DataFrame:
     """Per-pack DOCUMENT SPAN manifest — the attention-boundary sidecar
@@ -201,7 +155,7 @@ def pack_spans(
     shipped. All-integer arithmetic. Zero-token documents emit no span.
     """
     with_off = pack_sequences(
-        df, tokens_col, capacity, order_by, scalable=scalable, bounds=bounds
+        df, tokens_col, capacity, order_by, bounds=bounds
     )
     cap = int(capacity)
     n = F.col(tokens_col).cast("long")
@@ -232,7 +186,6 @@ def materialize_packs(
     capacity: int,
     id_col: str = "doc_id",
     ids_col: str = "ids",
-    scalable: bool | None = None,
     bounds: list | None = None,
 ) -> DataFrame:
     """Materialize the actual fixed-``capacity`` training sequences from
@@ -250,7 +203,7 @@ def materialize_packs(
     ``capacity`` ids. Returns (seq_id, n_tokens, ids).
     """
     toks = encoded.withColumn("_n", F.size(ids_col))
-    packed = pack_sequences(toks, "_n", capacity, [id_col], scalable, bounds)
+    packed = pack_sequences(toks, "_n", capacity, [id_col], bounds)
     g = packed.select(
         F.col("start_offset"),
         F.posexplode(ids_col).alias("_p", "_tid"),

@@ -76,7 +76,6 @@ def scd2_merge(
     config: Scd2Config,
     run_date: dt.date,
     order_col: str | None = None,
-    scalable: bool | None = None,
 ) -> Scd2Result:
     """SC1: merge an incoming batch (natural key + tracked + attr columns)
     into an SCD2 dimension. Returns the new dimension table plus lazily
@@ -89,8 +88,7 @@ def scd2_merge(
 
     if current_dim is None or not current_dim.columns:
         new_rows = assign_surrogate_keys(
-            _with_version_cols(batch, run_date), config.sk_col, SEQUENCE_START - 1,
-            nk, scalable=scalable,
+            _with_version_cols(batch, run_date), config.sk_col, SEQUENCE_START - 1, nk
         )
         dim = new_rows.select(
             config.sk_col, *value_cols, "effective_date", "expiry_date", "is_current"
@@ -129,10 +127,7 @@ def scd2_merge(
     updated_keys = to_version.filter(F.col("_action") == "update").select(*nk)
 
     # close old versions of updated keys
-    close_cond = None
-    for k in nk:
-        c = current_dim[k].eqNullSafe(updated_keys[k])
-        close_cond = c if close_cond is None else (close_cond & c)
+    close_cond = null_safe_cond(current_dim, updated_keys, nk)
     is_closing = (
         F.col("is_current")
         & F.coalesce(F.col("_match"), F.lit(False))
@@ -160,7 +155,6 @@ def scd2_merge(
         config.sk_col,
         max_key(current_dim, config.sk_col),
         nk,
-        scalable=scalable,
     ).select(base.columns)
 
     dim = base.unionByName(new_rows)
@@ -184,7 +178,6 @@ def insert_only_merge(
     incoming: DataFrame,
     config: Scd2Config,
     run_date: dt.date,
-    scalable: bool | None = None,
 ) -> Scd2Result:
     """SC2: insert-only dimension (DimLocation) — existing natural keys
     (null-safe composite compare) are skipped, new ones appended as
@@ -206,8 +199,7 @@ def insert_only_merge(
         dim_base = current_dim
 
     new_rows = assign_surrogate_keys(
-        _with_version_cols(fresh, run_date), config.sk_col, start, nk,
-        scalable=scalable,
+        _with_version_cols(fresh, run_date), config.sk_col, start, nk
     ).select(
         config.sk_col, *value_cols, "effective_date", "expiry_date", "is_current"
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jobinsight_data_pipeline_spark.functions.dates import dim_date_frame
@@ -77,25 +77,29 @@ def prepare_dim_company(staging: DataFrame) -> DataFrame:
     )
 
 
+def staging_locations() -> Column:
+    """A staging row's (province, city, district) structs, parsed from its
+    location_pairs, or from its refined ``location`` when it has no pairs
+    (ref src/processing/data_prepare.py:351-430)."""
+    return parse_locations_udf(
+        F.when(
+            F.col("location_pairs").isNotNull() & (F.size("location_pairs") > 0),
+            F.col("location_pairs"),
+        ).otherwise(
+            F.when(
+                F.col("location").isNotNull(), F.array(F.col("location"))
+            ).otherwise(F.array().cast("array<string>"))
+        )
+    )
+
+
 def prepare_dim_location(staging: DataFrame) -> DataFrame:
     """Distinct (province, city, district) tuples parsed from each row's
     location_pairs — plus the reference's guaranteed (NULL,'Unknown',NULL)
-    fallback row (ref src/processing/data_prepare.py:351-430)."""
-    parsed = staging.select(
-        F.explode(
-            parse_locations_udf(
-                F.when(
-                    F.col("location_pairs").isNotNull()
-                    & (F.size("location_pairs") > 0),
-                    F.col("location_pairs"),
-                ).otherwise(
-                    F.when(
-                        F.col("location").isNotNull(), F.array(F.col("location"))
-                    ).otherwise(F.array().cast("array<string>"))
-                )
-            )
-        ).alias("loc")
-    ).select("loc.province", "loc.city", "loc.district")
+    fallback row."""
+    parsed = staging.select(F.explode(staging_locations()).alias("loc")).select(
+        "loc.province", "loc.city", "loc.district"
+    )
     unknown = parsed.sparkSession.createDataFrame(
         [(None, "Unknown", None)], "province string, city string, district string"
     )
@@ -103,18 +107,16 @@ def prepare_dim_location(staging: DataFrame) -> DataFrame:
 
 
 def build_dim_job(
-    current: DataFrame | None, staging: DataFrame, run_date: dt.date,
-    scalable: bool | None = None,
+    current: DataFrame | None, staging: DataFrame, run_date: dt.date
 ) -> Scd2Result:
     return scd2_merge(
         current, prepare_dim_job(staging), DIM_JOB_CONFIG, run_date,
-        order_col="crawled_at", scalable=scalable,
+        order_col="crawled_at",
     )
 
 
 def build_dim_company(
-    current: DataFrame | None, staging: DataFrame, run_date: dt.date,
-    scalable: bool | None = None,
+    current: DataFrame | None, staging: DataFrame, run_date: dt.date
 ) -> Scd2Result:
     return scd2_merge(
         current,
@@ -122,17 +124,14 @@ def build_dim_company(
         DIM_COMPANY_CONFIG,
         run_date,
         order_col="crawled_at",
-        scalable=scalable,
     )
 
 
 def build_dim_location(
-    current: DataFrame | None, staging: DataFrame, run_date: dt.date,
-    scalable: bool | None = None,
+    current: DataFrame | None, staging: DataFrame, run_date: dt.date
 ) -> Scd2Result:
     return insert_only_merge(
-        current, prepare_dim_location(staging), DIM_LOCATION_CONFIG, run_date,
-        scalable=scalable,
+        current, prepare_dim_location(staging), DIM_LOCATION_CONFIG, run_date
     )
 
 

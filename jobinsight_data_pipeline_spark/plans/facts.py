@@ -32,12 +32,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from jobinsight_data_pipeline_spark.functions.location import parse_locations_udf
 from jobinsight_data_pipeline_spark.operators.merge import (
     assign_surrogate_keys,
     dedupe_last_write,
     max_key,
 )
+from jobinsight_data_pipeline_spark.plans.dimensions import staging_locations
 
 MEASURE_COLS = [
     "salary_min",
@@ -51,14 +51,17 @@ MEASURE_COLS = [
 ]
 
 
+def _current_job_keys(dim_job: DataFrame) -> DataFrame:
+    """Broadcast job_id → job_sk over the CURRENT DimJob versions."""
+    return broadcast(dim_job.filter(F.col("is_current")).select("job_id", "job_sk"))
+
+
 def resolve_dim_keys(
     staging: DataFrame, dim_job: DataFrame, dim_company: DataFrame
 ) -> DataFrame:
     """J4: attach job_sk / company_sk via broadcast joins against CURRENT
     dim versions; drop unresolvable rows (P2)."""
-    jobs = broadcast(
-        dim_job.filter(F.col("is_current")).select("job_id", "job_sk")
-    )
+    jobs = _current_job_keys(dim_job)
     companies = broadcast(
         dim_company.filter(F.col("is_current")).select(
             "company_name_standardized", "company_sk"
@@ -101,19 +104,16 @@ def build_fact_batch(
     )
 
 
-def merge_facts(
-    existing: DataFrame | None, incoming: DataFrame, scalable: bool | None = None
-) -> DataFrame:
+def merge_facts(existing: DataFrame | None, incoming: DataFrame) -> DataFrame:
     """SC3: grain-level merge. Matched grains keep fact_id and load_month
     but take all new measures; unmatched grains get new fact_ids
-    (max + row_number)."""
+    (max + 1 + rank in grain order)."""
     grain = ["job_sk", "date_id"]
     incoming = dedupe_last_write(incoming, grain, order_col="crawled_at")
 
     if existing is None or not existing.columns:
         return assign_surrogate_keys(
-            incoming, "fact_id", max_key(None, "fact_id"), grain,
-            scalable=scalable,
+            incoming, "fact_id", max_key(None, "fact_id"), grain
         ).select("fact_id", *incoming.columns)
 
     inc = incoming.select(
@@ -142,8 +142,7 @@ def merge_facts(
 
     fresh = incoming.join(existing.select(grain[0], grain[1]), grain, "left_anti")
     fresh_keyed = assign_surrogate_keys(
-        fresh, "fact_id", max_key(existing, "fact_id"), grain,
-        scalable=scalable,
+        fresh, "fact_id", max_key(existing, "fact_id"), grain
     ).select(existing.columns)
     return updated.unionByName(fresh_keyed)
 
@@ -202,25 +201,9 @@ def build_bridge(
     )
     unknown_sk = unknown_sk_row[0]["location_sk"] if unknown_sk_row else None
 
-    jobs = broadcast(dim_job.filter(F.col("is_current")).select("job_id", "job_sk"))
     job_locs = (
-        staging.join(jobs, "job_id", "inner")
-        .select(
-            "job_sk",
-            F.explode(
-                parse_locations_udf(
-                    F.when(
-                        F.col("location_pairs").isNotNull()
-                        & (F.size("location_pairs") > 0),
-                        F.col("location_pairs"),
-                    ).otherwise(
-                        F.when(
-                            F.col("location").isNotNull(), F.array(F.col("location"))
-                        ).otherwise(F.array().cast("array<string>"))
-                    )
-                )
-            ).alias("loc"),
-        )
+        staging.join(_current_job_keys(dim_job), "job_id", "inner")
+        .select("job_sk", F.explode(staging_locations()).alias("loc"))
         .select("job_sk", "loc.province", "loc.city", "loc.district")
         .dropDuplicates(["job_sk", "province", "city", "district"])
     )

@@ -11,7 +11,6 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from jobinsight_data_pipeline_spark.operators.merge import upsert_by_key
 from jobinsight_data_pipeline_spark.plans import facts as facts_plan
@@ -22,7 +21,10 @@ from jobinsight_data_pipeline_spark.plans.dimensions import (
     build_dim_job,
     build_dim_location,
 )
-from jobinsight_data_pipeline_spark.plans.raw_to_staging import raw_to_staging
+from jobinsight_data_pipeline_spark.plans.raw_to_staging import (
+    incremental_batch,
+    raw_to_staging,
+)
 from jobinsight_data_pipeline_spark.sources.lake import ParquetLake
 
 
@@ -78,22 +80,18 @@ def run_staging_to_dwh(
     staging_full = lake.read(spark, "staging_jobs")
     if staging_full is None:
         return {"status": "empty", "passed": True}
-    cutoff = run_ts - dt.timedelta(days=lookback_days)
-    staging = staging_full.filter(F.col("crawled_at") >= F.lit(cutoff))
+    staging = incremental_batch(staging_full, run_ts, lookback_days)
 
     # --- dimensions
-    # each keyed table is written (materialized) before any reuse, so
-    # the range-partitioned surrogate-key path is safe here — see
-    # operators/merge.assign_surrogate_keys
-    r_job = build_dim_job(lake.read(spark, "dim_job"), staging, run_date, scalable=True)
+    r_job = build_dim_job(lake.read(spark, "dim_job"), staging, run_date)
     lake.write(r_job.dim, "dim_job")
     dim_job = lake.read(spark, "dim_job")
 
-    r_co = build_dim_company(lake.read(spark, "dim_company"), staging, run_date, scalable=True)
+    r_co = build_dim_company(lake.read(spark, "dim_company"), staging, run_date)
     lake.write(r_co.dim, "dim_company")
     dim_company = lake.read(spark, "dim_company")
 
-    r_loc = build_dim_location(lake.read(spark, "dim_location"), staging, run_date, scalable=True)
+    r_loc = build_dim_location(lake.read(spark, "dim_location"), staging, run_date)
     lake.write(r_loc.dim, "dim_location")
     dim_location = lake.read(spark, "dim_location")
 
@@ -112,7 +110,7 @@ def run_staging_to_dwh(
         staging, dim_job, dim_company, run_ts, fanout_days
     )
     merged_fact = facts_plan.merge_facts(
-        lake.read(spark, "fact_job_posting_daily"), incoming, scalable=True
+        lake.read(spark, "fact_job_posting_daily"), incoming
     )
     lake.write(merged_fact, "fact_job_posting_daily", partition_by=["load_month"])
     fact = lake.read(spark, "fact_job_posting_daily")

@@ -88,8 +88,8 @@ def get_spark(
     # WindowExec warns "No Partition Defined" on EVERY partition-less
     # window, with no size threshold. The engine's remaining global
     # windows are delta-bounded by contract (surrogate-key assignment
-    # over a daily batch — see operators/merge.assign_surrogate_keys;
-    # bulk loads route through the bucketed assigner instead), so the
+    # over a daily batch — see operators/merge._ordered_offsets, whose
+    # probe sends bulk loads to the bucketed plan instead), so the
     # warning is noise here: demote that one logger to ERROR. Plan-shape
     # tests (test_plans_physical) still police accidental global sorts.
     try:

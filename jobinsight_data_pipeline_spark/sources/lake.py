@@ -18,8 +18,10 @@ Delta/Iceberg — the plans above it are format-agnostic.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +39,13 @@ class ParquetLake:
 
     def _pointer(self, table: str) -> str:
         return os.path.join(self._table_dir(table), "_CURRENT")
+
+    def _flip(self, table: str, version: str) -> None:
+        """Point ``table`` at ``version`` — an atomic single-file replace."""
+        tmp = self._pointer(table) + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(version)
+        os.replace(tmp, self._pointer(table))
 
     def current_version(self, table: str) -> str | None:
         try:
@@ -90,7 +99,7 @@ class ParquetLake:
             from pyspark.sql.types import StructType
 
             with open(schema_file) as fh:
-                schema = StructType.fromJson(__import__("json").loads(fh.read()))
+                schema = StructType.fromJson(json.loads(fh.read()))
             return spark.read.schema(schema).parquet(p)
         return spark.read.parquet(p)
 
@@ -105,22 +114,17 @@ class ParquetLake:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target)
-        import json as _json
-
         with open(target + ".schema", "w") as fh:
-            fh.write(_json.dumps(df.schema.jsonValue()))
-        tmp = self._pointer(table) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer(table))  # atomic flip
+            fh.write(json.dumps(df.schema.jsonValue()))
+        self._flip(table, version)
         self.vacuum(table)
         return target
 
     # -- retention / restore (S12/S13) --------------------------------------
-    def vacuum(self, table: str) -> None:
+    def _drop_versions(self, table: str, versions: list[str]) -> None:
+        """Delete the given snapshots of ``table``, never the live one."""
         live = self.current_version(table)
-        vs = self.versions(table)
-        for v in vs[: -self.keep_versions]:
+        for v in versions:
             if v != live:
                 vdir = os.path.join(self._table_dir(table), v)
                 shutil.rmtree(vdir, ignore_errors=True)
@@ -128,6 +132,9 @@ class ParquetLake:
                     os.remove(vdir + ".schema")
                 except FileNotFoundError:
                     pass
+
+    def vacuum(self, table: str) -> None:
+        self._drop_versions(table, self.versions(table)[: -self.keep_versions])
 
     def restore(self, table: str, version: str | None = None) -> str:
         """Roll the pointer back (reference: restore DB file backup on ETL
@@ -141,10 +148,7 @@ class ParquetLake:
             version = older[-1]
         if version not in vs:
             raise ValueError(f"unknown version {version} for {table}")
-        tmp = self._pointer(table) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer(table))
+        self._flip(table, version)
         return version
 
 
@@ -272,10 +276,7 @@ def compact_parquet(
             )
         else:
             part = keyed.repartitionByRange(F.col("zkey"))
-        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        old = spark.conf.get(key, None)
-        spark.conf.set(key, str(target_mb * 1024 * 1024))
-        try:
+        with _advisory_size(spark, target_mb):
             writer = (
                 part.sortWithinPartitions("zkey")
                 .drop("zkey")
@@ -284,11 +285,6 @@ def compact_parquet(
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(dst_path)
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
     else:
         write_sized(
             src, dst_path, target_mb=target_mb, partition_by=partition_by
@@ -300,6 +296,22 @@ def compact_parquet(
         "rows_before": before["n"],
         "rows_after": after["n"],
     }
+
+
+@contextmanager
+def _advisory_size(spark: SparkSession, target_mb: int):
+    """Set AQE's advisory partition size for the block, then restore the
+    previous value — no session-global side effect."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(target_mb * 1024 * 1024))
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def write_sized(
@@ -317,22 +329,13 @@ def write_sized(
     size at runtime (skew-splitting included), instead of the classic
     estimate-rows-then-repartition dance that needs a count() of the
     full input. The advisory conf is saved and restored around the
-    write — no session-global side effect (the r3 Arrow-batch lesson).
+    write.
     """
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, str(target_mb * 1024 * 1024))
-    try:
+    with _advisory_size(df.sparkSession, target_mb):
         writer = df.hint("rebalance").write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def forget_keys(
@@ -375,15 +378,7 @@ def forget_keys(
         )
         lake.write(cleaned, table)
         if purge_history:
-            live = lake.current_version(table)
-            for v in lake.versions(table):
-                if v != live:
-                    vdir = os.path.join(lake._table_dir(table), v)
-                    shutil.rmtree(vdir, ignore_errors=True)
-                    try:
-                        os.remove(vdir + ".schema")
-                    except FileNotFoundError:
-                        pass
+            lake._drop_versions(table, lake.versions(table))
         after = lake.read(spark, table).count()
         rows.append((table, before, before - after, after))
     return spark.createDataFrame(

@@ -100,17 +100,6 @@ def windowed_event_counts(
     )
 
 
-def clamp_late_events(
-    df: DataFrame, run_date: dt.date, past_days: int = 90, future_days: int = 180,
-    ts_col: str = "date_id",
-) -> DataFrame:
-    """The reference's date clamp as an allowed-lateness filter."""
-    lo = run_date - dt.timedelta(days=past_days)
-    hi = run_date + dt.timedelta(days=future_days)
-    c = F.col(ts_col).cast("date")
-    return df.filter((c >= F.lit(lo)) & (c <= F.lit(hi)))
-
-
 def stream_dedup(
     spark: SparkSession,
     raw_dir: str,

@@ -63,10 +63,7 @@ def test_shingles_shape(docs):
 
 def test_ngram_jaccard_exact_and_prefix_agree(docs):
     full = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.3)
-    pref = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.3, prefix_filter=True)
     a = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in full.collect()}
-    b = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in pref.collect()}
-    assert a == b  # prefix filtering is lossless
     assert (1, 2, 1.0) in a  # exact dup: jaccard 1
     pairs = {(x, y) for x, y, _ in a}
     assert (1, 3) in pairs and (2, 3) in pairs  # near dups found
@@ -466,7 +463,7 @@ def test_pack_sequences_known_answers_and_path_equivalence(spark):
     # capacity 1000: offsets 0,100,1000,1030,2030 -> packs 0,0,1,1,2
     expect = {1: (0, 0), 2: (100, 0), 3: (1000, 1), 4: (1030, 1), 5: (2030, 2)}
 
-    delta = pack_sequences(df, "n_tokens", 1000, ["doc_id"], scalable=False)
+    delta = pack_sequences(df, "n_tokens", 1000, ["doc_id"], bounds=[])
     got = {r["doc_id"]: (r["start_offset"], r["pack_id"]) for r in delta.collect()}
     assert got == expect
 
@@ -753,7 +750,7 @@ def test_shuffle_shard_permutation_and_path_equivalence(spark):
     from jobinsight_data_pipeline_spark.operators.packing import shuffle_shard
 
     df = spark.createDataFrame([(i,) for i in range(257)], "k: long")
-    out = shuffle_shard(df, "k", shard_size=32, scalable=False).cache()
+    out = shuffle_shard(df, "k", shard_size=32, bounds=[]).cache()
     ranks = sorted(r["rank"] for r in out.collect())
     assert ranks == list(range(257))
     sizes = {
@@ -1199,7 +1196,7 @@ def test_materialize_packs_reassembles_stream(spark):
     expect_stream = [x for _, ids in rows for x in ids]
 
     out = {r["seq_id"]: r for r in
-           materialize_packs(df, capacity=16, scalable=False).collect()}
+           materialize_packs(df, capacity=16, bounds=[]).collect()}
     got_stream = []
     for s in sorted(out):
         r = out[s]
@@ -1231,7 +1228,7 @@ def test_pack_spans_known_answers_and_consistency(spark):
     got = {
         (r["seq_id"], r["doc_id"]): (r["start_in_pack"], r["span_len"])
         for r in pack_spans(
-            sized, "n_tokens", 256, ["doc_id"], scalable=False
+            sized, "n_tokens", 256, ["doc_id"], bounds=[]
         ).collect()
     }
     assert got == {
@@ -1246,10 +1243,10 @@ def test_pack_spans_known_answers_and_consistency(spark):
     df = spark.createDataFrame(rows, "doc_id: long, ids: array<int>")
     by_pack = {
         r["seq_id"]: r["n_tokens"]
-        for r in materialize_packs(df, capacity=16, scalable=False).collect()
+        for r in materialize_packs(df, capacity=16, bounds=[]).collect()
     }
     sized2 = df.selectExpr("doc_id", "CAST(size(ids) AS LONG) AS n_tokens")
-    spans = pack_spans(sized2, "n_tokens", 16, ["doc_id"], scalable=False)
+    spans = pack_spans(sized2, "n_tokens", 16, ["doc_id"], bounds=[])
     sums = {
         r["seq_id"]: r["total"]
         for r in spans.groupBy("seq_id")
@@ -1528,16 +1525,6 @@ def test_ngram_freq_cap_subset(boiler_corpus):
         ).collect()
     }
     assert default == exact
-    # cap composes with the PPJoin prefix path too (subset holds)
-    capped_pref = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            boiler_corpus, "doc_id", "text", threshold=0.15,
-            prefix_filter=True, max_shingle_freq=3,
-        ).collect()
-    }
-    assert set(capped_pref) <= set(exact)
-    assert (1, 2) in capped_pref
 
 
 def test_ngram_containment_cap_subset(spark, boiler_corpus):
@@ -2161,31 +2148,6 @@ def test_ann_probe_curves_non_degenerate_on_clustered_corpus(spark):
         assert mean[8] >= 1.5 * mean[1], (fn.__name__, mean)
         for p, v in mean.items():
             assert 0 < v < 1_000_000, (fn.__name__, p, v)
-
-
-def test_ngram_cap_distributed_form_identical(spark):
-    """The straggler-bounded groupBy+broadcast-anti cap must produce the
-    EXACT same pair set as the default count-over-window cap, with a
-    biting frequency threshold."""
-    from jobinsight_data_pipeline_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kw = dict(threshold=0.5, max_shingle_freq=20)
-    a = {
-        tuple(r)
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", distribute_cap=False, **kw
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", distribute_cap=True, **kw
-        ).collect()
-    }
-    assert a == b and a  # identical and non-degenerate
 
 
 def test_lsh_params_autotune_formula():

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from jobinsight_data_pipeline_spark.functions.location import (
@@ -138,49 +139,39 @@ def test_scd2_random_batches(spark):
             assert r["expiry_date"] is not None
 
 
-def test_surrogate_keys_scalable_matches_global(spark):
-    """The range-partitioned two-phase numbering must assign EXACTLY the
-    keys the single-partition global row_number assigns — including with
-    null keys, skewed duplicates in non-key columns, and a delta larger
-    than one partition."""
-    from jobinsight_data_pipeline_spark.operators.merge import assign_surrogate_keys
+@pytest.mark.parametrize(
+    "shape, bucketed",
+    [("below_sample", False), ("above_sample", True), ("constant_leading", True)],
+)
+def test_surrogate_keys_match_sorted_expectation(spark, shape, bucketed):
+    """Keys equal a Python sort of (nk, u) — nulls last, dense from 10000
+    — whichever plan the probe picks: below the probe's sample size (the
+    delta plan), above it (the bucketed plan, null leading keys land in
+    the last bucket), and a constant leading key (every split point
+    degenerates to one value: one dense bucket + the NULLs bucket)."""
+    from jobinsight_data_pipeline_spark.operators.merge import (
+        _SAMPLE_PER_PART,
+        assign_surrogate_keys,
+    )
     from pyspark.sql import functions as F
 
-    df = (
-        spark.range(10_000)
-        .select(
-            F.when(F.col("id") % 997 != 0, F.format_string("k%07d", "id")).alias("nk"),
-            F.col("id").alias("u"),
-        )
+    k = _SAMPLE_PER_PART * spark.sparkContext.defaultParallelism
+    n = k // 2 if shape == "below_sample" else 3 * k
+    nk = (
+        F.lit("same")
+        if shape == "constant_leading"
+        else F.format_string("k%07d", (F.col("id") * 7919) % n)
     )
-    # (nk, u) is unique — the documented contract for reproducible keys;
-    # nulls in the leading key exercise asc_nulls_last on both paths
-    a = assign_surrogate_keys(df, "sk", 9999, ["nk", "u"], scalable=False)
-    b = assign_surrogate_keys(df, "sk", 9999, ["nk", "u"], scalable=True)
-    rows_a = {(r["nk"], r["u"]): r["sk"] for r in a.collect()}
-    rows_b = {(r["nk"], r["u"]): r["sk"] for r in b.collect()}
-    assert len(rows_a) == len(rows_b) == 10_000
-    assert rows_a == rows_b
-    sks = sorted(rows_b.values())
-    assert sks[0] == 10_000 and sks[-1] == 9999 + len(sks)  # dense, seeded
-
-
-def test_surrogate_keys_scalable_constant_leading_key(spark):
-    """A constant leading order column degenerates every split point to
-    one value — the bucketed path must still produce the global keys
-    (single dense bucket + NULLs bucket), identical to the delta plan."""
-    from jobinsight_data_pipeline_spark.operators.merge import assign_surrogate_keys
-    from pyspark.sql import functions as F
-
-    df = spark.range(9_000).select(
-        F.when(F.col("id") % 1000 != 0, F.lit("same")).alias("nk"),
-        F.col("id").alias("u"),
+    # (nk, u) is unique — the documented contract for reproducible keys
+    df = spark.range(n).select(
+        F.when(F.col("id") % 97 != 0, nk).alias("nk"), F.col("id").alias("u")
     )
-    a = assign_surrogate_keys(df, "sk", 9999, ["nk", "u"], scalable=False)
-    b = assign_surrogate_keys(df, "sk", 9999, ["nk", "u"], scalable=True)
-    rows_a = {(r["nk"], r["u"]): r["sk"] for r in a.collect()}
-    rows_b = {(r["nk"], r["u"]): r["sk"] for r in b.collect()}
-    assert rows_a == rows_b and len(rows_b) == 9_000
+    out = assign_surrogate_keys(df, "sk", 9999, ["nk", "u"])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert ("_pid" in plan) == bucketed
+    got = {(r["nk"], r["u"]): r["sk"] for r in out.collect()}
+    order = sorted(got, key=lambda t: (t[0] is None, t[0] or "", t[1]))
+    assert got == {t: 10_000 + i for i, t in enumerate(order)}
 
 
 def test_connected_components_random_graphs_match_union_find(spark):
@@ -251,7 +242,7 @@ def test_pack_sequences_matches_sequential_cumsum(spark):
         want[i] = (run, run // 1024)
         run += tok
 
-    for kwargs in ({"scalable": False}, {"bounds": [50, 120, 170]}):
+    for kwargs in ({"bounds": []}, {"bounds": [50, 120, 170]}):
         got = {
             r["doc_id"]: (r["start_offset"], r["pack_id"])
             for r in pack_sequences(df, "n_tokens", 1024, ["doc_id"], **kwargs).collect()
