@@ -107,6 +107,57 @@ def scratch_dir(prefix: str, name: str | None = None) -> str:
     return d
 
 
+# name -> (applicationId, arg, value): the one session-scoped memo.
+_MEMO: dict[str, tuple[str, object, object]] = {}
+
+
+def _memo_frames(value) -> list[DataFrame]:
+    items = value if isinstance(value, (list, tuple)) else [value]
+    return [v for v in items if isinstance(v, DataFrame)]
+
+
+def memo(spark: SparkSession, name: str, arg, build: Callable[[], object]):
+    """Return ``build()``'s value for ``(name, arg)``, building it once
+    per application.
+
+    Gate state (fitted models, cached warehouses, checkpointed corpora)
+    is deterministic in ``arg``, so reuse is semantically free. Each
+    ``name`` keeps one generation: a new ``arg`` evicts the old value
+    and unpersists any DataFrame in it (a value may be a DataFrame or a
+    list/tuple holding some). A new ``applicationId`` drops every entry
+    untouched — the old context, and its storage, are gone."""
+    app = spark.sparkContext.applicationId
+    if any(a != app for a, _, _ in _MEMO.values()):
+        _MEMO.clear()
+    hit = _MEMO.get(name)
+    if hit is not None:
+        if hit[1] == arg:
+            return hit[2]
+        del _MEMO[name]
+        for df in _memo_frames(hit[2]):
+            df.unpersist()
+    value = build()
+    _MEMO[name] = (app, arg, value)
+    return value
+
+
+def release(spark: SparkSession) -> None:
+    """Drop every memoized value, freeing its storage now: cached
+    DataFrames are unpersisted and localCheckpointed ones released.
+    Frames handed out by earlier calls must not be used afterwards."""
+    from jobinsight_data_pipeline_spark.operators.components import (
+        _free_local_checkpoint,
+    )
+
+    app = spark.sparkContext.applicationId
+    for a, _, value in _MEMO.values():
+        if a == app:
+            for df in _memo_frames(value):
+                df.unpersist()
+                _free_local_checkpoint(df)
+    _MEMO.clear()
+
+
 def load(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     """Read the requested testdata tables and register them as temp views
     (so shared portable-SQL input fragments can run verbatim)."""

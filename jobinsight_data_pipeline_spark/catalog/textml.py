@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jobinsight_data_pipeline_spark.catalog import load
+from jobinsight_data_pipeline_spark.catalog import load, memo
 from jobinsight_data_pipeline_spark.operators.dedup import (
     exact_dedup,
     md5_token_hash60,
@@ -3470,28 +3470,19 @@ QUALIFY rank <= 25
 """
 
 
-_WORDPIECE_VOCAB_CACHE: dict[tuple[int, str], dict] = {}
-# streamed-state twin: (merged word table localCheckpoint, vocab) per
-# (session, stream scratch dir) — see q_stream_wordpiece
-_STREAM_WP_CACHE: dict[tuple[int, str], tuple] = {}
-
-
 def _wordpiece_vocab(spark: SparkSession, sf_dir: str) -> dict:
-    """Memoized per (session, sf_dir): the vocab derivation runs five
-    model-sized collects — once per session, not once per gate call
-    (the _KMEANS_FIT_CACHE discipline)."""
+    """Memoized per sf_dir: the vocab derivation runs five model-sized
+    collects — once per session, not once per gate call."""
     from jobinsight_data_pipeline_spark.operators.wordpiece import (
         build_wordpiece_vocab,
         corpus_words,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _WORDPIECE_VOCAB_CACHE:
+    def build() -> dict:
         t = load(spark, sf_dir, "documents")
-        _WORDPIECE_VOCAB_CACHE[key] = build_wordpiece_vocab(
-            corpus_words(t["documents"])
-        )
-    return _WORDPIECE_VOCAB_CACHE[key]
+        return build_wordpiece_vocab(corpus_words(t["documents"]))
+
+    return memo(spark, "wordpiece_vocab", sf_dir, build)
 
 
 def _wordpiece_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3653,17 +3644,16 @@ def q_stream_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(done, "w") as fh:
             fh.write("ok")
 
-    # memoize the merged-state word table + derived vocab per
-    # (session, stream scratch dir) — the five model-sized vocab
-    # collects otherwise re-run on every gate invocation, unlike the
-    # batch twin's _WORDPIECE_VOCAB_CACHE (r9 ADVICE; suite cost only)
-    key = (id(spark), base)
-    if key not in _STREAM_WP_CACHE:
+    # memoize the merged-state word table (localCheckpoint) + derived
+    # vocab per stream scratch dir — the five model-sized vocab collects
+    # otherwise re-run on every gate invocation (r9 ADVICE; suite cost)
+    def build() -> tuple:
         words = read_word_count_state(
             spark, f"{base}/state"
         ).localCheckpoint(eager=True)
-        _STREAM_WP_CACHE[key] = (words, build_wordpiece_vocab(words))
-    words, vocab = _STREAM_WP_CACHE[key]
+        return words, build_wordpiece_vocab(words)
+
+    words, vocab = memo(spark, "stream_wordpiece", base, build)
     enc = encode_distinct_words(words, vocab)
     return enc.select(
         "w",
@@ -3887,28 +3877,25 @@ _PCA_ROUNDS = 4
 _PCA_SCALE = 10**6
 _PCA_DIM = 64
 _PCA_TOPN = 20
-_PCA_EIG_CACHE: dict[tuple[int, str], list[int]] = {}
 
 
 def _pca_eigvec(spark: SparkSession, sf_dir: str) -> list[int]:
-    """Memoized top-eigenvector fit per (session, sf_dir): one Gram pass
-    over the corpus (model-sized collect) + driver-side exact-integer
-    power iteration (operators/clustering.py)."""
+    """Memoized top-eigenvector fit per sf_dir: one Gram pass over the
+    corpus (model-sized collect) + driver-side exact-integer power
+    iteration (operators/clustering.py)."""
     from jobinsight_data_pipeline_spark.operators.clustering import (
         gram_matrix,
         power_iteration_int,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _PCA_EIG_CACHE:
+    def build() -> list[int]:
         t = load(spark, sf_dir, "embeddings")
         g = gram_matrix(
             t["embeddings"], "embedding", dim=_PCA_DIM, scale=_PCA_SCALE
         )
-        _PCA_EIG_CACHE[key] = power_iteration_int(
-            g, rounds=_PCA_ROUNDS, scale=_PCA_SCALE
-        )
-    return _PCA_EIG_CACHE[key]
+        return power_iteration_int(g, rounds=_PCA_ROUNDS, scale=_PCA_SCALE)
+
+    return memo(spark, "pca_eigvec", sf_dir, build)
 
 
 def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4012,24 +3999,23 @@ _PQT_K = 4
 _PQT_ITERS = 2
 _PQT_DIM = 64
 _PQT_SCALE = 10**6
-_PQT_CACHE: dict[tuple[int, str], list] = {}
 
 
 def _pq_books(spark: SparkSession, sf_dir: str) -> list:
-    """Memoized trained-PQ codebooks per (session, sf_dir)."""
+    """Memoized trained-PQ codebooks per sf_dir."""
     from jobinsight_data_pipeline_spark.operators.clustering import (
         train_pq_codebooks_quantized,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _PQT_CACHE:
+    def build() -> list:
         t = load(spark, sf_dir, "embeddings")
-        _PQT_CACHE[key] = train_pq_codebooks_quantized(
+        return train_pq_codebooks_quantized(
             t["embeddings"], "embedding", "vec_id",
             m=_PQT_M, k=_PQT_K, iterations=_PQT_ITERS,
             dim=_PQT_DIM, scale=_PQT_SCALE,
         )
-    return _PQT_CACHE[key]
+
+    return memo(spark, "pq_books", sf_dir, build)
 
 
 def q_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4287,29 +4273,26 @@ O_PQ_TRAINED_TOPK = _PQT_CTE_PREFIX + _pq_topk_select()
 
 
 _PCA_DOWN = 10**13
-_PCA_EIG2_CACHE: dict[tuple[int, str], list[int]] = {}
 
 
 def _pca_eigvec2(spark: SparkSession, sf_dir: str) -> list[int]:
-    """Memoized second component per (session, sf_dir): one more Gram
-    pass + integer deflation + power iteration."""
+    """Memoized second component per sf_dir: one more Gram pass +
+    integer deflation + power iteration."""
     from jobinsight_data_pipeline_spark.operators.clustering import (
         deflate_gram_int,
         gram_matrix,
         power_iteration_int,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _PCA_EIG2_CACHE:
+    def build() -> list[int]:
         t = load(spark, sf_dir, "embeddings")
         g = gram_matrix(
             t["embeddings"], "embedding", dim=_PCA_DIM, scale=_PCA_SCALE
         )
         g2 = deflate_gram_int(g, _pca_eigvec(spark, sf_dir), down=_PCA_DOWN)
-        _PCA_EIG2_CACHE[key] = power_iteration_int(
-            g2, rounds=_PCA_ROUNDS, scale=_PCA_SCALE
-        )
-    return _PCA_EIG2_CACHE[key]
+        return power_iteration_int(g2, rounds=_PCA_ROUNDS, scale=_PCA_SCALE)
+
+    return memo(spark, "pca_eigvec2", sf_dir, build)
 
 
 def q_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5506,28 +5489,22 @@ def _cemb_res_train_cte() -> str:
     )
 
 
-_CEVB_CACHE: dict[tuple[int, str], list] = {}
-_CEVRB_CACHE: dict[tuple[int, str], list] = {}
-
-
 def _cemb_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """Memoized eval-shape PQ books trained on the clustered corpus
-    (floats, int/10⁶) per (session, sf_dir)."""
+    (floats, int/10⁶) per sf_dir."""
     from jobinsight_data_pipeline_spark.operators.clustering import (
         train_pq_codebooks_quantized,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _CEVB_CACHE:
+    def build() -> list[list[list[float]]]:
         ints = train_pq_codebooks_quantized(
             _clustered_emb(spark, sf_dir), "embedding", "vec_id",
             m=_CEV_M, k=_CEV_KC, iterations=_CEV_ITERS,
             dim=64, scale=_CEV_SCALE,
         )
-        _CEVB_CACHE[key] = [
-            [[x / _CEV_SCALE for x in c] for c in b] for b in ints
-        ]
-    return _CEVB_CACHE[key]
+        return [[[x / _CEV_SCALE for x in c] for c in b] for b in ints]
+
+    return memo(spark, "cemb_books", sf_dir, build)
 
 
 def _cemb_res_books(
@@ -5542,18 +5519,16 @@ def _cemb_res_books(
         unit_centroids,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _CEVRB_CACHE:
+    def build() -> list[list[list[float]]]:
         ints = train_pq_codebooks_residual(
             _clustered_emb(spark, sf_dir),
             unit_centroids(64, IVFPQ_LISTS, seed=11),
             m=_CEV_M, k=_CEV_KC, iterations=_CEV_ITERS,
             dim=64, scale=_CEV_SCALE,
         )
-        _CEVRB_CACHE[key] = [
-            [[x / _CEV_SCALE for x in c] for c in b] for b in ints
-        ]
-    return _CEVRB_CACHE[key]
+        return [[[x / _CEV_SCALE for x in c] for c in b] for b in ints]
+
+    return memo(spark, "cemb_res_books", sf_dir, build)
 
 
 def _cluster_centers() -> list[list[float]]:
@@ -5564,18 +5539,15 @@ def _cluster_centers() -> list[list[float]]:
     return unit_centroids(64, _CLUSTER_N, seed=_CLUSTER_SEED)
 
 
-_CEMB_FRAME_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _clustered_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The clustered eval corpus, materialized ONCE per (session,
-    sf_dir): eight call sites (both book trainers, the index build, and
-    the four eval gates' query/qrel sides) consume this frame, and each
-    of their jobs re-ran the three interpreted-HOF projections of
-    `clustered_embeddings` before this was pinned (r12 optimization —
-    the `_KMEANS_FIT_CACHE` discipline applied to a DataFrame: widened
-    for the HOF folds, eager localCheckpoint, never freed — the
-    vectors are corpus-sized blocks every later gate reuses)."""
+    """The clustered eval corpus, materialized ONCE per sf_dir: eight
+    call sites (both book trainers, the index build, and the four eval
+    gates' query/qrel sides) consume this frame, and each of their jobs
+    re-ran the three interpreted-HOF projections of
+    `clustered_embeddings` before this was pinned (r12 optimization:
+    widened for the HOF folds, eager localCheckpoint, held by the memo
+    until `release` — the vectors are corpus-sized blocks every later
+    gate reuses)."""
     from jobinsight_data_pipeline_spark.operators.parallelism import (
         widen_for_cpu,
     )
@@ -5583,15 +5555,15 @@ def _clustered_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         clustered_embeddings,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _CEMB_FRAME_CACHE:
+    def build() -> DataFrame:
         t = load(spark, sf_dir, "embeddings")
-        _CEMB_FRAME_CACHE[key] = widen_for_cpu(
+        return widen_for_cpu(
             clustered_embeddings(
                 t["embeddings"], _cluster_centers(), lam=_CLUSTER_LAM
             )
         ).localCheckpoint(eager=True)
-    return _CEMB_FRAME_CACHE[key]
+
+    return memo(spark, "clustered_emb", sf_dir, build)
 
 
 def _cemb_cte() -> str:
@@ -6305,9 +6277,6 @@ def q_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same probe pick, tie rules, and fold orders as the raw route —
     only the encoded space changes — so the oracle replays the whole
     composition bit-for-bit (the `ivf_pq_serve_many` pattern)."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
         ivf_pq_topk_many,
@@ -6317,9 +6286,7 @@ def q_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "embeddings")
     emb = t["embeddings"]
     cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
-    index = build_ivf_pq_index(
-        widen_for_cpu(emb), cents, _pq_cb(), residual=True
-    )
+    index = build_ivf_pq_index(emb, cents, _pq_cb(), residual=True)
     queries = (
         emb.filter(F.col("vec_id").isin(*IVFPQ_MANY_QIDS))
         .select(F.col("vec_id").alias("query_id"), "embedding")
@@ -6360,9 +6327,6 @@ def q_ann_recall_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     meaningfully."""
     from pyspark.sql import Window
 
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.ranking import (
         retrieval_metrics,
     )
@@ -6376,9 +6340,7 @@ def q_ann_recall_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _clustered_emb(spark, sf_dir)
     cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
     books = _cemb_res_books(spark, sf_dir)
-    index = build_ivf_pq_index(
-        widen_for_cpu(emb), cents, books, residual=True
-    )
+    index = build_ivf_pq_index(emb, cents, books, residual=True)
     queries = (
         emb.filter(F.col("vec_id").isin(*_CEV_QIDS))
         .select(F.col("vec_id").alias("query_id"), "embedding")
@@ -6434,9 +6396,6 @@ def q_ann_probe_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     two curves rank the encodings head-to-head."""
     from pyspark.sql import Window
 
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
         cosine_topk,
@@ -6448,7 +6407,7 @@ def q_ann_probe_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
     books = _cemb_res_books(spark, sf_dir)
     index = build_ivf_pq_index(
-        widen_for_cpu(emb), cents, books, residual=True
+        emb, cents, books, residual=True
     ).localCheckpoint(eager=True)
     queries = (
         emb.filter(F.col("vec_id").isin(*_CEV_QIDS))
@@ -7070,24 +7029,16 @@ def q_bpe_memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: BPE trainer gate: merges learned on the real corpus per round
 BPE_LEARN_ROUNDS = 8
 
-#: per-(session, sf_dir) memo for the eager trainer gate — deterministic
-#: output, so sweeps pay the 8-round driver loop once
-_BPE_LEARN_CACHE: dict = {}
-
 
 def _learned_merges(spark: SparkSession, sf_dir: str) -> list:
     """Train (or reuse) the 8-round learned merges table for this
-    (session, sf_dir) — deterministic, so sweeps pay the driver loop
-    once (the done-sentinel discipline, in-memory form)."""
+    sf_dir — deterministic, so sweeps pay the driver loop once."""
     from jobinsight_data_pipeline_spark.operators.bpe import learn_bpe_merges
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    learned = _BPE_LEARN_CACHE.get(key)
-    if learned is None:
-        t = load(spark, sf_dir, "documents")
-        learned = learn_bpe_merges(t["documents"], n_merges=BPE_LEARN_ROUNDS)
-        _BPE_LEARN_CACHE[key] = learned
-    return learned
+    return memo(spark, "learned_merges", sf_dir, lambda: learn_bpe_merges(
+        load(spark, sf_dir, "documents")["documents"],
+        n_merges=BPE_LEARN_ROUNDS,
+    ))
 
 
 def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7175,33 +7126,24 @@ UNIGRAM_SEED_K = 80
 UNIGRAM_VOCAB_K = 40
 UNIGRAM_PMAX = 4
 
-#: per-(session, sf_dir) memo for the eager trainer — deterministic
-#: output, so sweeps pay the EM loop once (the _learned_merges pattern)
-_UNIGRAM_CACHE: dict = {}
-
 
 def _unigram_model(spark: SparkSession, sf_dir: str) -> list:
-    """Train (or reuse) the unigram-LM piece model for this
-    (session, sf_dir): ``[(piece, cnt, piece_id), …]`` in id order."""
+    """Train (or reuse) the unigram-LM piece model for this sf_dir —
+    deterministic, so sweeps pay the EM loop once:
+    ``[(piece, cnt, piece_id), …]`` in id order."""
     from jobinsight_data_pipeline_spark.operators.unigram import (
         unigram_train,
         words_with_freq,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _UNIGRAM_CACHE.get(key)
-    if model is None:
-        t = load(spark, sf_dir, "documents")
-        model = unigram_train(
-            spark,
-            words_with_freq(t["documents"]),
-            rounds=UNIGRAM_ROUNDS,
-            seed_k=UNIGRAM_SEED_K,
-            vocab_k=UNIGRAM_VOCAB_K,
-            pmax=UNIGRAM_PMAX,
-        )
-        _UNIGRAM_CACHE[key] = model
-    return model
+    return memo(spark, "unigram_model", sf_dir, lambda: unigram_train(
+        spark,
+        words_with_freq(load(spark, sf_dir, "documents")["documents"]),
+        rounds=UNIGRAM_ROUNDS,
+        seed_k=UNIGRAM_SEED_K,
+        vocab_k=UNIGRAM_VOCAB_K,
+        pmax=UNIGRAM_PMAX,
+    ))
 
 
 def q_unigram_tok_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7455,23 +7397,18 @@ FROM documents d LEFT JOIN agg a USING (doc_id)"""
     )
 
 
-#: per-(session, sf_dir) memo for the day-1-trained unigram model (the
-#: streaming-encode gate's frozen artifact)
-_UNIGRAM_D1_CACHE: dict = {}
-
-
 def _unigram_d1_model(spark: SparkSession, sf_dir: str) -> list:
+    """The day-1-trained unigram model (the streaming-encode gate's
+    frozen artifact), memoized per sf_dir."""
     from jobinsight_data_pipeline_spark.operators.unigram import (
         unigram_train,
         words_with_freq,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _UNIGRAM_D1_CACHE.get(key)
-    if model is None:
+    def build() -> list:
         t = load(spark, sf_dir, "documents")
         day1 = t["documents"].filter(F.col("doc_id") < INCR_SPLIT)
-        model = unigram_train(
+        return unigram_train(
             spark,
             words_with_freq(day1),
             rounds=UNIGRAM_ROUNDS,
@@ -7479,8 +7416,8 @@ def _unigram_d1_model(spark: SparkSession, sf_dir: str) -> list:
             vocab_k=UNIGRAM_VOCAB_K,
             pmax=UNIGRAM_PMAX,
         )
-        _UNIGRAM_D1_CACHE[key] = model
-    return model
+
+    return memo(spark, "unigram_d1_model", sf_dir, build)
 
 
 def q_stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13746,24 +13683,22 @@ _KMEANS_K = 8
 _KMEANS_ITERS = 4
 _KMEANS_SCALE = 10**6
 
-#: per-(session, sf_dir) memo of the fitted centroid matrix — both
-#: kmeans gates replay the same fit; the model is k*dim ints (tiny)
-_KMEANS_FIT_CACHE: dict[tuple[int, str], list[list[int]]] = {}
-
 
 def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
+    """The fitted centroid matrix, memoized per sf_dir — both kmeans
+    gates replay the same fit; the model is k*dim ints (tiny)."""
     from jobinsight_data_pipeline_spark.operators.clustering import (
         kmeans_fit_quantized,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _KMEANS_FIT_CACHE:
+    def build() -> list[list[int]]:
         t = load(spark, sf_dir, "embeddings")
-        _KMEANS_FIT_CACHE[key] = kmeans_fit_quantized(
+        return kmeans_fit_quantized(
             t["embeddings"], "embedding", "vec_id",
             k=_KMEANS_K, iterations=_KMEANS_ITERS, scale=_KMEANS_SCALE,
         )
-    return _KMEANS_FIT_CACHE[key]
+
+    return memo(spark, "kmeans_centroids", sf_dir, build)
 
 
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13945,14 +13880,13 @@ O_KMEANS_FIT = _kmeans_oracle_sql(
 
 
 _PQRT_ITERS = 2
-_PQRT_CACHE: dict[tuple[int, str], list] = {}
 
 
 def _pqr_trained_books(
     spark: SparkSession, sf_dir: str
 ) -> list[list[list[float]]]:
     """Memoized residual-trained PQ codebooks (floats, int/10⁶ — the
-    engine-portable representation) per (session, sf_dir): per-subspace
+    engine-portable representation) per sf_dir: per-subspace
     Lloyd's over the ENCODE path's residuals ``v − centroid[cell]`` of
     the memoized fitted coarse quantizer
     (operators/clustering.train_pq_codebooks_residual — the third leg
@@ -13961,8 +13895,7 @@ def _pqr_trained_books(
         train_pq_codebooks_residual,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _PQRT_CACHE:
+    def build() -> list[list[list[float]]]:
         t = load(spark, sf_dir, "embeddings")
         fitted = _kmeans_centroids(spark, sf_dir)
         cents = [[x / _KMEANS_SCALE for x in row] for row in fitted]
@@ -13970,10 +13903,11 @@ def _pqr_trained_books(
             t["embeddings"], cents, m=PQ_M, k=PQ_K,
             iterations=_PQRT_ITERS, dim=64, scale=_KMEANS_SCALE,
         )
-        _PQRT_CACHE[key] = [
+        return [
             [[x / _KMEANS_SCALE for x in c] for c in book] for book in ints
         ]
-    return _PQRT_CACHE[key]
+
+    return memo(spark, "pqr_trained_books", sf_dir, build)
 
 
 def _pqrt_train_cte() -> str:
@@ -14180,26 +14114,23 @@ FROM errs"""
 O_PQ_RESIDUAL_ERROR = _pq_residual_error_oracle()
 
 
-_KMEANS_PP_CACHE: dict[tuple[int, str], list[list[int]]] = {}
-
-
 def _kmeans_pp_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     from jobinsight_data_pipeline_spark.operators.clustering import (
         kmeans_pp_fit_quantized,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _KMEANS_PP_CACHE:
+    def build() -> list[list[int]]:
         t = load(spark, sf_dir, "embeddings")
         # seeds + fit over ONE shared checkpointed quantize pass —
         # bit-identical to the separate kmeans_pp_seeds /
         # kmeans_fit_quantized calls (the oracle replays the same
         # lineage), one prepare pass cheaper
-        _KMEANS_PP_CACHE[key] = kmeans_pp_fit_quantized(
+        return kmeans_pp_fit_quantized(
             t["embeddings"], "embedding", "vec_id",
             k=_KMEANS_K, iterations=_KMEANS_ITERS, scale=_KMEANS_SCALE,
         )
-    return _KMEANS_PP_CACHE[key]
+
+    return memo(spark, "kmeans_pp_centroids", sf_dir, build)
 
 
 def q_kmeans_pp_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14413,17 +14344,11 @@ def q_ivf_residual_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pq_topk_indexed,
     )
 
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
-
     t = load(spark, sf_dir, "embeddings")
     emb = t["embeddings"]
     fitted = _kmeans_centroids(spark, sf_dir)
     cents = [[x / _KMEANS_SCALE for x in row] for row in fitted]
-    index = build_ivf_pq_index(
-        widen_for_cpu(emb), cents, _pqr_cb(), residual=True
-    )
+    index = build_ivf_pq_index(emb, cents, _pqr_cb(), residual=True)
     qvec = [float(x) for x in emb.filter("vec_id = 0").head()["embedding"]]
     out = ivf_pq_topk_indexed(
         index, qvec, cents, _pqr_cb(),
@@ -14522,7 +14447,7 @@ def q_ivfadc_trained_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks TRAINED on that quantizer's residuals
     (operators/clustering.train_pq_codebooks_residual — 16 cells × 8
     subspaces, 2 Lloyd's rounds, deterministic lowest-id seeding,
-    memoized per (session, sf_dir)) → residual encode → probe-pruned
+    memoized per sf_dir) → residual encode → probe-pruned
     residual-ADC serve of vec 0 over 4 of 8 cells.
     `ivf_residual_trained` composes the fitted quantizer with SEEDED
     data-scaled codebooks; swapping in the residual-trained books
@@ -14536,9 +14461,6 @@ def q_ivfadc_trained_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     are model-sized collects over full scans, the index build is three
     narrow projections persisted by cell, and the serve is a
     partition-pruned probe — the FAISS memory/IO shape."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
         ivf_pq_topk_indexed,
@@ -14549,9 +14471,7 @@ def q_ivfadc_trained_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitted = _kmeans_centroids(spark, sf_dir)
     cents = [[x / _KMEANS_SCALE for x in row] for row in fitted]
     books = _pqr_trained_books(spark, sf_dir)
-    index = build_ivf_pq_index(
-        widen_for_cpu(emb), cents, books, residual=True
-    )
+    index = build_ivf_pq_index(emb, cents, books, residual=True)
     qvec = [float(x) for x in emb.filter("vec_id = 0").head()["embedding"]]
     out = ivf_pq_topk_indexed(
         index, qvec, cents, books,

@@ -18,7 +18,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobinsight_data_pipeline_spark.catalog import load, scratch_dir
+from jobinsight_data_pipeline_spark.catalog import load, memo, scratch_dir
 from jobinsight_data_pipeline_spark.operators.scd2 import scd2_merge
 from jobinsight_data_pipeline_spark.plans import facts as facts_plan
 from jobinsight_data_pipeline_spark.plans.dimensions import (
@@ -84,7 +84,7 @@ def _flat_warehouse(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
         fact = facts_plan.merge_facts(None, incoming).cache()
         return [staging, dim_job, dim_company, fact]
 
-    return _gate_frames(spark, "flat_warehouse", sf_dir, build)
+    return memo(spark, "flat_warehouse", sf_dir, build)
 
 
 def q_warehouse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,99 +165,50 @@ FROM orders
 )
 
 
-# one warehouse is registered per (session, sf_dir); every view gate shares
-# it so the SCD2/fact/bridge build runs once, not once per gate query.
-# _VIEWS_WAREHOUSE holds the active key AND its cached DataFrames so a
-# rebuild (sf_dir switch) unpersists the old set instead of leaking it in
-# executor storage.
-_VIEWS_WAREHOUSE: dict[tuple[str, str], list[DataFrame]] = {}
-
-# Memoized gate warehouses: gates that build their own staging/dims
-# (rollup, top10, scd2_update, fact_merge, bridge_rebuild, incremental)
-# construct those cached frames ONCE per (gate, applicationId, sf_dir)
-# and reuse the same DataFrame objects on repeat invocation — the builds
-# are deterministic (fixed RUN_TS, frozen assigner split points), so
-# reuse is semantically free. This bounds executor storage to one
-# generation per gate (a different sf_dir evicts and unpersists the old
-# one) and avoids re-registering identical plans every call ("already
-# cached" CacheManager warnings + unreclaimed storage, round-3 advice).
-_GATE_CACHES: dict[tuple[str, str, str], list[DataFrame]] = {}
-
-
-def _gate_frames(
-    spark: SparkSession, gate: str, sf_dir: str, build
-) -> list[DataFrame]:
-    """Return the gate's cached frames, building them on first use.
-    ``build()`` must return the list of already-.cache()d DataFrames."""
-    key = (gate, spark.sparkContext.applicationId, sf_dir)
-    if key in _GATE_CACHES:
-        return _GATE_CACHES[key]
-    for k in [k for k in _GATE_CACHES if k[0] == gate]:
-        for df in _GATE_CACHES.pop(k):
-            try:
-                df.unpersist()
-            except Exception:
-                # frames belonging to a stopped SparkSession (stale
-                # applicationId after a session recycle): nothing to
-                # free — evicting the dict entry is enough
-                pass
-    frames = build()
-    _GATE_CACHES[key] = frames
-    return frames
-
-
 def _ensure_views_warehouse(spark: SparkSession, sf_dir: str):
     """Build the location-bearing engine warehouse (dims via scd2_merge /
     insert_only_merge, fact via build_fact_batch + merge_facts, bridge via
-    build_bridge) and register the DWH temp views over it. Cached per
-    (applicationId, sf_dir) — the dims/fact/bridge DataFrames are .cache()d
-    so the five view gates don't re-run the dimensional pipeline each."""
+    build_bridge) and register the DWH temp views over it. Memoized per
+    sf_dir — the dims/fact/bridge DataFrames are .cache()d so the five
+    view gates don't re-run the dimensional pipeline each, and the temp
+    views hold one warehouse at a time."""
     from jobinsight_data_pipeline_spark.plans import views as views_plan
     from jobinsight_data_pipeline_spark.plans.dimensions import (
         build_dim_location,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _VIEWS_WAREHOUSE:
-        return views_plan
-    # temp views hold one warehouse at a time; release the old one's storage
-    for cached in _VIEWS_WAREHOUSE.values():
-        for df in cached:
-            df.unpersist()
-    _VIEWS_WAREHOUSE.clear()
-
-    load(spark, sf_dir, "orders")
-    staging = (
-        spark.sql(STAGING_LOC_SQL)
-        .withColumn("skills", F.lit(None).cast("array<string>"))
-        .withColumn(
-            "location_pairs",
-            F.when(F.col("location").isNotNull(), F.array("location")).otherwise(
-                F.array().cast("array<string>")
-            ),
+    def build() -> list[DataFrame]:
+        load(spark, sf_dir, "orders")
+        staging = (
+            spark.sql(STAGING_LOC_SQL)
+            .withColumn("skills", F.lit(None).cast("array<string>"))
+            .withColumn(
+                "location_pairs",
+                F.when(
+                    F.col("location").isNotNull(), F.array("location")
+                ).otherwise(F.array().cast("array<string>")),
+            )
+            .withColumn("due_date", F.col("due_dt"))
+            # lazy cache for the sizing jobs (see q_warehouse_rollup)
+            .cache()
         )
-        .withColumn("due_date", F.col("due_dt"))
-        # lazy cache for the sizing jobs (see q_warehouse_rollup); tracked
-        # in _VIEWS_WAREHOUSE for unpersist on rebuild
-        .cache()
-    )
-    run_date = RUN_TS.date()
+        run_date = RUN_TS.date()
 
-    dim_job = scd2_merge(None, staging, DIM_JOB_CONFIG, run_date).dim.cache()
-    dim_company = scd2_merge(None, staging, DIM_COMPANY_CONFIG, run_date).dim.cache()
-    dim_location = build_dim_location(None, staging, run_date).dim.cache()
-    incoming = facts_plan.build_fact_batch(staging, dim_job, dim_company, RUN_TS)
-    fact = facts_plan.merge_facts(None, incoming).cache()
-    bridge = facts_plan.build_bridge(
-        fact, incoming, staging, dim_job, dim_location, None
-    ).cache()
-    dim_date = spark.createDataFrame([], "date_id date, day int, month int, quarter int, year int, weekday string")
-    views_plan.register_dwh_views(
-        spark, dim_job, dim_company, dim_location, dim_date, fact, bridge
-    )
-    _VIEWS_WAREHOUSE[key] = [
-        staging, dim_job, dim_company, dim_location, fact, bridge
-    ]
+        dim_job = scd2_merge(None, staging, DIM_JOB_CONFIG, run_date).dim.cache()
+        dim_company = scd2_merge(None, staging, DIM_COMPANY_CONFIG, run_date).dim.cache()
+        dim_location = build_dim_location(None, staging, run_date).dim.cache()
+        incoming = facts_plan.build_fact_batch(staging, dim_job, dim_company, RUN_TS)
+        fact = facts_plan.merge_facts(None, incoming).cache()
+        bridge = facts_plan.build_bridge(
+            fact, incoming, staging, dim_job, dim_location, None
+        ).cache()
+        dim_date = spark.createDataFrame([], "date_id date, day int, month int, quarter int, year int, weekday string")
+        views_plan.register_dwh_views(
+            spark, dim_job, dim_company, dim_location, dim_date, fact, bridge
+        )
+        return [staging, dim_job, dim_company, dim_location, fact, bridge]
+
+    memo(spark, "views_warehouse", sf_dir, build)
     return views_plan
 
 
@@ -502,7 +453,7 @@ def q_scd2_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lazy batch-boundary cache (see q_warehouse_incremental)
         return [scd2_merge(None, b1, DIM_JOB_CONFIG, dt.date(1998, 6, 1)).dim.cache()]
 
-    (dim,) = _gate_frames(spark, "scd2_update", sf_dir, build)
+    (dim,) = memo(spark, "scd2_update", sf_dir, build)
     load(spark, sf_dir, "orders")
     b2 = spark.sql(D2_SQL).withColumn("skills", null_sk)
     dim = scd2_merge(dim, b2, DIM_JOB_CONFIG, dt.date(1998, 6, 2)).dim
@@ -598,7 +549,7 @@ def q_fact_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cache()
         return [dim_job, dim_company, fact]
 
-    dim_job, dim_company, fact = _gate_frames(spark, "fact_merge", sf_dir, build)
+    dim_job, dim_company, fact = memo(spark, "fact_merge", sf_dir, build)
     s2 = staging(100, "1998-06-02 09:00:00", 40)
     fact = facts_plan.merge_facts(
         fact, facts_plan.build_fact_batch(s2, dim_job, dim_company, r2)
@@ -708,7 +659,7 @@ def q_bridge_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim_loc2 = build_dim_location(dim_loc, s2, r2.date()).dim.cache()
         return [dim_job, dim_company, fact, bridge, dim_loc2]
 
-    dim_job, dim_company, fact, bridge, dim_loc = _gate_frames(
+    dim_job, dim_company, fact, bridge, dim_loc = memo(
         spark, "bridge_rebuild", sf_dir, build
     )
     s2 = staging("CityB", "1998-06-03 09:00:00", 40)
@@ -877,7 +828,7 @@ def q_warehouse_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim_loc2 = build_dim_location(dim_loc, s2, r2.date()).dim.cache()
         return [dim_job, dim_co, fact, bridge, dim_job2, dim_loc2]
 
-    _j1, dim_co1, fact, bridge, dim_job, dim_loc = _gate_frames(
+    _j1, dim_co1, fact, bridge, dim_job, dim_loc = memo(
         spark, "warehouse_incremental", sf_dir, build
     )
     s2 = staging(_WH_INC_B2)

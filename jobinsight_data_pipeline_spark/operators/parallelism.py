@@ -19,12 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def widen_for_cpu(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Repartition ``df`` to ``defaultParallelism * factor`` iff it
-    currently has fewer partitions; pass streams through untouched."""
+def widen_for_cpu(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism`` iff it currently has
+    fewer partitions; pass streams through untouched."""
     if df.isStreaming:
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -143,9 +143,9 @@ def bench_only_builders(spark, sf_dir):
         import tempfile
 
         idx_path = tempfile.mkdtemp(prefix="plan_ivfpq_") + "/idx"
-        build_ivf_pq_index(emb, cents, cb).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(idx_path)
+        build_ivf_pq_index(emb, cents, cb).repartition("cell").write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(idx_path)
         index = spark.read.parquet(idx_path)
         qbatch = emb.filter("vec_id < 20").selectExpr(
             "vec_id AS query_id", "embedding"
@@ -216,10 +216,11 @@ def bench_only_builders(spark, sf_dir):
         "exact_spans": lambda: exact_match_spans(
             docs, "doc_id", "text", k=8, min_len=15
         ),
-        # mirrors bench.py: widened encode, then the narrow codes are
-        # shuffled to the cell grain for the partitioned write (r12)
+        # mirrors bench.py: the encode widens its own scan, then the
+        # narrow codes are shuffled to the cell grain for the
+        # partitioned write (r12)
         "ivf_pq_build": lambda: build_ivf_pq_index(
-            widen_for_cpu(emb), cents, cb
+            emb, cents, cb
         ).repartition("cell"),
         "ivf_pq_serve_many": _serve_many,
         "ivf_pq_residual_serve": _resid_serve,

@@ -1894,7 +1894,9 @@ def test_ivf_pq_indexed_bit_identical_to_oneshot(spark, tmp_path):
     cents = unit_centroids(64, 16, seed=11)
     cb = pq_codebooks()
     path = str(tmp_path / "idx")
-    build_ivf_pq_index(emb, cents, cb).write.partitionBy("cell").parquet(path)
+    build_ivf_pq_index(emb, cents, cb).repartition("cell").write.partitionBy(
+        "cell"
+    ).parquet(path)
     index = spark.read.parquet(path)
 
     for qid in (0, 7, 23):
@@ -1974,9 +1976,9 @@ def test_ivf_pq_residual_routes_bit_identical(spark, tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents, cb = unit_centroids(64, 16, seed=11), pq_codebooks()
     path = str(tmp_path / "ridx")
-    build_ivf_pq_index(emb, cents, cb, residual=True).write.partitionBy(
+    build_ivf_pq_index(emb, cents, cb, residual=True).repartition(
         "cell"
-    ).parquet(path)
+    ).write.partitionBy("cell").parquet(path)
     index = spark.read.parquet(path)
     qids = (0, 7, 23)
     queries = emb.filter(F.col("vec_id").isin(*qids)).select(

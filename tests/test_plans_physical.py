@@ -528,7 +528,9 @@ def test_ivf_pq_many_dynamic_partition_pruning(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents, cb = unit_centroids(64, 16, seed=11), pq_codebooks()
     idx_path = str(tmp_path / "idx")
-    build_ivf_pq_index(emb, cents, cb).write.partitionBy("cell").parquet(idx_path)
+    build_ivf_pq_index(emb, cents, cb).repartition("cell").write.partitionBy(
+        "cell"
+    ).parquet(idx_path)
     index = spark.read.parquet(idx_path)
     queries = emb.filter("vec_id < 4").select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -558,7 +560,9 @@ def test_ivf_pq_index_partition_prunes_probe_cells(spark, tmp_path):
     cents = unit_centroids(64, 16, seed=11)
     cb = pq_codebooks()
     idx_path = str(tmp_path / "ivfpq_idx")
-    build_ivf_pq_index(emb, cents, cb).write.partitionBy("cell").parquet(idx_path)
+    build_ivf_pq_index(emb, cents, cb).repartition("cell").write.partitionBy(
+        "cell"
+    ).parquet(idx_path)
 
     query = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
     index = spark.read.parquet(idx_path)
