@@ -7673,7 +7673,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHOLE decision (content hashes, 16 minhash components, 4 band
     buckets, history joins, within-batch windows) under a FULL exact
     DuckDB oracle; xxhash64 stays the production mode
-    (operators/dedup.py:_minhash_component)."""
+    (operators/dedup.py:_minhash_buckets)."""
     from jobinsight_data_pipeline_spark.operators.dedup import (
         build_dedup_state,
         incremental_dedup,

@@ -8,8 +8,13 @@
 - MinHash+LSH: banded signatures via xxhash64 (deterministic, JVM-native,
   no UDF) so only same-band-bucket docs are joined — the scale path where
   all-pairs verify is impossible;
-- SimHash: 64-bit sign-aggregated token hashes, hamming-close candidates
-  via band buckets.
+- SimHash: ``bits``-wide sign-aggregated token hashes; pairs within
+  hamming ≤ r come from r + 1 near-even bit bands (complete by
+  pigeonhole) and are verified with bit_count(xor).
+
+Every banded candidate join here and in ``similarity`` (hyperplane LSH)
+runs through ``_banded_join``, which keeps each pair once, in its first
+agreeing band.
 
 All operators return DataFrames of survivor/duplicate-pair rows; nothing
 collects to the driver.
@@ -266,6 +271,81 @@ def minhash_signatures(
     return sh.groupBy("doc").agg(*aggs)
 
 
+def _band_bucket_array(n_hashes: int, bands: int, key) -> Column:
+    """The one MinHash band-key builder: ``key`` collapses each band's
+    signature components (columns h0..hN, in seed order) into one band
+    key; returns the array of band keys."""
+    if n_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must divide n_hashes={n_hashes} (trailing "
+            f"signature components would silently drop out of every band)"
+        )
+    r = n_hashes // bands
+    return F.array(
+        *[key([F.col(f"h{b * r + j}") for j in range(r)]) for b in range(bands)]
+    )
+
+
+def _bit_bands(bits: int, bands: int):
+    """Band keys of a ``bits``-wide hash column: ``bands`` near-even bit
+    slices (the first ``bits % bands`` one bit wider), low bits first,
+    returned as ``h -> array(slice_0, ...)``. A full-width band is the
+    column itself, so no ``2^64 - 1`` mask literal is ever built."""
+    base, rem = divmod(bits, bands)
+    cuts = [j * base + min(j, rem) for j in range(bands + 1)]
+    return lambda h: F.array(
+        *[
+            h
+            if hi - lo >= bits
+            else F.shiftright(h, lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1))
+            for lo, hi in zip(cuts, cuts[1:])
+        ]
+    )
+
+
+def _banded_join(
+    a: DataFrame,
+    b: DataFrame,
+    src: str,
+    bands: int,
+    keys=lambda k: k,
+    lt: str | None = None,
+) -> DataFrame:
+    """The one banded-candidate join. Each side's band keys are
+    ``keys(src)`` — a bit slicer over a hash/sketch column, or the
+    identity when ``src`` already holds the band-key array. Both sides
+    posexplode to (band, bucket) and equi-join on it (plus
+    ``a.<lt> < b.<lt>`` for self-joins); the result keeps the sides'
+    columns under aliases ``a`` and ``b``.
+
+    A pair agreeing on several bands matches once per agreeing band, so
+    only the row whose ``a.band`` is the FIRST band with equal keys on
+    both sides survives: exactly one row per pair, decided by a filter
+    inside the join's stage instead of a distinct behind an Exchange
+    (linear CASE, first match wins)."""
+
+    def explode(df: DataFrame) -> DataFrame:
+        bucket = F.posexplode(keys(F.col(src))).alias("band", "bucket")
+        return df.select("*", bucket)
+
+    on = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.bucket") == F.col("b.bucket")
+    )
+    if lt is not None:
+        on = on & (F.col(f"a.{lt}") < F.col(f"b.{lt}"))
+    # each side's key array is built once (every Column call is a py4j
+    # round trip: rebuilding it per band cost lsh_cosine_topk ~0.1 s per
+    # call at sf0.1 on 4 cores); the optimizer folds array(...)[j] to key j
+    ka, kb = keys(F.col(f"a.{src}")), keys(F.col(f"b.{src}"))
+    first = None
+    for j in range(bands):
+        agree = ka[j] == kb[j]
+        first = F.when(agree, j) if first is None else first.when(agree, j)
+    ea = explode(a)
+    eb = ea if b is a else explode(b)
+    return ea.alias("a").join(eb.alias("b"), on).filter(F.col("a.band") == first)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -278,30 +358,11 @@ def minhash_lsh_pairs(
     bucket. Returns (doc_a, doc_b, est_jaccard) where est = fraction of
     matching minhash components — verify with ngram_jaccard_pairs on the
     candidates when exactness matters."""
-    rows_per_band = n_hashes // bands
+    band_keys = _band_bucket_array(n_hashes, bands, lambda c: F.xxhash64(*c))
     sig = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n).cache()
-    # single pass: posexplode the band buckets instead of `bands` scans
-    band_hashes = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"h{band * rows_per_band + j}") for j in range(rows_per_band)]
-            )
-            for band in range(bands)
-        ]
-    )
-    buckets = sig.select(
-        "doc", F.posexplode(band_hashes).alias("band", "bucket")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
+    keyed = sig.select("doc", band_keys.alias("keys"))
+    cand = _banded_join(keyed, keyed, "keys", bands, lt="doc").select(
+        F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
     )
     sa = sig.select(F.col("doc").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(n_hashes)])
     sb = sig.select(F.col("doc").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(n_hashes)])
@@ -371,13 +432,9 @@ def minhash_lsh_pairs_portable(
     a gate hash (q_dedup_recall_eval). Pass a prebuilt ``signatures``
     frame to band the SAME signature build several ways (the
     q_dedup_band_curve pattern) without recomputing it."""
-    if n_hashes % bands:
-        raise ValueError(
-            f"minhash_lsh_pairs_portable: bands={bands} must divide "
-            f"n_hashes={n_hashes} (trailing signatures would silently "
-            f"drop out of every band)"
-        )
-    rows_per_band = n_hashes // bands
+    band_keys = _band_bucket_array(
+        n_hashes, bands, lambda c: F.concat_ws("|", *[h.cast("string") for h in c])
+    )
     sig = (
         signatures
         if signatures is not None
@@ -385,31 +442,9 @@ def minhash_lsh_pairs_portable(
             df, id_col, text_col, n_hashes, shingle_n
         )
     )
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                "|",
-                *[
-                    F.col(f"h{band * rows_per_band + j}").cast("string")
-                    for j in range(rows_per_band)
-                ],
-            )
-            for band in range(bands)
-        ]
-    )
-    buckets = sig.select(
-        "doc", F.posexplode(band_keys).alias("band", "bucket")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
+    keyed = sig.select("doc", band_keys.alias("keys"))
+    return _banded_join(keyed, keyed, "keys", bands, lt="doc").select(
+        F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
     )
 
 
@@ -456,24 +491,45 @@ def simhash(
     return sums.select("doc", sig.alias("simhash"))
 
 
-def _first_agreeing_band(
-    xor, offsets: list[int], widths: list[int], bits: int
-):
-    """Index of the FIRST band whose slice of ``xor`` is all-zero — the
-    map-side dedup key for banded hamming joins: a pair agreeing on
-    several bands matches the band join once per agreeing band, and
-    keeping only the row whose join band equals this index leaves
-    exactly one copy per pair with NO distinct shuffle (linear chained
-    CASE, first match wins — never the O(2^k) when-fold shape)."""
-    c = None
-    for j, (o, w) in enumerate(zip(offsets, widths)):
-        agree = (
-            (xor == 0)
-            if w >= bits
-            else (F.shiftright(xor, o).bitwiseAND(F.lit((1 << w) - 1)) == 0)
+def _hamming_join(
+    a: DataFrame,
+    b: DataFrame | None,
+    id_col: str,
+    hash_col: str,
+    max_hamming: int,
+    bits: int,
+    out: tuple[str, str],
+) -> DataFrame:
+    """Banded-COMPLETE hamming join of ``a`` against ``b`` (``None``:
+    against itself, pairs with id_a < id_b): (max_hamming + 1) near-even
+    bands, so any pair within hamming ≤ max_hamming agrees on ≥1 band
+    (pigeonhole); candidates verify with bit_count(xor). Output:
+    (out[0], out[1], hamming)."""
+    bands = max_hamming + 1
+    if not 1 <= bands <= bits:
+        raise ValueError(f"max_hamming must be in [0, {bits - 1}], got {max_hamming}")
+
+    def side(df: DataFrame) -> DataFrame:
+        return df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
+
+    sa = side(a)
+    xor = F.col("a._h").bitwiseXOR(F.col("b._h"))
+    return (
+        _banded_join(
+            sa,
+            sa if b is None else side(b),
+            "_h",
+            bands,
+            keys=_bit_bands(bits, bands),
+            lt="_id" if b is None else None,
         )
-        c = F.when(agree, F.lit(j)) if c is None else c.when(agree, F.lit(j))
-    return c
+        .select(
+            F.col("a._id").alias(out[0]),
+            F.col("b._id").alias(out[1]),
+            F.bit_count(xor).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
 
 
 def simhash_near_pairs(
@@ -498,48 +554,9 @@ def simhash_near_pairs(
     max_hamming=8 → 9×7-bit bands whose ≤128-value buckets collide far
     more). Prefer small radii at corpus scale, or pre-partition by a
     coarse key before widening the radius."""
-    bands = max_hamming + 1
-    if not 1 <= bands <= bits:
-        raise ValueError(f"max_hamming must be in [0, {bits - 1}], got {max_hamming}")
-    base, rem = divmod(bits, bands)
-    widths = [base + (1 if i < rem else 0) for i in range(bands)]
-    offsets = [sum(widths[:i]) for i in range(bands)]
     sig = simhash(df, id_col, text_col, bits=bits, token_hash=token_hash).cache()
-    band_buckets = F.array(
-        *[
-            F.col("simhash")
-            if w >= bits
-            else F.shiftright(F.col("simhash"), o).bitwiseAND(F.lit((1 << w) - 1))
-            for o, w in zip(offsets, widths)
-        ]
-    )
-    buckets = sig.select(
-        "doc", "simhash", F.posexplode(band_buckets).alias("band", "bucket")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        # emit each pair ONLY in its FIRST agreeing band: a pair that
-        # agrees on several bands matches the join once per band, and
-        # the old `.distinct()` paid a full Exchange of the pair stream
-        # to drop the copies. The first-agreeing-band index is computable
-        # from the xor alone, so the dedup now runs map-side as a filter
-        # and the shuffle disappears (r13, guide §2.4). Result set is
-        # identical: every qualifying pair agrees on ≥1 band
-        # (pigeonhole), so exactly one copy survives.
-        .filter(F.col("a.band") == _first_agreeing_band(xor, offsets, widths, bits))
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.bit_count(xor).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return _hamming_join(
+        sig, None, "doc", "simhash", max_hamming, bits, ("doc_a", "doc_b")
     )
 
 
@@ -559,46 +576,8 @@ def hamming_near_pairs(
     multimodal.extract_image_dhash) and any other fingerprint column.
     Output: (id_a, id_b, hamming) with id_a < id_b. Same scale note as
     the simhash form — wider radii mean denser band buckets."""
-    bands = max_hamming + 1
-    if not 1 <= bands <= bits:
-        raise ValueError(
-            f"max_hamming must be in [0, {bits - 1}], got {max_hamming}"
-        )
-    base, rem = divmod(bits, bands)
-    widths = [base + (1 if i < rem else 0) for i in range(bands)]
-    offsets = [sum(widths[:i]) for i in range(bands)]
-    s = sig.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
-    band_buckets = F.array(
-        *[
-            F.col("_h")
-            if w >= bits
-            else F.shiftright(F.col("_h"), o).bitwiseAND(F.lit((1 << w) - 1))
-            for o, w in zip(offsets, widths)
-        ]
-    )
-    buckets = s.select(
-        "_id", "_h", F.posexplode(band_buckets).alias("band", "bucket")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    xor = F.col("a._h").bitwiseXOR(F.col("b._h"))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        # first-agreeing-band dedup instead of `.distinct()` — identical
-        # pair set, no pair-stream Exchange (see simhash_near_pairs)
-        .filter(
-            F.col("a.band") == _first_agreeing_band(xor, offsets, widths, bits)
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.bit_count(xor).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return _hamming_join(
+        sig, None, id_col, hash_col, max_hamming, bits, ("id_a", "id_b")
     )
 
 
@@ -619,52 +598,8 @@ def hamming_near_join(
     verify with bit_count(xor). Output: (id_new, id_hist, hamming),
     every within-radius cross pair. History cost per day rides the NEW
     batch's size — the state is never self-joined."""
-    bands = max_hamming + 1
-    if not 1 <= bands <= bits:
-        raise ValueError(
-            f"max_hamming must be in [0, {bits - 1}], got {max_hamming}"
-        )
-    base, rem = divmod(bits, bands)
-    widths = [base + (1 if i < rem else 0) for i in range(bands)]
-    offsets = [sum(widths[:i]) for i in range(bands)]
-
-    def bucketize(df: DataFrame) -> DataFrame:
-        s = df.select(
-            F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")
-        )
-        band_buckets = F.array(
-            *[
-                F.col("_h")
-                if w >= bits
-                else F.shiftright(F.col("_h"), o).bitwiseAND(
-                    F.lit((1 << w) - 1)
-                )
-                for o, w in zip(offsets, widths)
-            ]
-        )
-        return s.select(
-            "_id", "_h", F.posexplode(band_buckets).alias("band", "bucket")
-        )
-
-    a, b = bucketize(new).alias("a"), bucketize(state).alias("b")
-    xor = F.col("a._h").bitwiseXOR(F.col("b._h"))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket")),
-        )
-        # first-agreeing-band dedup instead of `.distinct()` — identical
-        # pair set, no pair-stream Exchange (see simhash_near_pairs)
-        .filter(
-            F.col("a.band") == _first_agreeing_band(xor, offsets, widths, bits)
-        )
-        .select(
-            F.col("a._id").alias("id_new"),
-            F.col("b._id").alias("id_hist"),
-            F.bit_count(xor).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return _hamming_join(
+        new, state, id_col, hash_col, max_hamming, bits, ("id_new", "id_hist")
     )
 
 
@@ -1047,39 +982,6 @@ def remove_spans(
 # --- incremental dedup against a persisted history snapshot ----------------
 
 
-def _minhash_component(shingle: Column, i: int, hash_mode: str) -> Column:
-    """One minhash component hash. ``xxhash64`` is the production mode
-    (JVM intrinsic); ``md5`` is the engine-portable 60-bit twin (the
-    :func:`md5_token_hash60` trick with an ``i:`` seed prefix) that puts
-    the ENTIRE incremental-dedup decision under an exact cross-engine
-    oracle."""
-    if hash_mode == "xxhash64":
-        return F.xxhash64(F.lit(i), shingle)
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{i}:"), shingle)), 1, 15), 16, 10
-    ).cast("long")
-
-
-def _band_bucket_array(n_hashes: int, bands: int, hash_mode: str) -> Column:
-    """Collapse per-band signature components (columns h0..hN) into one
-    bucket id per band."""
-    rows_per_band = n_hashes // bands
-    cols_by_band = [
-        [F.col(f"h{band * rows_per_band + j}") for j in range(rows_per_band)]
-        for band in range(bands)
-    ]
-    if hash_mode == "xxhash64":
-        return F.array(*[F.xxhash64(*cols) for cols in cols_by_band])
-    return F.array(
-        *[
-            F.conv(
-                F.substring(F.md5(F.concat_ws(",", *cols)), 1, 15), 16, 10
-            ).cast("long")
-            for cols in cols_by_band
-        ]
-    )
-
-
 def _minhash_buckets(
     df: DataFrame,
     id_col: str,
@@ -1091,22 +993,27 @@ def _minhash_buckets(
 ) -> DataFrame:
     """(doc, band, bucket) — one row per (document, LSH band). Docs with
     fewer than ``shingle_n`` tokens have no shingles and emit no rows
-    (they can only exact-duplicate)."""
-    sh = shingles(df, id_col, text_col, shingle_n)
-    sig = sh.groupBy("doc").agg(
-        *[
-            F.min(_minhash_component(F.col("shingle"), i, hash_mode)).alias(
-                f"h{i}"
-            )
-            for i in range(n_hashes)
-        ]
-    )
-    return sig.select(
-        "doc",
-        F.posexplode(_band_bucket_array(n_hashes, bands, hash_mode)).alias(
-            "band", "bucket"
-        ),
-    )
+    (they can only exact-duplicate). ``xxhash64`` is the production
+    mode (:func:`minhash_signatures`); ``md5`` is the engine-portable
+    60-bit twin (the :func:`md5_token_hash60` trick with an ``i:`` seed
+    prefix) that puts the ENTIRE incremental-dedup decision under an
+    exact cross-engine oracle."""
+    if hash_mode == "xxhash64":
+        band_keys = _band_bucket_array(n_hashes, bands, lambda c: F.xxhash64(*c))
+        sig = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n)
+    else:
+        band_keys = _band_bucket_array(
+            n_hashes, bands, lambda c: md5_token_hash60(F.concat_ws(",", *c))
+        )
+        sig = shingles(df, id_col, text_col, shingle_n).groupBy("doc").agg(
+            *[
+                F.min(
+                    md5_token_hash60(F.concat(F.lit(f"{i}:"), F.col("shingle")))
+                ).alias(f"h{i}")
+                for i in range(n_hashes)
+            ]
+        )
+    return sig.select("doc", F.posexplode(band_keys).alias("band", "bucket"))
 
 
 def build_dedup_state(

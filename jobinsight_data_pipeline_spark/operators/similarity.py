@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from jobinsight_data_pipeline_spark.operators.dedup import _banded_join, _bit_bands
 from jobinsight_data_pipeline_spark.operators.parallelism import widen_for_cpu
 
 
@@ -206,38 +207,21 @@ def lsh_cosine_near_pairs(
         raise ValueError("pass both n_planes and bands, or neither")
     if n_planes is None:
         n_planes, bands = lsh_params_for(threshold)
-    bits_per_band = n_planes // bands
-    mask = (1 << bits_per_band) - 1
     sk = (
         lsh_sketch(df, id_col, vec_col, dim, n_planes, seed)
         # double-precision scoring so verified sims match cosine_near_pairs
         .withColumn("vec", _as_double(F.col("vec")))
         .withColumn("nrm", norm(F.col("vec")))
     )
-    band_arr = F.array(
-        *[
-            F.shiftright(F.col("sketch"), i * bits_per_band).bitwiseAND(F.lit(mask))
-            for i in range(bands)
-        ]
-    )
-    buckets = sk.select("doc", "vec", "nrm", F.posexplode(band_arr).alias("band", "bucket"))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("vec_a"),
-            F.col("a.vec").alias("va"),
-            F.col("a.nrm").alias("na"),
-            F.col("b.doc").alias("vec_b"),
-            F.col("b.vec").alias("vb"),
-            F.col("b.nrm").alias("nb"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
+    cand = _banded_join(
+        sk, sk, "sketch", bands, keys=_bit_bands(n_planes, bands), lt="doc"
+    ).select(
+        F.col("a.doc").alias("vec_a"),
+        F.col("a.vec").alias("va"),
+        F.col("a.nrm").alias("na"),
+        F.col("b.doc").alias("vec_b"),
+        F.col("b.vec").alias("vb"),
+        F.col("b.nrm").alias("nb"),
     )
     sim6 = F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
     return (
@@ -433,35 +417,19 @@ def lsh_cosine_topk(
     neighbors sit at modest cosine, where 4-bit bands drop to ~0.5
     recall); on a high-similarity near-dup corpus prefer 4-bit bands
     (n_planes=16, bands=4) for much stronger pruning."""
-    bits_per_band = n_planes // bands
-    mask = (1 << bits_per_band) - 1
-    cs = lsh_sketch(corpus, id_col, vec_col, dim, n_planes, seed)
-    qs = lsh_sketch(queries, id_col, vec_col, dim, n_planes, seed).withColumnRenamed(
-        "doc", "query_id"
-    ).withColumnRenamed("vec", "qv").withColumnRenamed("sketch", "qsketch")
-
-    def band_bucket(col: Column, band: int) -> Column:
-        return F.shiftright(col, band * bits_per_band).bitwiseAND(F.lit(mask))
-
-    # one pass per side: explode the band buckets instead of unioning
-    # `bands` scans of the sketch frame
-    def with_bands(df: DataFrame) -> DataFrame:
-        sk = "qsketch" if "qsketch" in df.columns else "sketch"
-        return df.select(
-            *df.columns,
-            F.posexplode(
-                F.array(*[band_bucket(F.col(sk), i) for i in range(bands)])
-            ).alias("band", "bucket"),
-        )
-
     # norms computed BEFORE the band fan-out (once per row, not per band)
-    cb = with_bands(cs.withColumn("cnorm", norm(F.col("vec"))))
-    qb = broadcast(with_bands(qs.withColumn("qnorm", norm(F.col("qv")))))
-    cand = (
-        cb.join(qb, ["band", "bucket"])
-        .select("query_id", "qv", "qnorm", "doc", "vec", "cnorm")
-        .dropDuplicates(["query_id", "doc"])
+    cs = lsh_sketch(corpus, id_col, vec_col, dim, n_planes, seed).withColumn(
+        "cnorm", norm(F.col("vec"))
     )
+    qs = lsh_sketch(queries, id_col, vec_col, dim, n_planes, seed).select(
+        F.col("doc").alias("query_id"),
+        F.col("vec").alias("qv"),
+        "sketch",
+        norm(F.col("vec")).alias("qnorm"),
+    )
+    cand = _banded_join(
+        cs, broadcast(qs), "sketch", bands, keys=_bit_bands(n_planes, bands)
+    ).select("query_id", "qv", "qnorm", "doc", "vec", "cnorm")
     scored = (
         cand.filter(F.col("doc") != F.col("query_id"))
         .withColumn(

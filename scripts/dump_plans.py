@@ -40,6 +40,9 @@ DEFAULT_NAMES = [
     "ivf_pq_serve_many",
     "ivf_pq_residual_serve",
     "incremental_dedup",
+    "embedding_lsh_near_dup",
+    "dedup_band_curve",
+    "image_dhash_pairs",
     "semantic_dedup",
     "incremental_semantic_dedup",
     "triangle_count",

@@ -250,6 +250,143 @@ def test_lsh_near_pairs_recall_and_precision(spark):
     assert recall >= 0.9, f"LSH near-dup recall {recall} too low"
 
 
+def _planted_vectors(spark):
+    """Six random 64-d vectors, identical copies of the first three
+    (ids 10-12) and a scaled copy of the fourth (id 20): every copy has
+    the same sign sketch as its original, so it agrees on every band."""
+    import numpy as np
+
+    base = np.random.default_rng(5).standard_normal((6, 64))
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
+    rows += [(10 + i, rows[i][1]) for i in range(3)]
+    rows.append((20, [2.0 * x for x in rows[3][1]]))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _planted_hashes(spark, offset):
+    """Four fixed random 64-bit hashes, ids offset..offset+3: two calls
+    with different offsets give identical hashes under distinct ids."""
+    import random
+
+    rnd = random.Random(11)
+    rows = [(offset + i, rnd.getrandbits(64) - (1 << 63)) for i in range(4)]
+    return spark.createDataFrame(rows, "id long, h long")
+
+
+def test_lsh_full_width_band_matches_exact(spark):
+    """threshold=1.0 autotunes to ONE 64-bit band (lsh_params_for →
+    (64, 1)); the band is the whole sketch, so no 2^64 - 1 mask literal
+    is built, and the pairs equal the exact all-pairs result."""
+    vecs = _planted_vectors(spark)
+    want = {
+        (r["vec_a"], r["vec_b"], r["sim"])
+        for r in cosine_near_pairs(vecs, threshold=1.0).collect()
+    }
+    got = {
+        (r["vec_a"], r["vec_b"], r["sim"])
+        for r in lsh_cosine_near_pairs(vecs, threshold=1.0).collect()
+    }
+    assert {(a, b) for a, b, _ in want} == {(0, 10), (1, 11), (2, 12), (3, 20)}
+    assert got == want
+    top = lsh_cosine_topk(
+        vecs, vecs.filter("vec_id < 3"), k=1, n_planes=64, bands=1
+    )
+    assert {(r["query_id"], r["neighbor_id"]) for r in top.collect()} == {
+        (0, 10),
+        (1, 11),
+        (2, 12),
+    }
+
+
+def _banded_ops():
+    from jobinsight_data_pipeline_spark.operators.dedup import (
+        hamming_near_join,
+        hamming_near_pairs,
+        minhash_lsh_pairs_portable,
+    )
+
+    return {
+        "minhash_lsh_pairs": lambda sp, d: (
+            minhash_lsh_pairs(d, "doc_id", "text"), ("doc_a", "doc_b")
+        ),
+        "minhash_lsh_pairs_portable": lambda sp, d: (
+            minhash_lsh_pairs_portable(d, "doc_id", "text"), ("doc_a", "doc_b")
+        ),
+        "simhash_near_pairs": lambda sp, d: (
+            simhash_near_pairs(d, "doc_id", "text"), ("doc_a", "doc_b")
+        ),
+        "hamming_near_pairs": lambda sp, d: (
+            hamming_near_pairs(
+                _planted_hashes(sp, 0).unionByName(_planted_hashes(sp, 10)),
+                "id",
+                "h",
+            ),
+            ("id_a", "id_b"),
+        ),
+        "hamming_near_join": lambda sp, d: (
+            hamming_near_join(
+                _planted_hashes(sp, 10), _planted_hashes(sp, 0), "id", "h"
+            ),
+            ("id_new", "id_hist"),
+        ),
+        "lsh_cosine_near_pairs": lambda sp, d: (
+            lsh_cosine_near_pairs(_planted_vectors(sp), threshold=0.9),
+            ("vec_a", "vec_b"),
+        ),
+        "lsh_cosine_topk": lambda sp, d: (
+            lsh_cosine_topk(
+                _planted_vectors(sp),
+                _planted_vectors(sp).filter("vec_id < 3"),
+                k=4,
+            ),
+            ("query_id", "neighbor_id"),
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_banded_ops()))
+def test_banded_join_emits_each_pair_once(spark, docs, op):
+    """Identical docs/vectors/hashes agree on EVERY band, so the band
+    join matches each such pair once per band; the first-agreeing-band
+    filter must leave exactly one row per pair (set-based tests cannot
+    see repeated rows)."""
+    out, (a, b) = _banded_ops()[op](spark, docs)
+    rows = [(r[a], r[b]) for r in out.collect()]
+    assert rows, f"{op}: fixture produced no pairs"
+    assert len(rows) == len(set(rows)), f"{op}: repeated pair rows {rows}"
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "minhash_lsh_pairs",
+        "minhash_lsh_pairs_portable",
+        "build_dedup_state",
+        "incremental_dedup",
+    ],
+)
+def test_minhash_bands_must_divide_n_hashes(docs, entry):
+    """bands ∤ n_hashes would drop the trailing signature components
+    from every band; every MinHash entry point refuses it up front."""
+    from jobinsight_data_pipeline_spark.operators import dedup
+
+    kw = {"n_hashes": 16, "bands": 5}
+    calls = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(
+            docs, "doc_id", "text", **kw
+        ),
+        "minhash_lsh_pairs_portable": lambda: dedup.minhash_lsh_pairs_portable(
+            docs, "doc_id", "text", **kw
+        ),
+        "build_dedup_state": lambda: dedup.build_dedup_state(docs, **kw),
+        "incremental_dedup": lambda: dedup.incremental_dedup(
+            docs, dedup.build_dedup_state(docs), **kw
+        ),
+    }
+    with pytest.raises(ValueError, match="bands=5 must divide n_hashes=16"):
+        calls[entry]()
+
+
 def test_ivf_topk_recall_curve(spark):
     from jobinsight_data_pipeline_spark.operators.similarity import ivf_cosine_topk
 
