@@ -3,14 +3,15 @@
 The reference implements upserts row-at-a-time or via staged SQL MERGE
 (``INSERT ... ON CONFLICT`` — /root/reference/src/db/bulk_operations.py:174-269,
 /root/reference/sql/insert_raw_to_staging.sql:37). Without a transactional
-table format, the Spark-native equivalent is anti-join + union, rewritten
-atomically by the caller (write to temp dir, swap). All operators here are
-pure DataFrame→DataFrame; no driver-side iteration.
+table format, the Spark-native equivalent is a union that keeps the
+surviving row per key (an anti-join + union, or one window over a tagged
+union), rewritten atomically by the caller (write to temp dir, swap). All
+operators here are pure DataFrame→DataFrame; no driver-side iteration.
 
 Scale notes (100 TB posture):
-- ``upsert_by_key`` shuffles both sides on the key — on a real deployment
-  partition/bucket the base table by the same key so AQE can plan a
-  shuffle-free merge; incoming batches are typically small → broadcast.
+- ``upsert_by_key`` shuffles both sides on the key (one union, one
+  window) — on a real deployment partition/bucket the base table by the
+  same key so the window's exchange is planned away on that side.
 - surrogate-key assignment numbers the *incoming batch only* from the
   table's max() (dims/facts grow by small daily deltas), never a global
   resort of the base table; :func:`_ordered_offsets` is the one
@@ -67,12 +68,55 @@ def upsert_by_key(
 ) -> DataFrame:
     """S5 semantics: ``INSERT ... ON CONFLICT (keys) DO UPDATE`` — incoming
     rows win wholesale; existing rows without a matching key survive.
-    Columns are aligned by name (unionByName)."""
-    incoming = dedupe_last_write(incoming, keys, order_col)
+    Columns are aligned by name (unionByName).
+
+    One pass over each side: existing rows (tag 0) and incoming rows
+    (tag 1) are unioned and ranked in one window per key, so ``incoming``
+    — often a whole derived projection — is evaluated once, not once for
+    the key side of an anti-join and again for the row side. Survivors
+    are exactly those of ``dedupe_last_write`` + left-anti + union:
+
+    - among incoming rows, the last write by ``order_col`` wins, ties
+      broken by ``xxhash64`` over the incoming columns
+      (``dedupe_last_write``'s rule; without ``order_col`` the hash
+      alone picks one row);
+    - an existing row survives iff no incoming row has its key. Null
+      keys never match (equi-join semantics), and duplicate existing
+      keys are all kept.
+    """
     if existing is None:
-        return incoming
-    kept = existing.join(incoming.select(*keys), on=keys, how="left_anti")
-    return kept.unionByName(incoming.select(existing.columns))
+        return dedupe_last_write(incoming, keys, order_col)
+    cols = existing.columns
+    order = F.col(order_col) if order_col is not None else F.lit(0)
+    inc = incoming.select(
+        *cols,
+        F.lit(1).alias("_src"),
+        order.alias("_ord"),
+        F.xxhash64(*[F.col(c) for c in incoming.columns]).alias("_tie"),
+    )
+    base = existing.select(
+        *cols,
+        F.lit(0).alias("_src"),
+        F.lit(None).cast(inc.schema["_ord"].dataType).alias("_ord"),
+        F.lit(None).cast("long").alias("_tie"),
+    )
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("_src").desc(), F.col("_ord").desc_nulls_last(), F.col("_tie").asc()
+    )
+    null_key = None
+    for k in keys:
+        c = F.col(k).isNull()
+        null_key = c if null_key is None else (null_key | c)
+    # the window's first row is an incoming one iff the key has any
+    keep = F.when(
+        F.col("_src") == 1, F.row_number().over(w) == 1
+    ).otherwise((F.first("_src").over(w) == 0) | null_key)
+    return (
+        base.unionByName(inc)
+        .withColumn("_keep", keep)
+        .filter("_keep")
+        .select(*cols)
+    )
 
 
 def insert_if_absent(

@@ -48,7 +48,10 @@ class Scd2Config:
 class Scd2Result:
     """Merge result. ``dim`` is the new dimension table; ``stats``
     ({inserted, updated, unchanged}) is computed LAZILY on first access —
-    reading it costs extra Spark jobs, not reading it costs nothing."""
+    reading it costs extra Spark jobs, not reading it costs nothing.
+    The stats re-read the dimension the merge started from, so read them
+    before anything deletes that input — a lake write that vacuums the
+    previous version (``keep_versions=1``) does."""
 
     def __init__(self, dim: DataFrame, stats_fn: Callable[[], dict[str, int]]):
         self.dim = dim

@@ -13,6 +13,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 
 from jobinsight_data_pipeline_spark.operators.merge import upsert_by_key
+from jobinsight_data_pipeline_spark.operators.parallelism import concurrently
 from jobinsight_data_pipeline_spark.plans import facts as facts_plan
 from jobinsight_data_pipeline_spark.plans import validation
 from jobinsight_data_pipeline_spark.plans.dimensions import (
@@ -24,6 +25,7 @@ from jobinsight_data_pipeline_spark.plans.dimensions import (
 from jobinsight_data_pipeline_spark.plans.raw_to_staging import (
     incremental_batch,
     raw_to_staging,
+    verify_integrity,
 )
 from jobinsight_data_pipeline_spark.sources.lake import ParquetLake
 
@@ -50,9 +52,7 @@ def run_raw_to_staging(
         lake.read(spark, "staging_jobs"), derived, ["job_id"], order_col="crawled_at"
     )
     lake.write(merged, "staging_jobs")
-    src, out = raw.count(), lake.read(spark, "staging_jobs").count()
-    from jobinsight_data_pipeline_spark.plans.raw_to_staging import verify_integrity
-
+    src, out = concurrently(spark, raw.count, lake.read(spark, "staging_jobs").count)
     return verify_integrity(src, out)
 
 
@@ -70,11 +70,18 @@ def run_staging_to_dwh(
     exactly like the reference's incremental batch, and is idempotent —
     re-running the same day merges to the same state.
 
+    Independent steps run concurrently (``parallelism.concurrently``):
+    the four dimensions each build, write and re-read in their own
+    branch; the fact merge starts as soon as dim_job and dim_company are
+    written, beside dim_location and dim_date; the bridge follows the
+    fact and dim_location; the fact/bridge counts run beside validation.
+
     ``collect_stats=False`` skips the observability collects (validation
-    report, dim insert/update counts, fact/bridge row counts — ~10 extra
-    Spark jobs) without changing any written state; callers that only
-    need the warehouse mutated (the streaming gate, tight-loop tests)
-    use it to avoid paying fixed per-job overhead on tiny batches.
+    report — ~49 Spark jobs — plus dim insert/update counts, ~11, and
+    fact/bridge row counts, ~4) without changing any written state;
+    callers that only need the warehouse mutated (the streaming gate,
+    tight-loop tests) use it to avoid paying fixed per-job overhead on
+    tiny batches.
     """
     run_date = run_ts.date()
     staging_full = lake.read(spark, "staging_jobs")
@@ -83,37 +90,54 @@ def run_staging_to_dwh(
     staging = incremental_batch(staging_full, run_ts, lookback_days)
 
     # --- dimensions
-    r_job = build_dim_job(lake.read(spark, "dim_job"), staging, run_date)
-    lake.write(r_job.dim, "dim_job")
-    dim_job = lake.read(spark, "dim_job")
+    dim_stats: dict[str, dict] = {}
 
-    r_co = build_dim_company(lake.read(spark, "dim_company"), staging, run_date)
-    lake.write(r_co.dim, "dim_company")
-    dim_company = lake.read(spark, "dim_company")
+    def dimension(table: str, build):
+        def step():
+            r = build(lake.read(spark, table), staging, run_date)
+            if collect_stats:
+                # the stats read the previous version, which the write
+                # may vacuum (keep_versions=1) — collect them first
+                dim_stats[table] = r.stats
+            lake.write(r.dim, table)
+            return lake.read(spark, table)
 
-    r_loc = build_dim_location(lake.read(spark, "dim_location"), staging, run_date)
-    lake.write(r_loc.dim, "dim_location")
-    dim_location = lake.read(spark, "dim_location")
+        return step
 
-    # calendar spanning the fan-out plus the reference's ±(90,180) clamp
-    dim_date = build_dim_date(
+    def calendar():
+        # calendar spanning the fan-out plus the reference's ±(90,180) clamp
+        dim_date = build_dim_date(
+            spark,
+            lake.read(spark, "dim_date"),
+            run_date - dt.timedelta(days=90),
+            run_date + dt.timedelta(days=180),
+        )
+        lake.write(dim_date, "dim_date")
+        return lake.read(spark, "dim_date")
+
+    # --- facts, once the dims they resolve keys against are written
+    def fact_branch():
+        dim_job, dim_company = concurrently(
+            spark,
+            dimension("dim_job", build_dim_job),
+            dimension("dim_company", build_dim_company),
+        )
+        incoming = facts_plan.build_fact_batch(
+            staging, dim_job, dim_company, run_ts, fanout_days
+        )
+        merged_fact = facts_plan.merge_facts(
+            lake.read(spark, "fact_job_posting_daily"), incoming
+        )
+        lake.write(merged_fact, "fact_job_posting_daily", partition_by=["load_month"])
+        fact = lake.read(spark, "fact_job_posting_daily")
+        return dim_job, dim_company, incoming, fact
+
+    (dim_job, dim_company, incoming, fact), dim_location, dim_date = concurrently(
         spark,
-        lake.read(spark, "dim_date"),
-        run_date - dt.timedelta(days=90),
-        run_date + dt.timedelta(days=180),
+        fact_branch,
+        dimension("dim_location", build_dim_location),
+        calendar,
     )
-    lake.write(dim_date, "dim_date")
-    dim_date = lake.read(spark, "dim_date")
-
-    # --- facts
-    incoming = facts_plan.build_fact_batch(
-        staging, dim_job, dim_company, run_ts, fanout_days
-    )
-    merged_fact = facts_plan.merge_facts(
-        lake.read(spark, "fact_job_posting_daily"), incoming
-    )
-    lake.write(merged_fact, "fact_job_posting_daily", partition_by=["load_month"])
-    fact = lake.read(spark, "fact_job_posting_daily")
 
     bridge = facts_plan.build_bridge(
         fact,
@@ -128,16 +152,19 @@ def run_staging_to_dwh(
 
     if not collect_stats:
         return {"status": "ok", "passed": True}
-    report = validation.validate_warehouse(
-        dim_job, dim_company, dim_location, dim_date, fact, bridge, run_ts
+    report, fact_rows, bridge_rows = concurrently(
+        spark,
+        lambda: validation.validate_warehouse(
+            dim_job, dim_company, dim_location, dim_date, fact, bridge, run_ts
+        ),
+        fact.count,
+        bridge.count,
     )
     report["dim_stats"] = {
-        "dim_job": r_job.stats,
-        "dim_company": r_co.stats,
-        "dim_location": r_loc.stats,
+        t: dim_stats[t] for t in ("dim_job", "dim_company", "dim_location")
     }
-    report["fact_rows"] = fact.count()
-    report["bridge_rows"] = bridge.count()
+    report["fact_rows"] = fact_rows
+    report["bridge_rows"] = bridge_rows
     return report
 
 

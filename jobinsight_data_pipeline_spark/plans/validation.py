@@ -6,7 +6,8 @@ dict; 'critical' failures gate the ETL
 (ref src/etl/staging_to_dwh.py:554-569).
 
 All checks are lazy DataFrame counts — on a cluster they run as a handful
-of small aggregation jobs over the (already partitioned) warehouse.
+of small aggregation jobs over the (already partitioned) warehouse,
+submitted together so the scheduler runs them side by side.
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from jobinsight_data_pipeline_spark.operators.parallelism import concurrently
 
 
 @dataclass
@@ -128,63 +131,75 @@ def validate_warehouse(
     as_of: dt.datetime,
 ) -> dict:
     """V8: assemble the full report; 'passed' is False iff any critical
-    check fails (the reference's severity gate)."""
-    checks = [
-        CheckResult("dup_current_job_keys", "critical", duplicate_current_keys(dim_job, ["job_id"])),
-        CheckResult(
+    check fails (the reference's severity gate). The checks are
+    independent scans, so they run concurrently."""
+    specs = [
+        ("dup_current_job_keys", "critical", lambda: duplicate_current_keys(dim_job, ["job_id"])),
+        (
             "dup_current_company_keys",
             "critical",
-            duplicate_current_keys(dim_company, ["company_name_standardized"]),
+            lambda: duplicate_current_keys(dim_company, ["company_name_standardized"]),
         ),
-        CheckResult(
+        (
             "dup_current_location_keys",
             "critical",
-            duplicate_current_keys(dim_location, ["province", "city", "district"]),
+            lambda: duplicate_current_keys(dim_location, ["province", "city", "district"]),
         ),
-        CheckResult("calendar_gaps", "warning", calendar_gaps(dim_date)),
+        ("calendar_gaps", "warning", lambda: calendar_gaps(dim_date)),
         # facts referencing a CLOSED dim version are expected under SCD2
         # (the reference logs them but never gates — etl_validator.py:104-127);
         # referential integrity against ANY version is the hard invariant.
-        CheckResult("orphan_fact_job_current", "warning", orphaned_facts(fact, dim_job, "job_sk", "job_sk")),
-        CheckResult(
+        (
+            "orphan_fact_job_current",
+            "warning",
+            lambda: orphaned_facts(fact, dim_job, "job_sk", "job_sk"),
+        ),
+        (
             "orphan_fact_job_any",
             "critical",
-            orphaned_facts(fact, dim_job, "job_sk", "job_sk", current_only=False),
+            lambda: orphaned_facts(fact, dim_job, "job_sk", "job_sk", current_only=False),
         ),
-        CheckResult(
+        (
             "orphan_fact_company_current",
             "warning",
-            orphaned_facts(fact, dim_company, "company_sk", "company_sk"),
+            lambda: orphaned_facts(fact, dim_company, "company_sk", "company_sk"),
         ),
-        CheckResult(
+        (
             "orphan_fact_company_any",
             "critical",
-            orphaned_facts(fact, dim_company, "company_sk", "company_sk", current_only=False),
+            lambda: orphaned_facts(fact, dim_company, "company_sk", "company_sk", current_only=False),
         ),
-        CheckResult(
+        (
             "orphan_bridge_location",
             "critical",
-            orphaned_facts(bridge, dim_location, "location_sk", "location_sk", current_only=False),
+            lambda: orphaned_facts(bridge, dim_location, "location_sk", "location_sk", current_only=False),
         ),
-        CheckResult(
+        (
             "orphan_bridge_fact",
             "critical",
-            orphaned_facts(bridge, fact.select("fact_id"), "fact_id", "fact_id", False),
+            lambda: orphaned_facts(bridge, fact.select("fact_id"), "fact_id", "fact_id", False),
         ),
-        CheckResult("dup_fact_grain", "critical", duplicate_fact_grain(fact)),
-        CheckResult("salary_inversions", "warning", salary_inversions(fact)),
-        CheckResult("future_posted_time", "warning", future_posted(fact, as_of)),
-        CheckResult("facts_without_bridge", "warning", facts_without_bridge(fact, bridge)),
-        CheckResult("scd2_overlap_job", "critical", scd2_overlaps(dim_job, ["job_id"])),
-        CheckResult(
+        ("dup_fact_grain", "critical", lambda: duplicate_fact_grain(fact)),
+        ("salary_inversions", "warning", lambda: salary_inversions(fact)),
+        ("future_posted_time", "warning", lambda: future_posted(fact, as_of)),
+        ("facts_without_bridge", "warning", lambda: facts_without_bridge(fact, bridge)),
+        ("scd2_overlap_job", "critical", lambda: scd2_overlaps(dim_job, ["job_id"])),
+        (
             "scd2_overlap_company",
             "critical",
-            scd2_overlaps(dim_company, ["company_name_standardized"]),
+            lambda: scd2_overlaps(dim_company, ["company_name_standardized"]),
         ),
     ]
-    null_report = null_criticals(
-        dim_job.filter(F.col("is_current")), ["title_clean"]
-    ) | null_criticals(dim_location.filter(F.col("is_current")), ["city"])
+    *counts, job_nulls, location_nulls = concurrently(
+        fact.sparkSession,
+        *[run for _, _, run in specs],
+        lambda: null_criticals(dim_job.filter(F.col("is_current")), ["title_clean"]),
+        lambda: null_criticals(dim_location.filter(F.col("is_current")), ["city"]),
+    )
+    checks = [
+        CheckResult(name, severity, n) for (name, severity, _), n in zip(specs, counts)
+    ]
+    null_report = job_nulls | location_nulls
     critical_failures = [c.name for c in checks if c.severity == "critical" and not c.passed]
     return {
         "checks": {c.name: c.failed_count for c in checks},

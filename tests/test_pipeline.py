@@ -66,6 +66,27 @@ def day1_batch(spark):
     return spark.createDataFrame(rows, RAW_JOBS)
 
 
+def day2_batch(spark):
+    return spark.createDataFrame(
+        [
+            # J1 re-crawled with changed title → SCD2 update
+            raw_row("J1", "Staff Python Developer", "công ty tnhh ABC",
+                    "18 - 25 triệu", "Hà Nội", "<div>Hà Nội: Cầu Giấy</div>", "30",
+                    D2, skills=["Python", "SQL"], verified=True,
+                    last_update="Cập nhật 1 giờ trước", posted=dt.datetime(2025, 5, 20)),
+            # J2 identical re-crawl (same tracked cols) → unchanged
+            raw_row("J2", "Data Engineer", "FPT Software",
+                    "1,000 - 2,000 USD", "Hồ Chí Minh & Đà Nẵng",
+                    "<div>Hồ Chí Minh: Q1<br/>Đà Nẵng: Hải Châu</div>", "15",
+                    D2, skills=["Spark"], posted=dt.datetime(2025, 5, 25)),
+            # brand-new job
+            raw_row("J7", "ML Engineer", "AI Labs", "tới 25 triệu", "Hà Nội",
+                    None, "20", D2),
+        ],
+        RAW_JOBS,
+    )
+
+
 def test_full_pipeline_day1(spark, lake):
     report = run_full_pipeline(lake, spark, day1_batch(spark), D1)
     assert report["staging"]["passed"]
@@ -128,24 +149,7 @@ def test_full_pipeline_day1(spark, lake):
 def test_scd2_day2_and_idempotency(spark, lake):
     run_full_pipeline(lake, spark, day1_batch(spark), D1)
 
-    day2 = spark.createDataFrame(
-        [
-            # J1 re-crawled with changed title → SCD2 update
-            raw_row("J1", "Staff Python Developer", "công ty tnhh ABC",
-                    "18 - 25 triệu", "Hà Nội", "<div>Hà Nội: Cầu Giấy</div>", "30",
-                    D2, skills=["Python", "SQL"], verified=True,
-                    last_update="Cập nhật 1 giờ trước", posted=dt.datetime(2025, 5, 20)),
-            # J2 identical re-crawl (same tracked cols) → unchanged
-            raw_row("J2", "Data Engineer", "FPT Software",
-                    "1,000 - 2,000 USD", "Hồ Chí Minh & Đà Nẵng",
-                    "<div>Hồ Chí Minh: Q1<br/>Đà Nẵng: Hải Châu</div>", "15",
-                    D2, skills=["Spark"], posted=dt.datetime(2025, 5, 25)),
-            # brand-new job
-            raw_row("J7", "ML Engineer", "AI Labs", "tới 25 triệu", "Hà Nội",
-                    None, "20", D2),
-        ],
-        RAW_JOBS,
-    )
+    day2 = day2_batch(spark)
     report = run_full_pipeline(lake, spark, day2, D2)
     assert report["dwh"]["passed"], report["dwh"]
     stats = report["dwh"]["dim_stats"]["dim_job"]
@@ -302,3 +306,64 @@ def test_lake_crash_consistency(spark, tmp_path):
     assert lake.read(spark, "t").count() == 20
     # the orphan is still pinnable for forensics until vacuumed
     assert lake.read(spark, "t", version="_v00001").count() == 5
+
+
+TABLES = [
+    "raw_jobs", "staging_jobs", "dim_job", "dim_company", "dim_location",
+    "dim_date", "fact_job_posting_daily", "fact_job_location_bridge",
+]
+
+
+def table_contents(spark, lake) -> dict:
+    """Every table's rows, order-free (the tables are a few dozen rows)."""
+    return {
+        t: sorted(map(tuple, lake.read(spark, t).collect()), key=repr) for t in TABLES
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_day2(spark, tmp_path_factory):
+    """Day 1 then day 2 with no fault, default retention: the tables and
+    the day-2 report."""
+    lake = ParquetLake(str(tmp_path_factory.mktemp("uninterrupted") / "lake"))
+    run_full_pipeline(lake, spark, day1_batch(spark), D1)
+    report = run_full_pipeline(lake, spark, day2_batch(spark), D2)
+    return table_contents(spark, lake), report
+
+
+def test_keep_one_version_runs_two_days(spark, tmp_path, uninterrupted_day2):
+    """With keep_versions=1 a write vacuums the version it replaced; the
+    dim stats read that version, so they must be collected before the
+    write."""
+    lake = ParquetLake(str(tmp_path / "lake"), keep_versions=1)
+    run_full_pipeline(lake, spark, day1_batch(spark), D1)
+    report = run_full_pipeline(lake, spark, day2_batch(spark), D2)
+    _, reference = uninterrupted_day2
+    assert report["dwh"]["passed"], report["dwh"]
+    assert report["dwh"]["dim_stats"] == reference["dwh"]["dim_stats"]
+    assert all(len(lake.versions(t)) == 1 for t in TABLES)
+
+
+def test_failed_run_then_rerun_converges(spark, tmp_path, monkeypatch, uninterrupted_day2):
+    """A fault in one dimension branch fails the run (after its sibling
+    branches finished their writes); re-running the day without the
+    fault lands on the uninterrupted day's tables."""
+    from jobinsight_data_pipeline_spark.plans import pipeline
+
+    lake = ParquetLake(str(tmp_path / "lake"))
+    run_full_pipeline(lake, spark, day1_batch(spark), D1)
+    ingest_raw(lake, day2_batch(spark))
+    run_raw_to_staging(lake, spark, D2)
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("dim_company fault")
+
+    monkeypatch.setattr(pipeline, "build_dim_company", broken)
+    with pytest.raises(RuntimeError, match="dim_company fault"):
+        run_staging_to_dwh(lake, spark, D2)
+    monkeypatch.undo()
+
+    report = run_full_pipeline(lake, spark, day2_batch(spark), D2)
+    assert report["dwh"]["passed"], report["dwh"]
+    tables, _ = uninterrupted_day2
+    assert table_contents(spark, lake) == tables
