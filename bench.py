@@ -166,8 +166,8 @@ def main() -> None:
     def timed(name: str, fn) -> None:
         """Best of two runs into ``timings[name]``, the first run alone
         into ``cold[name]``. The session memo is released first, so run 1
-        rebuilds every memoized gate state (warehouses, fitted models)
-        and run 2 may reuse it. When the two runs disagree by >15% (an
+        rebuilds every memoized gate state (warehouses, fitted models,
+        state built on disk) and run 2 may reuse it. When the two runs disagree by >15% (an
         ambient-load spike hit one of them, or run 2 reused a build), a
         third run arbitrates — r4's +15% drift on unchanged code was
         pure machine noise; this bounds it without tripling every

@@ -65,45 +65,21 @@ def prepare_session(spark: SparkSession) -> None:
     spark._jobinsight_prepared = True  # type: ignore[attr-defined]
 
 
-_SCRATCH_REGISTERED: set[str] = set()
-_SCRATCH_ROOT: str | None = None
-
-
-def scratch_dir(prefix: str, name: str | None = None) -> str:
-    """Gate scratch space that cleans itself up at interpreter exit.
+def scratch_dir(prefix: str) -> str:
+    """A fresh gate scratch dir that cleans itself up at interpreter exit.
 
     Several gates build real on-disk state (lakes, CDC journals, export
     trees, streaming sinks); a bare mkdtemp per invocation accumulates
     in /tmp across every sweep, pytest run, and driver round — cleanup
     must not be earlier than exit, because the returned frames read the
-    files lazily.
-
-    With ``name``, the path is DETERMINISTIC within the process (a
-    named subdir of one per-process mkdtemp root) and reused across
-    invocations — for gates that memoize their built state behind a
-    done-sentinel. Rooting named dirs under mkdtemp (0700, unpredictable)
-    rather than bare ``$TMPDIR/prefix+name`` means a pre-created or
-    symlinked /tmp entry on a multi-user host can neither be followed by
-    the exit-time rmtree nor shadow the gate's state; the dir is also
-    actually CREATED here, so callers can write into it directly. The
-    cleanup handler registers once per path."""
+    files lazily. State reused across calls is built into a scratch dir
+    inside a :func:`memo` build, which memoizes the dir's path."""
     import atexit
-    import os
     import shutil
     import tempfile
 
-    if name is None:
-        d = tempfile.mkdtemp(prefix=prefix)
-    else:
-        global _SCRATCH_ROOT
-        if _SCRATCH_ROOT is None:
-            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="jobinsight_scratch_")
-            atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
-        d = os.path.join(_SCRATCH_ROOT, prefix + name)
-        os.makedirs(d, exist_ok=True)
-    if d not in _SCRATCH_REGISTERED:
-        _SCRATCH_REGISTERED.add(d)
-        atexit.register(shutil.rmtree, d, True)
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
     return d
 
 
@@ -111,21 +87,38 @@ def scratch_dir(prefix: str, name: str | None = None) -> str:
 _MEMO: dict[str, tuple[str, object, object]] = {}
 
 
-def _memo_frames(value) -> list[DataFrame]:
+def _drop(value) -> None:
+    """Free a memoized value's storage now: cached DataFrames are
+    unpersisted and localCheckpointed ones released (``unpersist`` alone
+    leaves checkpoint blocks behind)."""
+    from jobinsight_data_pipeline_spark.operators.components import (
+        _free_local_checkpoint,
+    )
+
     items = value if isinstance(value, (list, tuple)) else [value]
-    return [v for v in items if isinstance(v, DataFrame)]
+    for df in items:
+        if isinstance(df, DataFrame):
+            df.unpersist()
+            _free_local_checkpoint(df)
 
 
 def memo(spark: SparkSession, name: str, arg, build: Callable[[], object]):
     """Return ``build()``'s value for ``(name, arg)``, building it once
     per application.
 
-    Gate state (fitted models, cached warehouses, checkpointed corpora)
-    is deterministic in ``arg``, so reuse is semantically free. Each
-    ``name`` keeps one generation: a new ``arg`` evicts the old value
-    and unpersists any DataFrame in it (a value may be a DataFrame or a
-    list/tuple holding some). A new ``applicationId`` drops every entry
-    untouched — the old context, and its storage, are gone."""
+    Gate state (fitted models, cached warehouses, checkpointed corpora,
+    state built on disk) is deterministic in ``arg``, so reuse is
+    semantically free. A value may be a DataFrame or a list/tuple
+    holding some. On-disk state is built into a fresh
+    ``scratch_dir(prefix)`` inside ``build``, which returns the dir's
+    path; the dir lives until exit, so frames reading it stay valid.
+    A failed build stores nothing, so a retry builds afresh.
+
+    Each ``name`` keeps one generation: a new ``arg`` drops the old
+    value as :func:`release` does, and a frame from the dropped
+    generation must not be used again. A new ``applicationId`` drops
+    every entry untouched — the old context, and its storage, are
+    gone."""
     app = spark.sparkContext.applicationId
     if any(a != app for a, _, _ in _MEMO.values()):
         _MEMO.clear()
@@ -134,28 +127,57 @@ def memo(spark: SparkSession, name: str, arg, build: Callable[[], object]):
         if hit[1] == arg:
             return hit[2]
         del _MEMO[name]
-        for df in _memo_frames(hit[2]):
-            df.unpersist()
+        _drop(hit[2])
     value = build()
     _MEMO[name] = (app, arg, value)
     return value
 
 
 def release(spark: SparkSession) -> None:
-    """Drop every memoized value, freeing its storage now: cached
-    DataFrames are unpersisted and localCheckpointed ones released.
-    Frames handed out by earlier calls must not be used afterwards."""
-    from jobinsight_data_pipeline_spark.operators.components import (
-        _free_local_checkpoint,
-    )
-
+    """Drop every memoized value, freeing its storage now; on-disk
+    state rebuilds into a fresh dir on the next call. Frames handed out
+    by earlier calls must not be used afterwards, except those reading
+    on-disk state."""
     app = spark.sparkContext.applicationId
     for a, _, value in _MEMO.values():
         if a == app:
-            for df in _memo_frames(value):
-                df.unpersist()
-                _free_local_checkpoint(df)
+            _drop(value)
     _MEMO.clear()
+
+
+def streamed_state(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    df: DataFrame,
+    split_col: str,
+    reduce: Callable[[DataFrame], DataFrame],
+) -> str:
+    """The state dir of a ``streaming.incremental.stream_state`` loop
+    over ``df``, memoized as ``(name, sf_dir)``: ``df`` lands as four
+    parquet drops split on ``split_col % 4`` (NULL keys in drop 0, so
+    the drops partition ``df``), each drained as one micro-batch
+    through ``reduce``."""
+    from pyspark.sql import functions as F
+
+    from jobinsight_data_pipeline_spark.streaming.incremental import (
+        stream_state,
+    )
+
+    def build() -> str:
+        base = scratch_dir(f"{name}-")
+        raw = f"{base}/drops"
+        key = F.coalesce(F.col(split_col), F.lit(0))
+        for i in range(4):
+            df.filter(key % 4 == i).coalesce(1).write.mode("append").parquet(
+                raw
+            )
+        stream_state(
+            spark, raw, df.schema, f"{base}/state", f"{base}/ckpt", reduce
+        ).awaitTermination()
+        return f"{base}/state"
+
+    return memo(spark, name, sf_dir, build)
 
 
 def load(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

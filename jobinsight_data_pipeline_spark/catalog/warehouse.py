@@ -972,8 +972,6 @@ def q_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips sign → hash fails); retention at keep_months=5 as of Dec 1
     prunes exactly the 1998-05 partition directory from the export
     (n_exported goes to 0 for May, stays whole elsewhere)."""
-    import tempfile
-
     from jobinsight_data_pipeline_spark.sources.export import (
         export_partitioned,
         restore_partition,
@@ -1060,8 +1058,6 @@ _HTML_FIXTURE = """
 
 
 def q_html_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from jobinsight_data_pipeline_spark.sources.html import read_html_jobs
 
     d = scratch_dir("html-gate-")
@@ -1303,8 +1299,6 @@ UNION ALL SELECT 'null_city', (
 # the parquet-lake equivalent of that file swap).
 # --------------------------------------------------------------------------
 def q_lake_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from jobinsight_data_pipeline_spark.sources.lake import ParquetLake
 
     load(spark, sf_dir, "orders")
@@ -1418,8 +1412,6 @@ FROM orders WHERE mod(o_orderkey, {modulus}) = 0
 
 
 def q_cdc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from jobinsight_data_pipeline_spark.sources.cdc import read_cdc, write_cdc
 
     load(spark, sf_dir, "orders")
@@ -1497,9 +1489,7 @@ def q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream, checkpointing, the foreachBatch handoff — and the merge
     plans it drives. Multi-batch incremental sequencing is gated
     separately by ``warehouse_incremental``; both drops here drain in one
-    deterministic micro-batch (maxFilesPerTrigger ≥ file count)."""
-    import tempfile
-
+    deterministic micro-batch (16 files per batch ≥ file count)."""
     from jobinsight_data_pipeline_spark.schemas import RAW_JOBS
     from jobinsight_data_pipeline_spark.sources.lake import ParquetLake
     from jobinsight_data_pipeline_spark.streaming.incremental import (

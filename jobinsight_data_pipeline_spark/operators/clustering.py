@@ -512,7 +512,7 @@ def gram_partials(
     index and the exact BIGINT partial sum over this input. Gram sums
     COMMUTE, so partials over shards/micro-batches merge by plain
     addition per ``k`` (the CMS/first-seen mergeable-state family; see
-    streaming/incremental.stream_gram_build). ≤ dim(dim+1)/2 rows
+    streaming/incremental.stream_state). ≤ dim(dim+1)/2 rows
     whatever the input size."""
     pairs = F.expr(
         f"flatten(transform(sequence(0, {dim - 1}), i -> "

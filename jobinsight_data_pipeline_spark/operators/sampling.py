@@ -858,7 +858,7 @@ def dsir_bin_counts(feats: DataFrame) -> DataFrame:
     """Per-bucket pool counts ``(__b, c_t, c_r)`` — ``buckets`` rows
     however large the corpus. Plain integer sums, so partials over
     shards/micro-batches MERGE by addition per bucket (the mergeable-
-    state family; see streaming/incremental.stream_dsir_build)."""
+    state family; see streaming/incremental.stream_state)."""
     return feats.groupBy("__b").agg(
         F.sum(F.when(F.col("__tgt"), 1).otherwise(0)).alias("c_t"),
         F.sum(F.when(F.col("__tgt"), 0).otherwise(1)).alias("c_r"),

@@ -219,8 +219,9 @@ def ohlc_partials(
     merges by min/max/sum (argmin rides in the struct), so partials
     from shards, days, or micro-batches combine into exact bars with
     :func:`merge_ohlc_partials`. ``ohlc_bars`` ≡ merge(partials) by
-    construction (pinned by test and by the stream_ohlc shared-oracle
-    gate)."""
+    construction (pinned by test and by the stream_ohlc gate, which
+    streams these partials through ``stream_state`` under the batch
+    oracle)."""
     if width_micros < 1:
         raise ValueError("ohlc_partials: width_micros must be >= 1")
     m, v, tb = F.col(micros_col), F.col(cents_col), F.col(tiebreak_col)

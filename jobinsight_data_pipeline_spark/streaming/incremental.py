@@ -20,9 +20,46 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from jobinsight_data_pipeline_spark.schemas import RAW_JOBS
 from jobinsight_data_pipeline_spark.sources.lake import ParquetLake
+
+
+def _drops(
+    spark: SparkSession,
+    path: str,
+    schema=None,
+    fmt: str = "parquet",
+    files_per_batch: int = 1,
+) -> DataFrame:
+    """The file-drop source every streaming loop reads: the files landing
+    in ``path``, ``files_per_batch`` per micro-batch. One file per batch
+    is the default, so cross-batch state is actually exercised."""
+    reader = spark.readStream.format(fmt).option(
+        "maxFilesPerTrigger", files_per_batch
+    )
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.load(path)
+
+
+def _drain(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    handle: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """The one micro-batch driver: run ``handle(batch, epoch_id)`` on each
+    micro-batch of ``stream`` under ``checkpoint_dir``, draining what is
+    there and stopping (the availableNow trigger — testable and
+    cron-compatible). The handler applies batch operators to the batch,
+    the same plans batch mode runs."""
+    return (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_raw_ingest(
@@ -32,26 +69,16 @@ def stream_raw_ingest(
     checkpoint_dir: str,
     run_ts: dt.datetime,
     process_dwh: bool = True,
-    available_now: bool = True,
     dwh_stats: bool = True,
-):
-    """Stream crawler output (parquet drops in ``raw_dir``) into the
-    warehouse: each micro-batch runs ingest → staging derive → dim/fact
-    merges via the batch plans (idempotent, so at-least-once is safe).
-
-    ``available_now=True`` drains existing files and stops — the testable
-    / cron-compatible trigger; False runs continuously.
-    """
+) -> StreamingQuery:
+    """Stream crawler output (parquet drops in ``raw_dir``, 16 files per
+    micro-batch) into the warehouse: each micro-batch runs ingest →
+    staging derive → dim/fact merges via the batch plans (idempotent, so
+    at-least-once is safe)."""
     from jobinsight_data_pipeline_spark.plans.pipeline import (
         ingest_raw,
         run_raw_to_staging,
         run_staging_to_dwh,
-    )
-
-    stream = (
-        spark.readStream.schema(RAW_JOBS)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(raw_dir)
     )
 
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
@@ -64,14 +91,8 @@ def stream_raw_ingest(
                 lake, batch.sparkSession, run_ts, collect_stats=dwh_stats
             )
 
-    writer = (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = _drops(spark, raw_dir, RAW_JOBS, files_per_batch=16)
+    return _drain(stream, checkpoint_dir, handle_batch)
 
 
 def windowed_event_counts(
@@ -109,8 +130,7 @@ def stream_dedup(
     key_cols: list[str],
     ts_col: str = "ts",
     watermark: str = "365 days",
-    max_files_per_trigger: int = 1,
-):
+) -> StreamingQuery:
     """Exactly-once streaming deduplication with BOUNDED state — the
     streaming twin of operators/dedup.exact_dedup.
 
@@ -120,15 +140,10 @@ def stream_dedup(
     is the scale-correct choice: duplicates in real pipelines arrive
     close together, so state size tracks the lateness bound, not history).
     Rows flow to a native parquet file sink in append mode; the
-    checkpoint makes re-runs exactly-once. ``max_files_per_trigger=1``
-    forces one micro-batch per dropped file so cross-batch duplicate
-    state is actually exercised.
+    checkpoint makes re-runs exactly-once. One micro-batch per dropped
+    file, so cross-batch duplicate state is actually exercised.
     """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
+    stream = _drops(spark, raw_dir, schema)
     deduped = stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         key_cols
     )
@@ -148,8 +163,7 @@ def stream_jsonl_ingest(
     schema,
     sink_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-):
+) -> StreamingQuery:
     """Streaming crawl ingestion from JSON-Lines drops — the streaming
     twin of ``sources/jsonl.read_jsonl``: a text readStream parsed with
     the SAME permissive ``from_json`` + corrupt-record options, landing
@@ -160,9 +174,9 @@ def stream_jsonl_ingest(
     retry (a clean/quarantine two-sink split via foreachBatch would
     demote both to at-least-once).
 
-    Blank lines are skipped like the json datasource does.
-    ``max_files_per_trigger=1`` gives one micro-batch per dropped shard,
-    the cross-batch behavior tests want exercised."""
+    Blank lines are skipped like the json datasource does. One
+    micro-batch per dropped shard, the cross-batch behavior tests want
+    exercised."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     full = StructType(
@@ -174,9 +188,7 @@ def stream_jsonl_ingest(
         {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
     )
     stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(raw_dir)
+        _drops(spark, raw_dir, fmt="text")
         .filter(F.length(F.trim(F.col("value"))) > 0)
         .select(parsed.alias("_p"))
         .select("_p.*")
@@ -205,8 +217,7 @@ def stream_incremental_dedup(
     shingle_n: int = 3,
     hash_mode: str = "xxhash64",
     record: str = "kept",
-    max_files_per_trigger: int = 1,
-):
+) -> StreamingQuery:
     """Day-N corpus dedup as a streaming loop — the streaming twin of
     ``operators/dedup.incremental_dedup``: each micro-batch is classified
     against the persisted state (exact content hash + minhash band
@@ -273,17 +284,7 @@ def stream_incremental_dedup(
         finally:
             classified.unpersist()
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(_drops(spark, raw_dir, schema), checkpoint_dir, _process)
 
 
 def stream_unigram_encode(
@@ -296,8 +297,7 @@ def stream_unigram_encode(
     pmax: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
-):
+) -> StreamingQuery:
     """Day-N tokenization as a streaming loop — the serving half of the
     unigram tokenizer-artifact lifecycle (operators/unigram.save_model /
     load_model): each micro-batch of documents is Viterbi-encoded with
@@ -342,17 +342,7 @@ def stream_unigram_encode(
         )
         out.write.mode("append").parquet(sink_dir)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(_drops(spark, raw_dir, schema), checkpoint_dir, _process)
 
 
 def stream_semantic_dedup(
@@ -367,8 +357,7 @@ def stream_semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     record: str = "kept",
-    max_files_per_trigger: int = 1,
-):
+) -> StreamingQuery:
     """Embedding day-N dedup as a streaming loop — the SemDeDup twin of
     :func:`stream_incremental_dedup`: each micro-batch of vectors is
     classified against the persisted cell state
@@ -423,176 +412,49 @@ def stream_semantic_dedup(
         finally:
             classified.unpersist()
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(_drops(spark, raw_dir, schema), checkpoint_dir, _process)
 
 
-def stream_cms_build(
+def stream_state(
     spark: SparkSession,
     raw_dir: str,
     schema,
     state_dir: str,
     checkpoint_dir: str,
-    keys_of: Callable[[DataFrame], DataFrame],
-    key_col: str = "key",
-    depth: int = 4,
-    width: int = 1024,
-    salt: str = "",
-    max_files_per_trigger: int = 1,
-):
-    """Streaming count-min sketch: each micro-batch's keys
-    (``keys_of(batch)``, e.g. a tokenize-explode) sketch into a
-    ``depth×width`` cell table written to ``state_dir/batch=<epoch>``,
-    and the corpus-wide sketch is the cell-wise SUM over all batch
-    partitions (``operators/sketches.cms_build`` mergeability — proven
-    by test, pinned by the shared-oracle gate).
+    reduce: Callable[[DataFrame], DataFrame],
+) -> StreamingQuery:
+    """Mergeable streaming state: each micro-batch of the parquet drops
+    in ``raw_dir`` reduces to ``reduce(batch)`` — a batch operator's
+    partial state (sketch cells, histogram or bin counts, Gram partials,
+    per-key minima, sample candidates), sized by the operator rather
+    than the batch — written to ``state_dir/batch=<epoch>``. The live
+    state is the operator's merge over ``spark.read.parquet(state_dir)``.
 
-    This is the streaming aggregation shape mergeable sketches were
-    built for, and it is EXACTLY-once without a merge sink: the
-    per-batch write overwrites its own ``batch=<epoch>`` partition, so
-    a foreachBatch replay is idempotent (contrast the documented
-    at-least-once caveat on ``stream_incremental_dedup``'s append
-    sink); batch order is irrelevant because cell sums commute. State
-    per batch is ≤ depth×width rows regardless of batch size — a
-    billion-token day and a thousand-token day cost the same bytes.
-    """
-    from jobinsight_data_pipeline_spark.operators.sketches import cms_build
+    Replay idempotence: each epoch overwrites its own ``batch=<epoch>``
+    partition, so a replayed foreachBatch rewrites the same rows and
+    the loop is exactly-once without a merge sink (contrast the append
+    sinks of :func:`stream_incremental_dedup`). The merge commutes
+    (sum, min, max, distinct ∪ → top-n), so batch order is irrelevant
+    and the merged state equals the batch operator over everything
+    ingested — the streaming ≡ batch pin the stream_* gates share
+    their batch twins' oracles for."""
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        cells = cms_build(keys_of(batch_df), key_col, depth, width, salt)
-        cells.write.mode("overwrite").parquet(
+        reduce(batch_df).write.mode("overwrite").parquet(
             f"{state_dir}/batch={epoch_id}"
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(_drops(spark, raw_dir, schema), checkpoint_dir, _process)
 
 
 def read_cms_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Merge a ``stream_cms_build`` state dir into one sketch: cell-wise
-    sum across the batch partitions (row_idx, bucket, cnt)."""
+    """Merge a count-min ``stream_state`` dir (``sketches.cms_build``
+    per batch) into one sketch: cell-wise sum across the batch
+    partitions (row_idx, bucket, cnt)."""
     return (
         spark.read.parquet(state_dir)
         .groupBy("row_idx", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def stream_histogram_build(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    value_col: str = "value",
-    group_col: str = "event_type",
-    lo: float = 0.0,
-    hi: float = 1024.0,
-    buckets: int = 256,
-    max_files_per_trigger: int = 1,
-):
-    """Streaming fixed-grid histogram — the EIGHTH mergeable-state
-    shape (quantiles): each micro-batch reduces to its
-    ``(group, bucket, cnt)`` histogram (operators/sketches.
-    histogram_state) written to ``state_dir/batch=<epoch>``, and the
-    corpus-wide histogram is the cell-wise SUM over all batch
-    partitions — from which any quantile extracts at grid resolution
-    (histogram_quantiles) without ever re-sorting history. Same
-    exactly-once discipline as ``stream_cms_build``: the per-batch
-    write overwrites its own partition (replay-idempotent), batch
-    order is irrelevant because cell sums commute, and state per batch
-    is ≤ groups × K rows regardless of batch size. This is the
-    percentile-drift monitor a 100-TB text pipeline runs per drop
-    (doc-length / quality-score percentiles) at fixed state cost."""
-    from jobinsight_data_pipeline_spark.operators.sketches import (
-        histogram_state,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        cells = histogram_state(
-            batch_df, value_col, group_col, lo, hi, buckets
-        )
-        cells.write.mode("overwrite").parquet(
-            f"{state_dir}/batch={epoch_id}"
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_histogram_state(
-    spark: SparkSession, state_dir: str, group_col: str = "event_type"
-) -> DataFrame:
-    """Merge a ``stream_histogram_build`` state dir into one histogram:
-    cell-wise sum across the batch partitions."""
-    from jobinsight_data_pipeline_spark.operators.sketches import (
-        histogram_merge,
-    )
-
-    return histogram_merge(spark.read.parquet(state_dir), group_col)
-
-
-def stream_first_seen(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "user_id",
-    ts_col: str = "ts",
-    max_files_per_trigger: int = 1,
-):
-    """Streaming per-user first-seen state — the min-mergeable twin of
-    ``stream_cms_build``: each micro-batch reduces to (id, min ts) and
-    writes its own ``batch=<epoch>`` partition (overwrite → replay-
-    IDEMPOTENT, true exactly-once); the corpus-wide first-seen table is
-    the per-id MIN across partitions, exact on any batch order because
-    min commutes. This is the state behind incremental cohort
-    assignment, new-user counting, and first-touch attribution over an
-    unbounded stream — per batch it costs ≤ distinct-ids rows."""
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.groupBy(id_col).agg(F.min(ts_col).alias(ts_col)).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -602,8 +464,8 @@ def read_first_seen(
     id_col: str = "user_id",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Merge a ``stream_first_seen`` state dir: per-id min across the
-    batch partitions."""
+    """Merge a first-seen ``stream_state`` dir (per-batch (id, min ts))
+    into the per-id min across the batch partitions."""
     return (
         spark.read.parquet(state_dir)
         .groupBy(id_col)
@@ -611,105 +473,13 @@ def read_first_seen(
     )
 
 
-def stream_ohlc(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    micros_expr: str,
-    key_cols: list[str],
-    cents_expr: str,
-    tiebreak_col: str,
-    width_micros: int,
-    max_files_per_trigger: int = 1,
-):
-    """Streaming OHLC candles — the third mergeable-state shape beside
-    the sum-merged CMS and the min-merged first-seen: each micro-batch
-    writes its OHLC PARTIALS (argmin/argmax structs + n/high/low) to
-    its own ``batch=<epoch>`` partition (overwrite → replay-idempotent,
-    true exactly-once), and final bars are ``merge_ohlc_partials`` over
-    the state — exact on any batch order because every field merges by
-    min/max/sum. State per batch is bars-sized, not event-sized."""
-    from jobinsight_data_pipeline_spark.operators.timeseries import (
-        ohlc_partials,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        base = batch_df.selectExpr(
-            f"{micros_expr} AS m",
-            *key_cols,
-            f"{cents_expr} AS cents",
-            tiebreak_col,
-        )
-        ohlc_partials(
-            base, "m", key_cols, "cents", tiebreak_col, width_micros
-        ).write.mode("overwrite").parquet(f"{state_dir}/batch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_gram_build(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale: int = 10**6,
-    max_files_per_trigger: int = 1,
-):
-    """Streaming Gram-matrix state — the sum-mergeable PCA twin of
-    ``stream_cms_build``: each micro-batch of vectors reduces to its
-    flattened-upper-triangle Gram partials (operators/clustering.
-    gram_partials — exact BIGINT, ≤ dim(dim+1)/2 rows whatever the
-    batch size) written to ``state_dir/batch=<epoch>`` (overwrite →
-    replay-IDEMPOTENT, true exactly-once); the corpus Gram is the
-    per-cell SUM across partitions, exact on any batch order because
-    integer sums commute — so a power-iteration fit over the merged
-    state is BIT-IDENTICAL to the batch fit (the streaming ≡ batch pin
-    the stream_pca gate shares O_PCA_POWER for). This is how a
-    continuously-ingested corpus keeps covariance/whitening state
-    without ever rescanning history."""
-    from jobinsight_data_pipeline_spark.operators.clustering import (
-        gram_partials,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        gram_partials(batch_df, vec_col, dim, scale).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_gram_state(
     spark: SparkSession, state_dir: str, dim: int = 64
 ) -> list[list[int]]:
-    """Merge a ``stream_gram_build`` state dir into the full symmetric
-    Gram matrix: per-cell sum across batch partitions (model-sized
-    collect), mirrored from the stored upper triangle."""
+    """Merge a Gram ``stream_state`` dir (``clustering.gram_partials``
+    per batch) into the full symmetric Gram matrix: per-cell sum across
+    batch partitions (model-sized collect), mirrored from the stored
+    upper triangle."""
     from jobinsight_data_pipeline_spark.operators.clustering import (
         _triangle_to_matrix,
     )
@@ -723,61 +493,10 @@ def read_gram_state(
     return _triangle_to_matrix({r["k"]: r["g"] for r in rows}, dim)
 
 
-def stream_dsir_build(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    target_expr: str = "source IN ('src0', 'src1')",
-    buckets: int = 512,
-    salt: str = "dsir:",
-    max_files_per_trigger: int = 1,
-):
-    """Streaming DSIR estimator state — the fifth mergeable-state shape
-    (sum-merged bin counts): each micro-batch of documents reduces to
-    its per-bucket (c_t, c_r) feature counts (operators/sampling.
-    dsir_bin_counts — ≤ `buckets` rows whatever the batch size) written
-    to ``state_dir/batch=<epoch>`` (overwrite → replay-IDEMPOTENT, true
-    exactly-once); the corpus-wide bin table is the per-bucket SUM
-    across partitions, exact on any batch order because integer counts
-    commute — so selection against the merged state is BIT-IDENTICAL to
-    the batch estimator (the stream_dsir gate shares O_DSIR_SELECT
-    verbatim). This is how a continuously-ingested corpus keeps its
-    importance-estimator state without rescanning history; only the
-    final scoring pass reads documents again."""
-    from jobinsight_data_pipeline_spark.operators.sampling import (
-        dsir_bin_counts,
-        dsir_features,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        feats = dsir_features(
-            batch_df, id_col, text_col, F.expr(target_expr), buckets, salt
-        )
-        dsir_bin_counts(feats).write.mode("overwrite").parquet(
-            f"{state_dir}/batch={epoch_id}"
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_dsir_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Merge a ``stream_dsir_build`` state dir into one bin-count
-    table: per-bucket sums across the batch partitions (__b, c_t,
-    c_r)."""
+    """Merge a DSIR ``stream_state`` dir (``sampling.dsir_bin_counts``
+    per batch) into one bin-count table: per-bucket sums across the
+    batch partitions (__b, c_t, c_r)."""
     return (
         spark.read.parquet(state_dir)
         .groupBy("__b")
@@ -785,231 +504,12 @@ def read_dsir_state(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
-def stream_word_counts(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    max_files_per_trigger: int = 1,
-):
-    """Streaming corpus word-frequency state — the simplest sum-merged
-    shape of all: each micro-batch reduces to its (w, c) lowercased
-    word counts (vocabulary-bounded whatever the batch size) written to
-    ``state_dir/batch=<epoch>`` (overwrite → replay-IDEMPOTENT, true
-    exactly-once); the corpus table is the per-word SUM across
-    partitions, exact on any batch order. This is the state a
-    continuously-ingested corpus derives its TOKENIZER VOCABULARY from
-    without rescanning history — the stream_wordpiece gate pins that a
-    WordPiece inventory built from merged state encodes bit-identically
-    to the batch derivation (shared oracle)."""
-    from jobinsight_data_pipeline_spark.operators.wordpiece import (
-        corpus_words,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        corpus_words(batch_df, text_col).write.mode("overwrite").parquet(
-            f"{state_dir}/batch={epoch_id}"
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_word_count_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Merge a ``stream_word_counts`` state dir into one ``(w, c)``
-    frequency table: per-word sums across the batch partitions."""
+    """Merge a word-count ``stream_state`` dir (``wordpiece.corpus_words``
+    per batch) into one ``(w, c)`` frequency table: per-word sums
+    across the batch partitions."""
     return (
         spark.read.parquet(state_dir)
         .groupBy("w")
         .agg(F.sum("c").alias("c"))
-    )
-
-
-def stream_hll_build(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "doc_id",
-    buckets: int = 64,
-    salt: str = "hll:",
-    max_files_per_trigger: int = 1,
-):
-    """Streaming cardinality state — the MAX-merged shape (the sixth,
-    see operators/sketches.hll_registers): each micro-batch reduces to
-    its ≤ ``buckets``-row HLL register table written to
-    ``state_dir/batch=<epoch>`` (overwrite → replay-IDEMPOTENT; max is
-    additionally idempotent under re-delivery, the strongest replay
-    story of the state family); the live register table is the
-    per-bucket MAX across partitions, exact on any batch order — so
-    distinct-key tracking over a continuously-ingested corpus never
-    rescans history and never shuffles raw keys."""
-    from jobinsight_data_pipeline_spark.operators.sketches import (
-        hll_registers,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        hll_registers(batch_df, key_col, buckets, salt).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_hll_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Merge a ``stream_hll_build`` state dir into one register table:
-    per-bucket MAX across the batch partitions."""
-    from jobinsight_data_pipeline_spark.operators.sketches import hll_merge
-
-    return hll_merge(spark.read.parquet(state_dir))
-
-
-def stream_reservoir_build(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "doc_id",
-    weight_col: str = "n_chars",
-    n: int = 25,
-    salt: str = "ws:",
-    max_files_per_trigger: int = 1,
-):
-    """Streaming weighted-reservoir state — the K-MAX-PRIORITY merged
-    shape (the seventh; see operators/sampling.reservoir_state): each
-    micro-batch reduces to its ≤ n-row A-ES candidate table written to
-    ``state_dir/batch=<epoch>`` (overwrite → replay-idempotent, and the
-    deterministic priorities make re-delivered candidates IDENTICAL
-    rows that the merge's distinct absorbs). The merged draw is
-    bit-identical to the batch ``weighted_sample_exact_n`` over
-    everything ingested — a weighted corpus sample maintained forever
-    at ≤ n rows of state per batch, never rescanning history."""
-    from jobinsight_data_pipeline_spark.operators.sampling import (
-        reservoir_state,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        reservoir_state(
-            batch_df, key_col, weight_col, n, salt
-        ).write.mode("overwrite").parquet(f"{state_dir}/batch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_stratified_reservoir_build(
-    spark: SparkSession,
-    raw_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    stratum_cols: list[str],
-    key_col: str = "doc_id",
-    n_per_stratum: int = 7,
-    salt: str = "",
-    max_files_per_trigger: int = 1,
-):
-    """Streaming stratified-sample state — the per-GROUP face of the
-    k-extreme merged shape (operators/sampling.
-    stratified_reservoir_state): each micro-batch reduces to ≤ strata×n
-    candidate rows in ``state_dir/batch=<epoch>`` (overwrite →
-    replay-idempotent; deterministic hash order makes re-delivered
-    candidates identical rows the merge's distinct absorbs). The merged
-    pick is bit-identical to the batch stratified_sample_exact over
-    everything ingested — an exactly-N-per-stratum eval panel
-    maintained forever without rescanning history."""
-    from jobinsight_data_pipeline_spark.operators.sampling import (
-        stratified_reservoir_state,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        stratified_reservoir_state(
-            batch_df, stratum_cols, key_col, n_per_stratum, salt
-        ).write.mode("overwrite").parquet(f"{state_dir}/batch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_stratified_reservoir_state(
-    spark: SparkSession,
-    state_dir: str,
-    stratum_cols: list[str],
-    key_col: str = "doc_id",
-    n_per_stratum: int = 7,
-    salt: str = "",
-) -> DataFrame:
-    """Merge a ``stream_stratified_reservoir_build`` state dir into the
-    final exactly-N-per-stratum pick (bit-identical to the batch
-    stratified_sample_exact — the shared-oracle pin)."""
-    from jobinsight_data_pipeline_spark.operators.sampling import (
-        stratified_reservoir_sample,
-    )
-
-    return stratified_reservoir_sample(
-        spark.read.parquet(state_dir),
-        stratum_cols,
-        key_col,
-        n_per_stratum,
-        salt,
-    )
-
-
-def read_reservoir_state(
-    spark: SparkSession,
-    state_dir: str,
-    key_col: str = "doc_id",
-    weight_col: str = "n_chars",
-    n: int = 25,
-) -> DataFrame:
-    """Merge a ``stream_reservoir_build`` state dir into the final
-    ranked draw (distinct ∪ → top-n → rank; bit-identical to the batch
-    weighted_sample_exact_n — the shared-oracle pin)."""
-    from jobinsight_data_pipeline_spark.operators.sampling import (
-        reservoir_sample,
-    )
-
-    return reservoir_sample(
-        spark.read.parquet(state_dir), key_col, weight_col, n
     )

@@ -4797,7 +4797,8 @@ def test_dsir_resample_structure_and_positive_shift(spark):
 
 def test_gram_partials_merge_equals_direct(spark):
     """Gram partials over arbitrary shards sum-merge to the direct
-    full-input Gram — the commutativity stream_gram_build rests on."""
+    full-input Gram — the commutativity stream_pca's stream_state
+    loop rests on."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -4905,8 +4906,8 @@ def test_deflate_gram_finds_second_component():
 
 def test_word_count_partials_merge_equals_direct(spark):
     """Per-shard corpus_words tables sum-merge to the direct full-corpus
-    table — the commutativity stream_word_counts (and the vocabulary
-    derived from its merged state) rests on."""
+    table — the commutativity stream_wordpiece's stream_state loop
+    (and the vocabulary derived from its merged state) rests on."""
     from pyspark.sql import functions as F
 
     from jobinsight_data_pipeline_spark.operators.wordpiece import (

@@ -9,6 +9,8 @@ info, as in test_checkpoint_lifetime.
 
 from __future__ import annotations
 
+import os
+
 from jobinsight_data_pipeline_spark import catalog
 from jobinsight_data_pipeline_spark.catalog import memo, release
 
@@ -48,6 +50,22 @@ def test_new_arg_unpersists_the_old_generation(spark):
     assert _is_cached(new)
     release(spark)
     assert not _is_cached(new)
+
+
+def test_eviction_frees_local_checkpoint_storage(spark):
+    """A new arg drops the old generation as ``release`` does: its
+    localCheckpoint blocks (which ``unpersist`` alone leaves behind)
+    are freed at eviction, not left until the context ends."""
+    release(spark)
+    before = _stored_rdds(spark)
+    memo(
+        spark, "test_evict_ckpt", "sf_a",
+        lambda: spark.range(1000).localCheckpoint(eager=True),
+    )
+    assert _stored_rdds(spark) == before + 1
+    memo(spark, "test_evict_ckpt", "sf_b", lambda: 7)
+    assert _stored_rdds(spark) <= before
+    release(spark)
 
 
 def test_release_returns_storage_to_baseline(spark):
@@ -93,4 +111,29 @@ def test_new_application_drops_entries_untouched(spark):
     assert "test_stale" not in catalog._MEMO
     assert _is_cached(stale)  # dropped, not unpersisted
     stale.unpersist()
+    release(spark)
+
+
+def test_on_disk_gate_state_follows_the_memo(spark):
+    """State a gate builds on disk is memoized like in-memory state:
+    repeat calls read the same dir, ``release`` makes the next call
+    rebuild into a fresh dir, and a frame from before the release still
+    reads its files (dirs are removed only at exit)."""
+    from jobinsight_data_pipeline_spark.catalog.textml import q_stream_hll
+
+    sf = "/root/testdata/sf0.001"
+    first = q_stream_hll(spark, sf)
+    rows = sorted(first.collect())
+    second = q_stream_hll(spark, sf)
+    assert set(second.inputFiles()) == set(first.inputFiles())
+
+    release(spark)
+    third = q_stream_hll(spark, sf)
+
+    def dirs(df):
+        return {os.path.dirname(os.path.dirname(f)) for f in df.inputFiles()}
+
+    assert dirs(third).isdisjoint(dirs(first))
+    assert sorted(third.collect()) == rows
+    assert sorted(first.collect()) == rows
     release(spark)

@@ -354,6 +354,64 @@ def test_stream_dedup_checkpoint_resume_across_runs(spark, tmp_path):
     ) == [1, 2, 3]
 
 
+def test_stream_state_merges_across_restarts(spark, tmp_path):
+    """``stream_state`` writes each micro-batch's reduced state to its own
+    ``batch=<epoch>`` partition: a restart on the same checkpoint adds
+    only the new drop's partition, the merged state equals the reducer
+    over every drop, and a run with no new drops changes nothing."""
+    from jobinsight_data_pipeline_spark.streaming.incremental import (
+        stream_state,
+    )
+
+    raw = str(tmp_path / "drops")
+    state = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "k string, v long"
+    drops = [
+        [("a", 1), ("b", 2)],
+        [("a", 10), ("c", 5)],
+        [("b", 100), ("c", 1), ("d", 7)],
+    ]
+
+    def drop(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(raw)
+
+    def reduce(df):
+        return df.groupBy("k").agg(F.sum("v").alias("v"))
+
+    def run():
+        assert stream_state(
+            spark, raw, schema, state, ckpt, reduce
+        ).awaitTermination(180)
+
+    def snapshot():
+        parts = sorted(p for p in os.listdir(state) if p.startswith("batch="))
+        merged = {
+            r["k"]: r["v"] for r in reduce(spark.read.parquet(state)).collect()
+        }
+        return parts, merged
+
+    drop(drops[0])
+    drop(drops[1])
+    run()
+    assert len(snapshot()[0]) == 2
+    drop(drops[2])
+    run()
+    parts, merged = snapshot()
+    assert len(parts) == 3
+    expected = {
+        r["k"]: r["v"]
+        for r in reduce(
+            spark.createDataFrame([x for d in drops for x in d], schema)
+        ).collect()
+    }
+    assert merged == expected == {"a": 11, "b": 102, "c": 6, "d": 7}
+    run()
+    assert snapshot() == (parts, merged)
+
+
 def test_write_sized_targets_output_file_bytes(spark, tmp_path):
     """Smaller byte targets must yield more, smaller files; the advisory
     conf must be restored afterwards (no session-global side effect)."""
