@@ -31,6 +31,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from jobinsight_data_pipeline_spark.catalog import build_catalog, release
+from jobinsight_data_pipeline_spark.operators.components import free_pins
 from jobinsight_data_pipeline_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -95,7 +96,44 @@ HEADLINE = [
 
 
 def materialize(df) -> None:
+    """Run ``df`` to completion through the noop sink, then free the
+    per-invocation checkpoints its operator pinned (``register_pins``):
+    every timed run would otherwise leave them stored until exit."""
     df.write.format("noop").mode("overwrite").save()
+    free_pins(df)
+
+
+def replicate(docs, emb, m: int):
+    """The ``m``-times scale tier of ``docs`` and ``emb``: replica ``r``
+    of a row takes the id ``id * m + r``, and every whitespace-delimited
+    token of its text gains the suffix ``~r``. Shingling splits on
+    whitespace and keeps ``~`` and digits, so each replica has the base
+    corpus's duplicate structure and no replica shares a shingle with
+    another: the tier holds ``m`` times the base pairs, not ``m - 1``
+    near-copies of every document. Embedding replicas are exact copies
+    (the vector chains timed on them are per-row or per-cell sums)."""
+    from pyspark.sql import functions as F
+
+    from jobinsight_data_pipeline_spark.operators.textstats import tokens
+
+    reps = docs.sparkSession.range(m).select(F.col("id").alias("_rep"))
+    suffix = F.concat(F.lit("~"), F.col("_rep").cast("string"))
+    text = F.array_join(
+        F.transform(
+            F.filter(tokens("text"), lambda w: w != ""),
+            lambda w: F.concat(w, suffix),
+        ),
+        " ",
+    )
+    docs_m = docs.crossJoin(reps).select(
+        (F.col("doc_id") * m + F.col("_rep")).alias("doc_id"),
+        text.alias("text"),
+        "source",
+    )
+    emb_m = emb.crossJoin(reps).select(
+        (F.col("vec_id") * m + F.col("_rep")).alias("vec_id"), "embedding"
+    )
+    return docs_m, emb_m
 
 
 def main() -> None:
@@ -333,8 +371,8 @@ def main() -> None:
         select_until_budget,
     )
 
-    wide_docs = widen_for_cpu(docs)
-    timed("bpe_encode", lambda: materialize(bpe_encode(wide_docs)))
+    # bpe_encode and bpe_encode_memoized widen their own input
+    timed("bpe_encode", lambda: materialize(bpe_encode(docs)))
     # round-7: the vocab-scale memoized encode (distinct-word table +
     # rank-loop pandas UDF + join-back) at the same 55-merge table —
     # slower here than the direct chain (tiny corpus vocabulary), FLAT
@@ -347,7 +385,7 @@ def main() -> None:
     timed(
         "bpe_memoized",
         lambda: materialize(
-            bpe_encode_memoized(wide_docs, word_encoder="python")
+            bpe_encode_memoized(docs, word_encoder="python")
         ),
     )
 
@@ -408,8 +446,9 @@ def main() -> None:
             # encode.join(scored) shape scanned the corpus twice and
             # paid a join to reunite per-row columns (r12; identical
             # rows — unique doc_id key)
+            # the chain builds its own Column kernel, so it widens here
             _ids = bpe_ids_column("text")
-            wide_docs.select(
+            widen_for_cpu(docs).select(
                 F.col("doc_id"),
                 _ids.alias("ids"),
                 F.size(_ids).alias("n_ids"),
@@ -507,7 +546,7 @@ def main() -> None:
 
     def _kmeans() -> None:
         model = kmeans_fit_quantized(emb, k=8, iterations=4)
-        materialize(kmeans_assign(widen_for_cpu(emb), model))
+        materialize(kmeans_assign(emb, model))
 
     timed("kmeans_fit", _kmeans)
 
@@ -708,8 +747,8 @@ def main() -> None:
 
     # Opt-in scaling tier (r13, additive): $SPARK_GRAFT_SCALE_MULT >= 2
     # re-times the CPU-parallel chains on an m-times-replicated input
-    # (replica texts/ids made unique so dedup candidate structure stays
-    # representative) as "<name>@x<m>" entries under their own
+    # (`replicate`: per-replica token suffixes, so dedup candidate
+    # structure scales with m) as "<name>@x<m>" entries under their own
     # "scaled_queries" key, left out of "value". sf0.1 is fixed-overhead
     # bound for most entries (56/79 ran as fast at 8 cores as 32 in
     # r12), so structural wins on these chains are invisible in the
@@ -718,18 +757,7 @@ def main() -> None:
     mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "0") or 0)
     scaled: dict[str, float] = {}
     if mult >= 2:
-        reps = spark.range(mult).selectExpr("id AS _rep")
-        docs_m = (
-            docs.crossJoin(reps)
-            .selectExpr(
-                f"doc_id * {mult} + _rep AS doc_id",
-                "concat(text, ' r', CAST(_rep AS STRING)) AS text",
-                "source",
-            )
-        )
-        emb_m = emb.crossJoin(reps).selectExpr(
-            f"vec_id * {mult} + _rep AS vec_id", "embedding"
-        )
+        docs_m, emb_m = replicate(docs, emb, mult)
         timed(
             f"simhash_pairs@x{mult}",
             lambda: materialize(

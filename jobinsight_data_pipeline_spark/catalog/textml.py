@@ -3531,7 +3531,10 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "stream_dsir", sf_dir, docs, "doc_id",
         lambda b: dsir_bin_counts(feats_of(b)),
     )
-    counts = read_dsir_state(spark, state).localCheckpoint(eager=True)
+    counts = memo(
+        spark, "stream_dsir_counts", state,
+        lambda: read_dsir_state(spark, state).localCheckpoint(eager=True),
+    )
     scored = dsir_score_against_counts(
         feats_of(docs), counts, "doc_id", buckets=512
     )
@@ -6457,15 +6460,10 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobinsight_data_pipeline_spark.operators.classifier import (
         with_quality_classification,
     )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
 
     t = load(spark, sf_dir, "documents")
-    # widen: per-token md5 on a single-file corpus otherwise serializes
-    # the whole score pass on one task (~16 s at sf0.1)
     return with_quality_classification(
-        widen_for_cpu(t["documents"]),
+        t["documents"],
         "text",
         CLF_WEIGHTS,
         bias=CLF_BIAS,
@@ -6773,12 +6771,9 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain (_bpe_ids_duck). Ids joined to a scalar at the projection
     boundary (no ARRAY columns cross the gate bridge)."""
     from jobinsight_data_pipeline_spark.operators.bpe import bpe_encode
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
 
     t = load(spark, sf_dir, "documents")
-    enc = bpe_encode(widen_for_cpu(t["documents"]))
+    enc = bpe_encode(t["documents"])
     return enc.select(
         "doc_id",
         F.coalesce("n_ids", F.lit(-1)).alias("n_ids"),
@@ -6869,14 +6864,9 @@ def q_bpe_memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobinsight_data_pipeline_spark.operators.bpe import (
         bpe_encode_memoized,
     )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
 
     t = load(spark, sf_dir, "documents")
-    enc = bpe_encode_memoized(
-        widen_for_cpu(t["documents"]), word_encoder="python"
-    )
+    enc = bpe_encode_memoized(t["documents"], word_encoder="python")
     return enc.select(
         "doc_id",
         F.coalesce("n_ids", F.lit(-1)).alias("n_ids"),
@@ -7419,9 +7409,6 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobinsight_data_pipeline_spark.operators.bpe import (
         bpe_encode_memoized,
     )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.textstats import (
         word_count,
     )
@@ -7433,7 +7420,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents")
     docs = t["documents"]
     bpe = bpe_encode_memoized(
-        widen_for_cpu(docs.select("doc_id", "text")), word_encoder="python"
+        docs.select("doc_id", "text"), word_encoder="python"
     ).select("doc_id", "n_ids")
     uni = (
         unigram_encode(spark, docs, model, pmax=UNIGRAM_PMAX)
@@ -8210,9 +8197,6 @@ def q_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_dedup_state,
         incremental_dedup,
     )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.sampling import (
         select_until_budget,
     )
@@ -8266,15 +8250,14 @@ def q_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("status") == "kept")
             .drop("status")
         )
-        wide = widen_for_cpu(kept)
         scored = with_quality_classification(
-            wide, "text", CLF_WEIGHTS, bias=CLF_BIAS, threshold_micro=0
+            kept, "text", CLF_WEIGHTS, bias=CLF_BIAS, threshold_micro=0
         ).select("doc_id", "score_micro")
         (
-            bpe_encode(wide)
+            bpe_encode(kept)
             .select("doc_id", "n_ids")
             .join(scored, "doc_id")
-            .join(wide.select("doc_id", "source"), "doc_id")
+            .join(kept.select("doc_id", "source"), "doc_id")
             .filter(F.col("score_micro") >= 0)
             .write.parquet(cand_path)
         )
@@ -8395,9 +8378,6 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobinsight_data_pipeline_spark.operators.dedup import (
         build_dedup_state,
     )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.sampling import (
         select_until_budget,
     )
@@ -8509,15 +8489,14 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("status") == "kept")
             .select("doc_id", "text", "source")
         )
-        wide = widen_for_cpu(kept)
         scored = with_quality_classification(
-            wide, "text", CLF_WEIGHTS, bias=CLF_BIAS, threshold_micro=0
+            kept, "text", CLF_WEIGHTS, bias=CLF_BIAS, threshold_micro=0
         ).select("doc_id", "score_micro")
         (
-            bpe_encode(wide)
+            bpe_encode(kept)
             .select("doc_id", "n_ids")
             .join(scored, "doc_id")
-            .join(wide.select("doc_id", "source"), "doc_id")
+            .join(kept.select("doc_id", "source"), "doc_id")
             .filter(F.col("score_micro") >= 0)
             .write.parquet(f"{base}/cand")
         )
@@ -8779,13 +8758,7 @@ def q_bpe_learned_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> str:
         cand_path = scratch_dir("bpelearnedpacks-gate-") + "/cand"
         merges = [(l, r) for l, r, _ in _learned_merges(spark, sf_dir)]
-        from jobinsight_data_pipeline_spark.operators.parallelism import (
-            widen_for_cpu,
-        )
-
-        enc = bpe_encode_memoized(
-            widen_for_cpu(docs), merges, word_encoder="python"
-        )
+        enc = bpe_encode_memoized(docs, merges, word_encoder="python")
         enc.join(docs.select("doc_id", "n_chars"), "doc_id").write.parquet(
             cand_path
         )
@@ -9401,9 +9374,7 @@ def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         flags.write.parquet(f"{base}/flags")
         bpe_encode_memoized(
-            widen_for_cpu(s_final.select("doc_id", "text")),
-            merges,
-            word_encoder="python",
+            s_final.select("doc_id", "text"), merges, word_encoder="python"
         ).write.parquet(f"{base}/enc")
         for c in ckpts:
             _free_local_checkpoint(c)
@@ -13005,15 +12976,12 @@ def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes each profile's hit count independently and replays the
     same first-max tie-break; confidence is exact integer ppm
     (hits*1e6 div tokens), so the whole output value-hashes."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.textstats import (
         with_language_id,
     )
 
     t = load(spark, sf_dir, "documents")
-    docs = widen_for_cpu(t["documents"]).select(
+    docs = t["documents"].select(
         "doc_id", F.expr(_LANGID_FIXTURE_CASE).alias("txt")
     )
     return with_language_id(docs, "txt").select(
@@ -13086,9 +13054,6 @@ def q_langid_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_xor (doc_id, rank, bin) checksum. ONE hash covers the whole
     chain: a drifted language call, a flipped rank, or a mis-binned
     boundary doc all move the manifest."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.sampling import (
         quantile_bins,
     )
@@ -13097,7 +13062,7 @@ def q_langid_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = load(spark, sf_dir, "documents")
-    planted = widen_for_cpu(t["documents"]).select(
+    planted = t["documents"].select(
         "doc_id", "source", "n_chars",
         F.expr(_LANGID_FIXTURE_CASE).alias("txt"),
     )
@@ -13179,15 +13144,12 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-duplicate exposure, language mix — over a planted corpus with
     two boilerplate clusters. ONE hash pins volumes, the dup-count
     join, the language calls, and the deterministic mix rendering."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.profiling import (
         dataset_card,
     )
 
     t = load(spark, sf_dir, "documents")
-    docs = widen_for_cpu(t["documents"]).select(
+    docs = t["documents"].select(
         "doc_id", "source", F.expr(_CARD_CASE).alias("text")
     )
     return dataset_card(docs)
@@ -13268,15 +13230,10 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_assign,
     )
 
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
-
     t = load(spark, sf_dir, "embeddings")
     cents = _kmeans_centroids(spark, sf_dir)
     return kmeans_assign(
-        widen_for_cpu(t["embeddings"]), cents, "embedding",
-        scale=_KMEANS_SCALE,
+        t["embeddings"], cents, "embedding", scale=_KMEANS_SCALE
     ).select("vec_id", "cell", "dist")
 
 
@@ -13289,15 +13246,10 @@ def q_kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_assign,
     )
 
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
-
     t = load(spark, sf_dir, "embeddings")
     cents = _kmeans_centroids(spark, sf_dir)
     assigned = kmeans_assign(
-        widen_for_cpu(t["embeddings"]), cents, "embedding",
-        scale=_KMEANS_SCALE,
+        t["embeddings"], cents, "embedding", scale=_KMEANS_SCALE
     )
     cent_rows = [
         (j, "|".join(str(x) for x in c)) for j, c in enumerate(cents)
@@ -13704,15 +13656,11 @@ def q_kmeans_pp_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobinsight_data_pipeline_spark.operators.clustering import (
         kmeans_assign,
     )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
 
     t = load(spark, sf_dir, "embeddings")
     cents = _kmeans_pp_centroids(spark, sf_dir)
     assigned = kmeans_assign(
-        widen_for_cpu(t["embeddings"]), cents, "embedding",
-        scale=_KMEANS_SCALE,
+        t["embeddings"], cents, "embedding", scale=_KMEANS_SCALE
     )
     cent_rows = [
         (j, "|".join(str(x) for x in c)) for j, c in enumerate(cents)
@@ -13752,15 +13700,11 @@ def q_cluster_balanced_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobinsight_data_pipeline_spark.operators.clustering import (
         kmeans_assign,
     )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
 
     t = load(spark, sf_dir, "embeddings")
     cents = _kmeans_centroids(spark, sf_dir)
     assigned = kmeans_assign(
-        widen_for_cpu(t["embeddings"]), cents, "embedding",
-        scale=_KMEANS_SCALE,
+        t["embeddings"], cents, "embedding", scale=_KMEANS_SCALE
     ).select("vec_id", "cell")
     w = Window.partitionBy("cell").orderBy(
         F.md5(F.concat(F.lit("cb:"), F.col("vec_id").cast("string"))).asc(),

@@ -49,6 +49,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jobinsight_data_pipeline_spark.operators.parallelism import widen_for_cpu
+
 #: asymmetric symbol delimiters (RS / US control chars — reserved: they
 #: are stripped from the input text before encoding)
 _OPEN = "\x1e"
@@ -185,7 +187,10 @@ def bpe_encode(
 ) -> DataFrame:
     """Encode each document to its subword-id stream: (id_col, ids
     array<int>, n_ids) — the shape `materialize_packs` /
-    `select_until_budget` consume. One scan-fused projection."""
+    `select_until_budget` consume. One scan-fused projection, over the
+    input widened to the cluster's cores (the replace chain is CPU per
+    row; a single-split scan would otherwise encode on one task)."""
+    df = widen_for_cpu(df)
     ids = bpe_ids_column(text_col, merges)
     return df.select(
         F.col(id_col), ids.alias("ids"), F.size(ids).alias("n_ids")
@@ -429,6 +434,9 @@ def bpe_encode_memoized(
 
     Set ``broadcast_words=False`` when the vocabulary is too large to
     broadcast (the join falls back to a shuffle join on the word key).
+
+    Both passes read the input widened to the cluster's cores, as
+    :func:`bpe_encode` does.
     """
     from jobinsight_data_pipeline_spark.operators.parallelism import (
         ordered_collect,
@@ -437,6 +445,7 @@ def bpe_encode_memoized(
 
     merges = DEFAULT_MERGES if merges is None else merges
     validate_merges(merges)
+    df = widen_for_cpu(df)
 
     clean = F.regexp_replace(F.col(text_col), f"[{_OPEN}{_CLOSE}]", "")
     toks = F.filter(tokens(clean), lambda w: w != "")
@@ -578,9 +587,6 @@ def learn_bpe_merges(
     """
     from jobinsight_data_pipeline_spark.operators.components import (
         _free_local_checkpoint,
-    )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
     )
     from jobinsight_data_pipeline_spark.operators.textstats import tokens
 

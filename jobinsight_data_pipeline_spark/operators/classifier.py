@@ -34,6 +34,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jobinsight_data_pipeline_spark.operators.parallelism import widen_for_cpu
 from jobinsight_data_pipeline_spark.operators.textstats import tokens
 
 
@@ -113,12 +114,15 @@ def with_quality_classification(
     one scan-fused projection — the corpus-filter step, composable with
     every other textstats signal and pushdown-friendly like any other
     predicate. ``score_col``/``label_col`` are reserved on the input
-    (withColumn silently replaces same-named columns)."""
+    (withColumn silently replaces same-named columns). The input is
+    widened to the cluster's cores first: the per-token md5 fold is CPU
+    per row, and a single-split scan would score on one task."""
     from jobinsight_data_pipeline_spark.operators.sampling import (
         reserve_columns,
     )
 
     reserve_columns(df, [score_col, label_col], "with_quality_classification")
+    df = widen_for_cpu(df)
     score = hashed_linear_score(text_col, weights, bias)
     return df.withColumn(score_col, score).withColumn(
         label_col, F.col(score_col) >= F.lit(int(threshold_micro))

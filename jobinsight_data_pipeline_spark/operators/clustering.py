@@ -415,15 +415,15 @@ def kmeans_assign(
     shift-invariant). Zero shuffles — safe to run over any corpus size.
 
     The fold is interpreted (higher-order function), so cost is CPU per
-    row: parallelism equals input tasks. Over a SINGLE-file parquet,
-    wrap the input in ``widen_for_cpu`` first (deliberately not done
-    here — assignment must stay Exchange-free for callers whose input
-    is already well-partitioned, which a real corpus is)."""
+    row: parallelism equals input tasks. The input is therefore widened
+    to the cluster's cores first — a no-op (no Exchange) on an input
+    that is already well-partitioned, which a real corpus is."""
     from jobinsight_data_pipeline_spark.operators.sampling import (
         reserve_columns,
     )
 
     reserve_columns(df, ["cell", "dist", "__p", "__ds"], "kmeans_assign")
+    df = widen_for_cpu(df)
     shifted = [[x + scale for x in c] for c in centroids]
     # Project the interpreted distance vector ONCE (__ds), then derive
     # cell+dist from the materialized column — _assign_expr would embed

@@ -13,6 +13,21 @@ has thousands of row-group splits and this is a no-op (no shuffle is
 added); at bench/test scale it unlocks the other 31 cores for ~3x wall
 wins on parse-heavy plans (measured on the sf0.1 salary bench: 5.5s →
 1.7s steady-state).
+
+Operators own their scan width: a CPU-dense operator starts with
+``df = widen_for_cpu(df)`` on the caller's own frame, and callers widen
+only Column kernels they build themselves. The probe is
+``df.rdd.getNumPartitions()``:
+
+- over a scan it lists file splits and runs no job;
+- over a frame whose plan holds an Exchange it is EAGER — under AQE,
+  ``df.rdd`` runs the upstream shuffle map stages as a Spark job (one
+  job, 0.14–0.22 s warm on sf0.1 with 4 cores, over a join or over a
+  widened frame with a ``select`` on top);
+- ``DataFrame.rdd`` is a ``cached_property``, so the probe runs once per
+  frame OBJECT: operators handed the same frame (the day-2 gates give
+  one frame to the classifier and to the BPE encoder) pay it once
+  between them, and a second widen of that frame submits no job.
 """
 
 from __future__ import annotations

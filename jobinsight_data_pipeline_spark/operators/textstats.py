@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jobinsight_data_pipeline_spark.operators.parallelism import widen_for_cpu
+
 ColumnOrName = Column | str
 
 
@@ -121,9 +123,11 @@ def with_language_id(
     row (codegen subexpression elimination collapses the repeated
     ``tokens()`` subtree) and each profile contributes a single
     ``size(filter(...))`` lambda — no UDF, no shuffle, linear in corpus
-    bytes, so the operator runs at parquet-scan speed on any corpus size.
-    Ties resolve to the FIRST profile in dict order (stable across
-    engines and partitionings).
+    bytes, so the operator runs at parquet-scan speed on any corpus size
+    (the input is widened to the cluster's cores first, so a
+    single-split scan does not score on one task). Ties resolve to the
+    FIRST profile in dict order (stable across engines and
+    partitionings).
 
     Reference parity: the reference pipeline carries a `lang` column on
     crawled docs but never computes it; this supplies the standard
@@ -137,6 +141,7 @@ def with_language_id(
         df, ["lang_pred", "lang_hits", "lang_conf_ppm", "__n_tokens"],
         "with_language_id",
     )
+    df = widen_for_cpu(df)
     prof = profiles if profiles is not None else LANG_PROFILES
     t = _col(text_col)
     toks = tokens(t)
@@ -291,8 +296,6 @@ def with_repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     (the higher-order fold included); filters built on it (e.g.
     dup_line_frac < 0.3 AND top_bigram_frac < 0.18) push down to the
     scan like any other predicate."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import widen_for_cpu
-
     return (
         widen_for_cpu(df)
         .withColumn("dup_line_frac", duplicate_line_fraction(text_col))
@@ -307,8 +310,6 @@ def with_repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach the full stats block in one narrow projection (widened
     first: the regex battery is CPU-dense scan-stage work)."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import widen_for_cpu
-
     return (
         widen_for_cpu(df).withColumn("n_words", word_count(text_col))
         .withColumn("n_unique_words", unique_word_count(text_col))
@@ -390,8 +391,6 @@ def with_c4_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     'lorem ipsum', no '{', ≥80% alphabetic words, mean word length in
     [3, 10], ≥2 required stopwords). Line-level fractions are emitted as
     signals so callers can re-threshold instead of re-scanning."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import widen_for_cpu
-
     t = F.col(text_col)
     out = (
         widen_for_cpu(df)
@@ -608,7 +607,6 @@ def encode_documents(
     (id, ids: array<int>, n_tokens, n_oov)."""
     from jobinsight_data_pipeline_spark.operators.parallelism import (
         ordered_collect,
-        widen_for_cpu,
     )
 
     # tokenize+explode is CPU-dense scan work — widen when the source's
@@ -671,10 +669,6 @@ def dedup_paragraphs(
     order-pinned reassembly. Returns (id_col, text_col, n_paras,
     n_dropped).
     """
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
-
     if mode not in ("keep_first", "drop_common"):
         raise ValueError(f"unknown dedup_paragraphs mode: {mode!r}")
     if mode == "drop_common" and (max_df is None or max_df < 1):
@@ -777,10 +771,6 @@ def bigram_logprob(
 
     Returns ``(id_col, n_scored, sum_lp_micro)``.
     """
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
-
     arr = F.filter(
         F.transform(tokens(text_col), F.lower), lambda x: x != F.lit("")
     )
@@ -882,10 +872,6 @@ def top_ngrams(
     (TakeOrderedAndProject). Ties break to the lexicographically
     smallest gram so the cut is deterministic. Returns
     (gram, n_docs, n_occurrences) ordered by occurrences desc."""
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
-
     toks = tokens(text_col)
     sz = F.size(toks)
     width = sz - (n - 1)
@@ -1037,10 +1023,6 @@ def token_pmi(
     w_b, pair_n, pmi_micro)``, tie-broken ``(pmi desc, w_a, w_b)``."""
     from pyspark.sql import Window
     from pyspark.sql.functions import broadcast
-
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
 
     base = widen_for_cpu(df.select(F.col(text_col).alias("__text")))
     unis = (

@@ -81,9 +81,6 @@ def bench_only_builders(spark, sf_dir):
         simhash_near_pairs,
         winnow_overlap_pairs,
     )
-    from jobinsight_data_pipeline_spark.operators.parallelism import (
-        widen_for_cpu,
-    )
     from jobinsight_data_pipeline_spark.operators.ranking import bm25_topk
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
@@ -119,7 +116,6 @@ def bench_only_builders(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    wide_docs = widen_for_cpu(docs)
     cb = pq_codebooks()
     cents = unit_centroids(64, 16, seed=11)
     rcb = pq_codebooks(dim=64, m=8, k=16, seed=5)
@@ -200,9 +196,9 @@ def bench_only_builders(spark, sf_dir):
             docs, "doc_id", "text", k=5, window=4, min_shared=2
         ),
         "pq_encode": lambda: pq_encode(emb, cb),
-        "bpe_encode": lambda: bpe_encode(wide_docs),
+        "bpe_encode": lambda: bpe_encode(docs),
         "bpe_memoized": lambda: bpe_encode_memoized(
-            wide_docs, word_encoder="python"
+            docs, word_encoder="python"
         ),
         "incremental_dedup": lambda: incremental_dedup(
             docs.filter("doc_id % 2 = 1"),

@@ -291,9 +291,7 @@ def probes(spark, sf_dir):
             k=10,
             n_probe=4,
         ),
-        "bpe_encode (replace chain)": lambda: _bpe_encode(
-            _widen(docs)
-        ),
+        "bpe_encode (replace chain)": lambda: _bpe_encode(docs),
         "incremental_dedup (day-2 batch)": lambda: _incremental_dedup(
             docs.filter("doc_id % 2 = 1"),
             _build_dedup_state(docs.filter("doc_id % 2 = 0")),
@@ -304,18 +302,16 @@ def probes(spark, sf_dir):
         # (md5-order seed 0 + one D²-weighted A-ES draw — two extra
         # model-sized jobs before Lloyd's)
         "kmeans_pp fit+assign (seed + 4 iter)": lambda: _kmeans_assign(
-            _widen(emb),
+            emb,
             _kmeans_fit(
                 emb, k=8, iterations=4,
                 init_centroids=_kmeans_pp_seeds(emb, k=8),
             ),
         ),
         "kmeans fit+assign (4 iter, integer)": lambda: _kmeans_assign(
-            _widen(emb), _kmeans_fit(emb, k=8, iterations=4)
+            emb, _kmeans_fit(emb, k=8, iterations=4)
         ),
-        "language_id (scan-fused)": lambda: _with_language_id(
-            _widen(docs), "text"
-        ),
+        "language_id (scan-fused)": lambda: _with_language_id(docs, "text"),
         # banded range join: lineitem intervals grow 100x across the
         # probe's SF ladder — the shape that would nested-loop without
         # banding. Points are PER-DAY order aggregates and matches
@@ -447,7 +443,7 @@ def probes(spark, sf_dir):
         # SCALING.md section); one tokenize pass + vocabulary-sized
         # encode + one doc-keyed reassembly shuffle
         "bpe_memoized (rank-loop UDF)": lambda: _bpe_memoized(
-            _widen(docs), word_encoder="python"
+            docs, word_encoder="python"
         ),
         # round-7: windowed re-entry funnel — frontier keys on
         # (user, anchor), so the curve tracks step-1 event volume

@@ -100,3 +100,35 @@ def test_free_pins_is_idempotent_and_safe_on_plain_frames(spark):
     assert len(rows) == 5
     free_pins(top)
     free_pins(top)  # second call: empty list, still safe
+
+
+@pytest.mark.parametrize("rounds", [3])
+def test_bench_materialize_frees_pins(spark, rounds):
+    """bench.py's timed runs go through ``materialize``: it frees the
+    pins of the frame it ran, so repeated runs keep storage flat."""
+    import bench
+    from jobinsight_data_pipeline_spark.operators.ranking import bm25_topk
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    before = _stored_rdds(spark)
+    for _ in range(rounds):
+        bench.materialize(bm25_topk(docs, ["spark", "vector"], k=20))
+    assert _stored_rdds(spark) <= before
+
+
+def test_stream_dsir_counts_memoized(spark):
+    """``q_stream_dsir``'s merged bin table is pinned once per state dir
+    in the session memo: repeated calls keep storage flat, and
+    ``release`` frees it."""
+    from jobinsight_data_pipeline_spark.catalog import release
+    from jobinsight_data_pipeline_spark.catalog.textml import q_stream_dsir
+
+    release(spark)
+    baseline = _stored_rdds(spark)
+    counts = []
+    for _ in range(3):
+        _materialize(q_stream_dsir(spark, SF))
+        counts.append(_stored_rdds(spark))
+    assert counts == [counts[0]] * 3, counts
+    release(spark)
+    assert _stored_rdds(spark) <= baseline

@@ -1,5 +1,6 @@
-"""``operators.parallelism.concurrently``: step-order results, join-before-
-raise on failure, and job-group attribution across the step threads."""
+"""``operators.parallelism``: ``concurrently``'s step-order results,
+join-before-raise on failure and job-group attribution across the step
+threads; ``widen_for_cpu``'s contract."""
 
 from __future__ import annotations
 
@@ -8,9 +9,13 @@ import threading
 import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from jobinsight_data_pipeline_spark.observability import performance_monitor
-from jobinsight_data_pipeline_spark.operators.parallelism import concurrently
+from jobinsight_data_pipeline_spark.operators.parallelism import (
+    concurrently,
+    widen_for_cpu,
+)
 
 _PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
@@ -114,3 +119,47 @@ def test_performance_monitor_counts_step_jobs(spark):
     with performance_monitor(spark, "concurrent", report):
         concurrently(spark, *[lambda: spark.range(10).count() for _ in range(4)])
     assert report[-1]["ok"] and report[-1]["n_jobs"] >= 4
+
+
+def test_widen_adds_one_round_robin_exchange_to_a_single_split_scan(spark):
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    assert docs.rdd.getNumPartitions() == 1  # the fixture is one split
+    target = spark.sparkContext.defaultParallelism
+    wide = widen_for_cpu(docs)
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    (ex,) = [line for line in plan.splitlines() if "Exchange" in line]
+    assert f"RoundRobinPartitioning({target})" in ex, ex
+    assert wide.rdd.getNumPartitions() == target
+
+
+def test_widen_passes_wide_and_streaming_frames_through(spark):
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    wide = widen_for_cpu(docs)
+    assert widen_for_cpu(wide) is wide
+    stream = spark.readStream.format("rate").load()
+    assert widen_for_cpu(stream) is stream
+
+
+def test_second_widen_of_a_frame_submits_no_job(spark):
+    """The partition probe runs the upstream shuffle when the frame
+    holds one, but its result is cached on the frame object: operators
+    handed the same frame (the day-2 gates give one frame to the
+    classifier and to the BPE encoder) probe it once between them."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    grouped = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+    joined = docs.join(grouped, "source")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    prev = {k: sc.getLocalProperty(k) for k in _PROPS}
+    try:
+        sc.setJobGroup("widen-first", "first")
+        first = widen_for_cpu(joined)
+        sc.setJobGroup("widen-second", "second")
+        second = widen_for_cpu(joined)
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    assert tracker.getJobIdsForGroup("widen-first")  # the probe ran a job
+    assert tracker.getJobIdsForGroup("widen-second") == []
+    logical = [w._jdf.queryExecution().logical().toString() for w in (first, second)]
+    assert logical[0] == logical[1]

@@ -392,21 +392,32 @@ def test_dedup_paragraphs_partial_aggregates_not_window(spark):
 
 def test_classifier_inference_is_shuffle_free(spark):
     """Classifier inference must be a pure scan-fused projection: no
-    Exchange, no Generate (explode), no join — the weight table is a
-    parsed literal inside the fold, not a broadcast side."""
+    Generate (explode), no join — the weight table is a parsed literal
+    inside the fold, not a broadcast side. The operator owns its scan
+    width: a single-split input gains exactly the round-robin widen
+    Exchange, an already-wide input none."""
     from jobinsight_data_pipeline_spark.operators.classifier import (
         seeded_int_weights,
         with_quality_classification,
     )
+    from jobinsight_data_pipeline_spark.operators.parallelism import (
+        widen_for_cpu,
+    )
 
     df = spark.read.parquet(f"{SF}/documents.parquet")
-    out = with_quality_classification(
-        df, "text", seeded_int_weights(256, seed=11), bias=7
-    )
-    plan = physical_plan(out)
-    assert "Exchange" not in plan
+    weights = seeded_int_weights(256, seed=11)
+    plan = physical_plan(with_quality_classification(df, "text", weights, bias=7))
+    assert plan.count("Exchange") == 1, plan
+    assert "REPARTITION_BY_NUM" in plan or "RoundRobinPartitioning" in plan
     assert "Generate" not in plan
     assert "Join" not in plan
+
+    wide = widen_for_cpu(df)
+    plan_wide = physical_plan(
+        with_quality_classification(wide, "text", weights, bias=7)
+    )
+    # the caller's one exchange, nothing added by the operator
+    assert plan_wide.count("Exchange") == 1, plan_wide
 
 
 def test_pq_paths_scan_fused(spark):
@@ -585,9 +596,11 @@ def test_ivf_pq_index_partition_prunes_probe_cells(spark, tmp_path):
 def test_kmeans_assign_scan_fused_and_update_single_shuffle(spark):
     """Distributed k-means scale shape (operators/clustering.py):
     assignment against the broadcast literal model is a pure projection
-    (no Exchange/Join — the centroid matrix lives inside the transform
-    fold), and one Lloyd update round is exactly one hash-partitioned
-    partial aggregation over (cell, dim)."""
+    (no Join — the centroid matrix lives inside the transform fold)
+    over its own widened input — one round-robin Exchange on a
+    single-split input, none added on an already-wide one — and one
+    Lloyd update round is exactly one hash-partitioned partial
+    aggregation over (cell, dim)."""
     from pyspark.sql import functions as F
 
     from jobinsight_data_pipeline_spark.operators.clustering import (
@@ -595,12 +608,18 @@ def test_kmeans_assign_scan_fused_and_update_single_shuffle(spark):
         kmeans_assign,
         quantize_shifted,
     )
+    from jobinsight_data_pipeline_spark.operators.parallelism import (
+        widen_for_cpu,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents = [[i * 1000 + j for j in range(64)] for i in range(8)]
     plan = physical_plan(kmeans_assign(emb, cents))
-    assert "Exchange" not in plan
+    assert plan.count("Exchange") == 1, plan
+    assert "REPARTITION_BY_NUM" in plan or "RoundRobinPartitioning" in plan
     assert "Join" not in plan
+    plan_wide = physical_plan(kmeans_assign(widen_for_cpu(emb), cents))
+    assert plan_wide.count("Exchange") == 1, plan_wide
     # one update round: scan-fused assign + posexplode + groupBy agg
     shifted = [[x + 10**6 for x in c] for c in cents]
     q = emb.select(quantize_shifted("embedding").alias("__p"))
