@@ -23,8 +23,9 @@ Fixture construction (deterministic, generated once under
   duplicate and collapse SemDeDup's survivor count to 1/10th — NOT the
   growth shape under test).
 
-Probes run at sf0.1 and the tier (best of 2), so the ratio column is
-the marginal 10x-docs growth ON TOP of the existing SCALING.md curves.
+The probes are scaling_probe's entries of that family, run at sf0.1 and
+the tier through its best-of-2 loop, so the ratio column is the marginal
+10x-docs growth ON TOP of the existing SCALING.md curves.
 
 Usage: python scripts/docs_tier_probe.py [> SCALING.md section]
 """
@@ -33,21 +34,18 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import Ctx
 from jobinsight_data_pipeline_spark.session import get_spark
+from scaling_probe import PROBES, best_of_two
 
 SF01 = "/root/testdata/sf0.1"
 TIER = "/root/repo/.scaling-tier"
 COPIES = 10
 OFF = 1_000_000
 VOCAB_K = 4096
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def ensure_fixture(spark) -> None:
@@ -120,89 +118,16 @@ def ensure_fixture(spark) -> None:
         fh.write("ok")
 
 
-def _corpus_build_prep(spark, sf_dir) -> None:
-    """Untimed reset before a cold corpus_build run: release the session
-    memo so the 12-stage chain rebuilds, then re-memoize the learned-BPE
-    merges it reads (the artifact amortizes, same posture as
-    unigram_encode's pre-trained model)."""
-    from jobinsight_data_pipeline_spark.catalog import release
-    from jobinsight_data_pipeline_spark.catalog.textml import _learned_merges
-
-    release(spark)
-    _learned_merges(spark, sf_dir)
-
-
-def probes(spark, sf_dir):
-    import pyspark.sql.functions as F
-
-    from jobinsight_data_pipeline_spark.catalog.textml import q_corpus_build
-    from jobinsight_data_pipeline_spark.operators.dedup import (
-        exact_dedup,
-        exact_match_spans,
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-    )
-    from jobinsight_data_pipeline_spark.operators.textstats import (
-        tokens as _wp_tokens,
-    )
-    from jobinsight_data_pipeline_spark.operators.unigram import (
-        unigram_encode,
-        unigram_train,
-        words_with_freq,
-    )
-    from jobinsight_data_pipeline_spark.operators.wordpiece import (
-        wordpiece_word_table,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    _um_cache: dict = {}
-
-    def _um_model():
-        if sf_dir not in _um_cache:
-            _um_cache[sf_dir] = unigram_train(
-                spark, words_with_freq(docs), rounds=3, seed_k=80, vocab_k=40
-            )
-        return _um_cache[sf_dir]
-
-    def _wp_fertility():
-        wt = wordpiece_word_table(spark, docs)
-        toks = docs.select(
-            "source",
-            F.explode(F.transform(_wp_tokens("text"), F.lower)).alias("w"),
-        ).where(F.col("w") != "")
-        return (
-            toks.join(wt.select("w", "n_pieces"), "w")
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.sum("n_pieces").alias("n_pieces"),
-            )
-            .withColumn(
-                "fert_milli", F.expr("(1000L * n_pieces) div n_words")
-            )
-        )
-
-    return {
-        "exact_dedup": lambda: exact_dedup(docs, "doc_id", "text"),
-        "ngram_jaccard (capped index join)": lambda: ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5
-        ),
-        "minhash_lsh (banded)": lambda: minhash_lsh_pairs(
-            docs, "doc_id", "text"
-        ),
-        "exact_spans (anchor chains, L=15)": lambda: exact_match_spans(
-            docs, "doc_id", "text", k=8, min_len=15
-        ),
-        "unigram_encode (word-table DP)": lambda: unigram_encode(
-            spark, docs, _um_model()
-        ),
-        "wordpiece_fertility (derive+encode)": _wp_fertility,
-        "corpus_build (12-stage chain, cold)": (
-            lambda: _corpus_build_prep(spark, sf_dir),
-            lambda: q_corpus_build(spark, sf_dir),
-        ),
-    }
+# scaling_probe's entries for the text/dedup/tokenizer family
+NAMES = [
+    "exact_dedup",
+    "ngram_jaccard",
+    "minhash_lsh",
+    "exact_spans",
+    "unigram_encode",
+    "wordpiece_fertility",
+    "corpus_build (12-stage chain, cold)",
+]
 
 
 def main() -> None:
@@ -212,25 +137,15 @@ def main() -> None:
         n = spark.read.parquet(f"{d}/documents.parquet").count()
         print(f"docs at {d}: {n}", file=sys.stderr)
 
-    names = list(probes(spark, SF01))
-    results: dict[str, dict[str, float]] = {n: {} for n in names}
+    results: dict[str, dict[str, float]] = {n: {} for n in NAMES}
     for label, sf_dir in (("sf0.1", SF01), ("tier", TIER)):
-        p = probes(spark, sf_dir)
-        for name, thunk in p.items():
-            # a (prepare, thunk) pair runs prepare untimed before each run
-            prepare, thunk = thunk if isinstance(thunk, tuple) else (None, thunk)
-            best = float("inf")
-            for _ in range(2):
-                if prepare is not None:
-                    prepare()
-                t0 = time.time()
-                materialize(thunk())
-                best = min(best, time.time() - t0)
-            results[name][label] = round(best, 2)
+        ctx = Ctx(spark, sf_dir)
+        for name in NAMES:
+            results[name][label] = best_of_two(PROBES[name](ctx))
 
     print("| operator | sf0.1 (5k docs) | tier (50k docs) | wall x at 10x docs (100x vs baseline) |")
     print("|---|---|---|---|")
-    for name in names:
+    for name in NAMES:
         r = results[name]
         ratio = round(r["tier"] / max(r["sf0.1"], 0.01), 1)
         print(f"| {name} | {r['sf0.1']}s | {r['tier']}s | {ratio}x |")

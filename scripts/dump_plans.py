@@ -1,15 +1,16 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") plans for catalog queries and the
-bench-only operator paths into plans/<tag>/<name>_<suffix>.txt.
+"""Dump .explain("formatted") plans for bench.py's entries and the
+catalog queries into plans/<tag>/<name>_<suffix>.txt.
 
 Usage: python scripts/dump_plans.py <suffix> [names...]
   suffix: e.g. "before" / "after" (file suffix under plans/$PLANS_TAG,
           default tag r12)
   names:  query names; default = a curated hot set.
 
-Catalog names resolve via build_catalog(); a few bench-only operator
-paths (ngram_jaccard, minhash_lsh, ivf_pq_serve_many, ...) are
-replicated here exactly as bench.py builds them.
+A name resolves first to the DataFrame its bench.py ``ENTRIES`` thunk
+returns (the very frame bench times), then to the catalog gate. A fit or
+write entry is not run: its name resolves to the catalog, except
+``ivf_pq_build``, which dumps the frame its entry writes.
 """
 
 from __future__ import annotations
@@ -19,7 +20,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from jobinsight_data_pipeline_spark.catalog import build_catalog
+from pyspark.sql import DataFrame
+
+from bench import ENTRIES, Ctx, ivf_pq_frame
 from jobinsight_data_pipeline_spark.session import get_spark
 
 DEFAULT_NAMES = [
@@ -63,183 +66,18 @@ def plan_str(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def bench_only_builders(spark, sf_dir):
-    """The bench.py direct-operator paths, replicated verbatim."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from jobinsight_data_pipeline_spark.operators.bpe import (
-        bpe_encode,
-        bpe_encode_memoized,
-    )
-    from jobinsight_data_pipeline_spark.operators.dedup import (
-        build_dedup_state,
-        duplicate_spans,
-        exact_match_spans,
-        incremental_dedup,
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-        simhash_near_pairs,
-        winnow_overlap_pairs,
-    )
-    from jobinsight_data_pipeline_spark.operators.ranking import bm25_topk
-    from jobinsight_data_pipeline_spark.operators.similarity import (
-        build_ivf_pq_index,
-        build_semantic_state,
-        incremental_semantic_dedup,
-        ivf_pq_topk_many,
-        lsh_cosine_topk,
-        pq_codebooks,
-        pq_encode,
-        semantic_dedup,
-        unit_centroids,
-    )
-    from jobinsight_data_pipeline_spark.operators.sketches import (
-        hll_registers,
-    )
-    from jobinsight_data_pipeline_spark.operators.textstats import (
-        bigram_logprob,
-        dedup_paragraphs,
-        redact_pii,
-    )
-    from jobinsight_data_pipeline_spark.operators.unigram import (
-        unigram_encode,
-        unigram_train,
-        words_with_freq,
-    )
-    from jobinsight_data_pipeline_spark.operators.wordpiece import (
-        wordpiece_word_table,
-    )
-    from jobinsight_data_pipeline_spark.operators.textstats import (
-        tokens as _wp_tokens,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    cb = pq_codebooks()
-    cents = unit_centroids(64, 16, seed=11)
-    rcb = pq_codebooks(dim=64, m=8, k=16, seed=5)
-
-    def _wp_fert():
-        wt = wordpiece_word_table(spark, docs)
-        toks = docs.select(
-            "source",
-            F.explode(F.transform(_wp_tokens("text"), F.lower)).alias("w"),
-        ).where(F.col("w") != "")
-        return (
-            toks.join(wt.select("w", "n_pieces"), "w")
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.sum("n_pieces").alias("n_pieces"),
-            )
-            .withColumn(
-                "fert_milli", F.expr("(1000L * n_pieces) div n_words")
-            )
-        )
-
-    def _serve_many():
-        import tempfile
-
-        idx_path = tempfile.mkdtemp(prefix="plan_ivfpq_") + "/idx"
-        build_ivf_pq_index(emb, cents, cb).repartition("cell").write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(idx_path)
-        index = spark.read.parquet(idx_path)
-        qbatch = emb.filter("vec_id < 20").selectExpr(
-            "vec_id AS query_id", "embedding"
-        )
-        return ivf_pq_topk_many(index, qbatch, cents, cb, k=10, n_probe=4)
-
-    def _resid_serve():
-        return ivf_pq_topk_many(
-            build_ivf_pq_index(emb, cents, rcb, residual=True),
-            emb.filter("vec_id < 20").selectExpr(
-                "vec_id AS query_id", "embedding"
-            ),
-            cents,
-            rcb,
-            k=10,
-            n_probe=4,
-            residual=True,
-        )
-
-    def _unigram_encode():
-        um_model = unigram_train(
-            spark, words_with_freq(docs), rounds=3, seed_k=80, vocab_k=40
-        )
-        return unigram_encode(spark, docs, um_model)
-
-    emb2 = emb.select("vec_id", "embedding")
-    return {
-        "ngram_jaccard": lambda: ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5
-        ),
-        "minhash_lsh": lambda: minhash_lsh_pairs(docs, "doc_id", "text"),
-        "simhash_pairs": lambda: simhash_near_pairs(
-            docs, "doc_id", "text", max_hamming=3
-        ),
-        "embedding_lsh_topk": lambda: lsh_cosine_topk(
-            emb, emb.filter("vec_id < 20"), k=5
-        ),
-        "duplicate_spans": lambda: duplicate_spans(docs, "doc_id", "text", n=8),
-        "semantic_dedup": lambda: semantic_dedup(
-            emb, threshold=0.4, n_clusters=16
-        ),
-        "pii_scrub": lambda: redact_pii(docs, "text"),
-        "bm25_topk": lambda: bm25_topk(
-            docs, ["spark", "vector", "customer"], k=100
-        ),
-        "paragraph_dedup": lambda: dedup_paragraphs(docs, mode="keep_first"),
-        "bigram_lm": lambda: bigram_logprob(docs, "doc_id"),
-        "winnow_overlap": lambda: winnow_overlap_pairs(
-            docs, "doc_id", "text", k=5, window=4, min_shared=2
-        ),
-        "pq_encode": lambda: pq_encode(emb, cb),
-        "bpe_encode": lambda: bpe_encode(docs),
-        "bpe_memoized": lambda: bpe_encode_memoized(
-            docs, word_encoder="python"
-        ),
-        "incremental_dedup": lambda: incremental_dedup(
-            docs.filter("doc_id % 2 = 1"),
-            build_dedup_state(docs.filter("doc_id % 2 = 0")),
-        ),
-        "incremental_semantic_dedup": lambda: incremental_semantic_dedup(
-            emb2.filter("vec_id % 2 = 1"),
-            build_semantic_state(
-                emb2.filter("vec_id % 2 = 0"), unit_centroids(64, 16, seed=11)
-            ),
-            unit_centroids(64, 16, seed=11),
-            threshold=0.4,
-        ),
-        "exact_spans": lambda: exact_match_spans(
-            docs, "doc_id", "text", k=8, min_len=15
-        ),
-        # mirrors bench.py: the encode widens its own scan, then the
-        # narrow codes are shuffled to the cell grain for the
-        # partitioned write (r12)
-        "ivf_pq_build": lambda: build_ivf_pq_index(
-            emb, cents, cb
-        ).repartition("cell"),
-        "ivf_pq_serve_many": _serve_many,
-        "ivf_pq_residual_serve": _resid_serve,
-        "wordpiece_fertility": _wp_fert,
-        "unigram_encode": _unigram_encode,
-        "hll_registers": lambda: hll_registers(li, "l_orderkey"),
-        "triangle_count": lambda: __import__(
-            "jobinsight_data_pipeline_spark.operators.components",
-            fromlist=["triangle_counts"],
-        ).triangle_counts(
-            docs.selectExpr(
-                "doc_id % 10007 AS src", "(doc_id * 31 + 17) % 10007 AS dst"
-            ).unionAll(
-                docs.selectExpr(
-                    "(doc_id * 7 + 3) % 10007 AS src",
-                    "(doc_id * 13 + 5) % 10007 AS dst",
-                )
-            )
-        ),
-    }
+def frame(ctx: Ctx, name: str) -> DataFrame | None:
+    """The frame ``name`` dumps: the DataFrame its bench ``ENTRIES`` thunk
+    returns, else the catalog gate; None when unknown. A fit or write
+    entry returns no frame and is not run."""
+    if name == "ivf_pq_build":  # its entry times a write of this frame
+        return ivf_pq_frame(ctx)
+    entry = ENTRIES.get(name)
+    if entry is not None and not hasattr(entry, "fit"):
+        return entry(ctx)()
+    if name in ctx.queries:
+        return ctx.queries[name](ctx.spark, ctx.sf_dir)
+    return None
 
 
 def main() -> None:
@@ -254,17 +92,11 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(app_name="dump-plans")
-    queries, _ = build_catalog()
-    bench = bench_only_builders(spark, sf_dir)
-
+    ctx = Ctx(get_spark(app_name="dump-plans"), sf_dir)
     for name in names:
         try:
-            if name in bench:
-                df = bench[name]()
-            elif name in queries:
-                df = queries[name](spark, sf_dir)
-            else:
+            df = frame(ctx, name)
+            if df is None:
                 print(f"SKIP {name}: unknown")
                 continue
             text = plan_str(df)
