@@ -12,13 +12,13 @@ collect, no result-size bias). Session startup is excluded from per-query
 times; a separate "startup_sec" field reports it.
 
 Round-over-round comparability (round-2 lesson: a 1.3× uniform drift on
-untouched queries was unattributable): each query runs TWICE and the best
-time is reported (ambient-load spikes hit one run, rarely both), and the
-JSON carries `loadavg` (1/5/15-min, captured before and after) so a loaded
-machine is visible in the artifact instead of guessed at later. Run 1
-follows a `release` of the session memo, so it rebuilds every memoized
-gate state and is also reported alone as the cold time; run 2 may reuse
-that state.
+untouched queries was unattributable): each query runs three times on a
+fixed schedule. Run 1 follows a `release` of the session memo, so it
+rebuilds every memoized gate state; it is reported alone as the cold
+time. Runs 2 and 3 may reuse that state, and the faster of the two is
+reported under `queries` (ambient-load spikes hit one run, rarely both).
+The JSON carries `loadavg` (1/5/15-min, captured before and after) so a
+loaded machine is visible in the artifact instead of guessed at later.
 
 What is timed is one ordered table, ``ENTRIES``: name -> ``entry(ctx)``.
 An entry does its untimed preparation (input graphs, query batches, an
@@ -679,36 +679,24 @@ def main() -> None:
     warmup = time.time() - t0
 
     load_before = os.getloadavg()
-    arbitrations: list[int] = []
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
 
     def timed(name: str, thunk) -> None:
-        """Best of two runs into ``timings[name]``, the first run alone
-        into ``cold[name]``. The session memo is released first, so run 1
-        rebuilds every memoized gate state (warehouses, fitted models,
-        state built on disk) and run 2 may reuse it. When the two runs disagree by >15% (an
-        ambient-load spike hit one of them, or run 2 reused a build), a
-        third run arbitrates — r4's +15% drift on unchanged code was
-        pure machine noise; this bounds it without tripling every
-        query's cost."""
+        """Three runs after a release of the session memo. Run 1 rebuilds
+        every memoized gate state (warehouses, fitted models, state
+        built on disk) and goes alone into ``cold[name]``. Runs 2 and 3
+        may reuse it; the faster of the two goes into ``timings[name]``,
+        so the warm time never takes the cold run into its minimum."""
         release(spark)
         times = []
-        for _ in range(2):
-            t0 = time.time()
-            run(thunk)
-            times.append(time.time() - t0)
-        # relative spread gate + absolute floor: sub-second queries show
-        # >15% JIT/GC jitter constantly — only arbitrate when the gap is
-        # also big enough to matter in the total
-        if max(times) > 1.15 * min(times) and max(times) - min(times) > 0.2:
-            arbitrations.append(1)
+        for _ in range(3):
             t0 = time.time()
             run(thunk)
             times.append(time.time() - t0)
         cold[name] = round(times[0], 3)
-        timings[name] = round(min(times), 3)
+        timings[name] = round(min(times[1:]), 3)
 
     ctx = Ctx(spark, sf_dir)
     for table in ("documents", "embeddings", "lineitem"):
@@ -746,8 +734,7 @@ def main() -> None:
             "sf": float(sf),
             "startup_sec": round(startup, 3),
             "warmup_sec": round(warmup, 3),
-            "runs_per_query": 2,
-            "arbitration_runs": len(arbitrations),
+            "runs_per_query": 3,
             "loadavg": [round(v, 2) for v in load_before],
             "loadavg_after": [round(v, 2) for v in os.getloadavg()],
         }

@@ -1322,6 +1322,60 @@ GROUP BY p_type
 """
 
 
+def _funnel_oracle(r1: str, within_us: int, n_users: str) -> str:
+    """The view → click → purchase funnel replay: `r1` selects the
+    step-1 anchors (user_id, at, anchor) from the (ts, event_id)-keyed
+    `ev`, each later step takes the first matching event after the
+    previous step within `within_us` of its anchor, and `n_users`
+    counts each step's users."""
+    return f"""
+WITH ev AS (
+    SELECT user_id, event_type,
+           lpad(CAST(date_diff('microseconds',
+                               TIMESTAMP '1970-01-01 00:00:00', ts)
+                     AS VARCHAR), 20, '0')
+             || ':' || lpad(CAST(event_id AS VARCHAR), 20, '0') AS okey
+    FROM events
+    WHERE event_type IN ('view', 'click', 'purchase')
+),
+r1 AS (
+    {r1}
+),
+r2 AS (
+    SELECT e.user_id, r.anchor, min(e.okey) AS at
+    FROM ev e JOIN r1 r ON e.user_id = r.user_id
+    WHERE e.event_type = 'click' AND e.okey > r.at
+      AND CAST(substring(e.okey, 1, 20) AS BIGINT)
+          - CAST(substring(r.anchor, 1, 20) AS BIGINT) <= {within_us}
+    GROUP BY e.user_id, r.anchor
+),
+r3 AS (
+    SELECT e.user_id, r.anchor, min(e.okey) AS at
+    FROM ev e JOIN r2 r ON e.user_id = r.user_id
+    WHERE e.event_type = 'purchase' AND e.okey > r.at
+      AND CAST(substring(e.okey, 1, 20) AS BIGINT)
+          - CAST(substring(r.anchor, 1, 20) AS BIGINT) <= {within_us}
+    GROUP BY e.user_id, r.anchor
+),
+counts AS (
+    SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type,
+           {n_users} AS n_users FROM r1
+    UNION ALL
+    SELECT CAST(2 AS BIGINT), 'click', {n_users} FROM r2
+    UNION ALL
+    SELECT CAST(3 AS BIGINT), 'purchase', {n_users} FROM r3
+)
+SELECT step, event_type, n_users,
+       CAST((n_users * 1000000)
+            // nullif(max(CASE WHEN step = 1 THEN n_users END) OVER (), 0)
+            AS BIGINT) AS conv_ppm,
+       CAST((n_users * 1000000)
+            // nullif(lag(n_users) OVER (ORDER BY step), 0)
+            AS BIGINT) AS step_ppm
+FROM counts
+"""
+
+
 def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel over the event stream
     (operators/behavior.funnel_counts): view → click → purchase with a
@@ -1338,53 +1392,12 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-O_FUNNEL_STEPS = """
-WITH ev AS (
-    SELECT user_id, event_type,
-           lpad(CAST(date_diff('microseconds',
-                               TIMESTAMP '1970-01-01 00:00:00', ts)
-                     AS VARCHAR), 20, '0')
-             || ':' || lpad(CAST(event_id AS VARCHAR), 20, '0') AS okey
-    FROM events
-    WHERE event_type IN ('view', 'click', 'purchase')
-),
-r1 AS (
-    SELECT user_id, min(okey) AS at, min(okey) AS anchor
-    FROM ev WHERE event_type = 'view' GROUP BY user_id
-),
-r2 AS (
-    SELECT e.user_id, r.anchor, min(e.okey) AS at
-    FROM ev e JOIN r1 r ON e.user_id = r.user_id
-    WHERE e.event_type = 'click' AND e.okey > r.at
-      AND CAST(substring(e.okey, 1, 20) AS BIGINT)
-          - CAST(substring(r.anchor, 1, 20) AS BIGINT) <= 259200000000
-    GROUP BY e.user_id, r.anchor
-),
-r3 AS (
-    SELECT e.user_id, r.anchor, min(e.okey) AS at
-    FROM ev e JOIN r2 r ON e.user_id = r.user_id
-    WHERE e.event_type = 'purchase' AND e.okey > r.at
-      AND CAST(substring(e.okey, 1, 20) AS BIGINT)
-          - CAST(substring(r.anchor, 1, 20) AS BIGINT) <= 259200000000
-    GROUP BY e.user_id, r.anchor
-),
-counts AS (
-    SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type,
-           count(*) AS n_users FROM r1
-    UNION ALL
-    SELECT CAST(2 AS BIGINT), 'click', count(*) FROM r2
-    UNION ALL
-    SELECT CAST(3 AS BIGINT), 'purchase', count(*) FROM r3
+O_FUNNEL_STEPS = _funnel_oracle(
+    "SELECT user_id, min(okey) AS at, min(okey) AS anchor\n"
+    "    FROM ev WHERE event_type = 'view' GROUP BY user_id",
+    within_us=72 * 3_600_000_000,
+    n_users="count(*)",
 )
-SELECT step, event_type, n_users,
-       CAST((n_users * 1000000)
-            // nullif(max(CASE WHEN step = 1 THEN n_users END) OVER (), 0)
-            AS BIGINT) AS conv_ppm,
-       CAST((n_users * 1000000)
-            // nullif(lag(n_users) OVER (ORDER BY step), 0)
-            AS BIGINT) AS step_ppm
-FROM counts
-"""
 
 
 def q_funnel_reanchor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1412,53 +1425,12 @@ def q_funnel_reanchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-O_FUNNEL_REANCHOR = """
-WITH ev AS (
-    SELECT user_id, event_type,
-           lpad(CAST(date_diff('microseconds',
-                               TIMESTAMP '1970-01-01 00:00:00', ts)
-                     AS VARCHAR), 20, '0')
-             || ':' || lpad(CAST(event_id AS VARCHAR), 20, '0') AS okey
-    FROM events
-    WHERE event_type IN ('view', 'click', 'purchase')
-),
-r1 AS (
-    SELECT user_id, okey AS at, okey AS anchor
-    FROM ev WHERE event_type = 'view'
-),
-r2 AS (
-    SELECT e.user_id, r.anchor, min(e.okey) AS at
-    FROM ev e JOIN r1 r ON e.user_id = r.user_id
-    WHERE e.event_type = 'click' AND e.okey > r.at
-      AND CAST(substring(e.okey, 1, 20) AS BIGINT)
-          - CAST(substring(r.anchor, 1, 20) AS BIGINT) <= 43200000000
-    GROUP BY e.user_id, r.anchor
-),
-r3 AS (
-    SELECT e.user_id, r.anchor, min(e.okey) AS at
-    FROM ev e JOIN r2 r ON e.user_id = r.user_id
-    WHERE e.event_type = 'purchase' AND e.okey > r.at
-      AND CAST(substring(e.okey, 1, 20) AS BIGINT)
-          - CAST(substring(r.anchor, 1, 20) AS BIGINT) <= 43200000000
-    GROUP BY e.user_id, r.anchor
-),
-counts AS (
-    SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type,
-           count(DISTINCT user_id) AS n_users FROM r1
-    UNION ALL
-    SELECT CAST(2 AS BIGINT), 'click', count(DISTINCT user_id) FROM r2
-    UNION ALL
-    SELECT CAST(3 AS BIGINT), 'purchase', count(DISTINCT user_id) FROM r3
+O_FUNNEL_REANCHOR = _funnel_oracle(
+    "SELECT user_id, okey AS at, okey AS anchor\n"
+    "    FROM ev WHERE event_type = 'view'",
+    within_us=12 * 3_600_000_000,
+    n_users="count(DISTINCT user_id)",
 )
-SELECT step, event_type, n_users,
-       CAST((n_users * 1000000)
-            // nullif(max(CASE WHEN step = 1 THEN n_users END) OVER (), 0)
-            AS BIGINT) AS conv_ppm,
-       CAST((n_users * 1000000)
-            // nullif(lag(n_users) OVER (ORDER BY step), 0)
-            AS BIGINT) AS step_ppm
-FROM counts
-"""
 
 
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1651,20 +1623,12 @@ FROM r GROUP BY 1, 2
 """
 
 
-def q_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed session-scoped funnel: the sessionize gate's 30-minute
-    gaps-and-islands assignment feeds operators/behavior.funnel_counts
-    with the (user, session) composite as the funnel subject — how many
-    SESSIONS progress view → click → purchase (the within-visit
-    conversion report; no conversion window needed, the session bounds
-    it). Two driver-proven families under one composed hash."""
-    from jobinsight_data_pipeline_spark.operators.behavior import (
-        funnel_counts,
-    )
-
+def _event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events as (sid, ts, event_type, event_id), sid naming each
+    user's 30-minute-gap session as 'user_id:session_no'."""
     t = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = (
+    return (
         t["events"]
         .withColumn("prev_ts", F.lag("ts").over(w))
         .withColumn(
@@ -1687,18 +1651,11 @@ def q_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
         )
     )
-    out = funnel_counts(sess, ["view", "click", "purchase"], id_col="sid")
-    return out.select(
-        "step",
-        "event_type",
-        F.col("n_users").alias("n_sessions"),
-        "conv_ppm",
-        "step_ppm",
-    )
 
 
-O_SESSION_FUNNEL = """
-WITH gapped AS (
+#: `_event_sessions` in DuckDB: opens a WITH whose `sess` CTE holds
+#: (sid, ts, event_id, event_type)
+_SESSIONS_SQL = """WITH gapped AS (
     SELECT user_id, ts, event_id, event_type,
            CASE WHEN lag(ts) OVER w IS NULL THEN 1
                 WHEN date_diff('microseconds', lag(ts) OVER w, ts)
@@ -1714,7 +1671,36 @@ sess AS (
                AS BIGINT) AS VARCHAR) AS sid,
            ts, event_id, event_type
     FROM gapped
-),
+)"""
+
+
+def q_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composed session-scoped funnel: the sessionize gate's 30-minute
+    gaps-and-islands assignment feeds operators/behavior.funnel_counts
+    with the (user, session) composite as the funnel subject — how many
+    SESSIONS progress view → click → purchase (the within-visit
+    conversion report; no conversion window needed, the session bounds
+    it). Two driver-proven families under one composed hash."""
+    from jobinsight_data_pipeline_spark.operators.behavior import (
+        funnel_counts,
+    )
+
+    out = funnel_counts(
+        _event_sessions(spark, sf_dir),
+        ["view", "click", "purchase"],
+        id_col="sid",
+    )
+    return out.select(
+        "step",
+        "event_type",
+        F.col("n_users").alias("n_sessions"),
+        "conv_ppm",
+        "step_ppm",
+    )
+
+
+O_SESSION_FUNNEL = f"""
+{_SESSIONS_SQL},
 ev AS (
     SELECT sid, event_type,
            lpad(CAST(date_diff('microseconds',
@@ -1939,52 +1925,13 @@ def q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_session_paths,
     )
 
-    t = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = (
-        t["events"]
-        .withColumn("prev_ts", F.lag("ts").over(w))
-        .withColumn(
-            "new_session",
-            (
-                F.expr("timestampdiff(MICROSECOND, prev_ts, ts)")
-                > 1800 * 1_000_000
-            ).cast("int"),
-        )
-        .withColumn(
-            "session_no",
-            F.sum(F.coalesce("new_session", F.lit(1))).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .select(
-            F.concat_ws(":", "user_id", "session_no").alias("sid"),
-            "ts",
-            "event_type",
-            "event_id",
-        )
+    return top_session_paths(
+        _event_sessions(spark, sf_dir), "sid", max_steps=5, k=20
     )
-    return top_session_paths(sess, "sid", max_steps=5, k=20)
 
 
-O_TOP_PATHS = """
-WITH gapped AS (
-    SELECT user_id, ts, event_id, event_type,
-           CASE WHEN lag(ts) OVER w IS NULL THEN 1
-                WHEN date_diff('microseconds', lag(ts) OVER w, ts)
-                     > 1800000000 THEN 1
-                ELSE 0 END AS is_new
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-    SELECT user_id || ':' || CAST(CAST(sum(is_new) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS VARCHAR) AS sid,
-           ts, event_id, event_type
-    FROM gapped
-),
+O_TOP_PATHS = f"""
+{_SESSIONS_SQL},
 numbered AS (
     SELECT sid, event_type,
            row_number() OVER (PARTITION BY sid ORDER BY ts, event_id)

@@ -17,6 +17,8 @@ Approximate operators are gated two ways, strongest applicable first:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -295,13 +297,9 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_tokens", "start_offset", "pack_id")
 
 
-O_SEQUENCE_PACKING = """
-WITH toks AS (
-    SELECT doc_id,
-           len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS n_tokens
-    FROM documents
-),
-c AS (
+#: 2048-token packing of a `toks` (doc_id, n_tokens) CTE: each doc's
+#: start offset in doc_id order and its pack
+_PACK_OFFSETS_SQL = """c AS (
     SELECT doc_id, n_tokens,
            CAST(COALESCE(SUM(n_tokens) OVER (
                ORDER BY doc_id
@@ -312,6 +310,15 @@ c AS (
 SELECT doc_id, n_tokens, start_offset, start_offset // 2048 AS pack_id
 FROM c
 """
+
+
+O_SEQUENCE_PACKING = f"""
+WITH toks AS (
+    SELECT doc_id,
+           len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS n_tokens
+    FROM documents
+),
+{_PACK_OFFSETS_SQL}"""
 
 
 def q_embedding_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,6 +589,21 @@ WHERE round(inter / CAST(sa.sz + sb.sz - inter AS DOUBLE), 4) >= 0.5
 """
 
 
+#: connected components of a `pairs` (doc_a, doc_b) CTE, for a
+#: WITH RECURSIVE: `sym` holds both edge directions and `reach` pairs
+#: every node with each node it reaches (its min is the component id)
+_PAIR_REACH_SQL = """sym AS (
+    SELECT doc_a AS u, doc_b AS v FROM pairs
+    UNION
+    SELECT doc_b, doc_a FROM pairs
+),
+reach(node, r) AS (
+    SELECT u, u FROM (SELECT DISTINCT u FROM sym)
+    UNION
+    SELECT w.node, s.v FROM reach w JOIN sym s ON s.u = w.r
+)"""
+
+
 def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-quality evaluation with the NUMBERS under the hash — the
     near-dup family's twin of `ann_recall_eval` (the r10 evaluation-
@@ -612,14 +634,24 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = minhash_lsh_pairs_portable(
         docs, "doc_id", "text"
     ).localCheckpoint(eager=True)
+    truth_n = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
+    return _pair_recall_row(truth, truth_n, cand)
+
+
+def _pair_recall_row(
+    truth: DataFrame, truth_n: DataFrame, cand: DataFrame, *lead: Column
+) -> DataFrame:
+    """One row scoring candidate pairs against true pairs (both doc_a,
+    doc_b; `truth_n` holds the truth count): the `lead` columns, the
+    three pair counts, and recall/precision in integer ppm."""
     hits = truth.join(cand, ["doc_a", "doc_b"], "left_semi").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
-    out = (
-        truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
-        .crossJoin(cand.agg(F.count(F.lit(1)).alias("n_candidates")))
+    return (
+        truth_n.crossJoin(cand.agg(F.count(F.lit(1)).alias("n_candidates")))
         .crossJoin(hits)
         .select(
+            *lead,
             "n_true_pairs",
             "n_candidates",
             "n_hits",
@@ -631,11 +663,12 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("precision_ppm"),
         )
     )
-    return out
 
 
-O_DEDUP_RECALL_EVAL = f"""
-WITH truth AS MATERIALIZED (SELECT doc_a, doc_b FROM ({O_NGRAM_JACCARD})),
+def _truth_sigs_ctes(sigs_as: str) -> str:
+    """`truth` (exact Jaccard ≥ 0.5 pairs) and `sigs` (doc, i, h): the
+    16 portable md5 MinHash words per doc, `sigs_as` its CTE keyword."""
+    return f"""WITH truth AS MATERIALIZED (SELECT doc_a, doc_b FROM ({O_NGRAM_JACCARD})),
 mtoks AS (
     SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
     FROM documents
@@ -648,14 +681,18 @@ msh AS (
     ) AS shingle
     FROM mtoks
 ),
-sigs AS (
+sigs {sigs_as} (
     SELECT doc, u.i AS i,
            min(CAST(('0x' || substring(
                md5('mh' || CAST(u.i // 4 AS VARCHAR) || ':' || shingle),
                CAST((u.i % 4) * 8 + 1 AS INTEGER), 8)) AS BIGINT)) AS h
     FROM msh, unnest(range(16)) AS u(i)
     GROUP BY doc, u.i
-),
+)"""
+
+
+O_DEDUP_RECALL_EVAL = f"""
+{_truth_sigs_ctes("AS")},
 buckets AS MATERIALIZED (
     SELECT doc, i // 4 AS band,
            string_agg(CAST(h AS VARCHAR), '|' ORDER BY i) AS bucket
@@ -717,25 +754,9 @@ def q_dedup_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs, "doc_id", "text", n_hashes=16, bands=bands,
             signatures=sig,
         ).localCheckpoint(eager=True)
-        hits = truth.join(cand, ["doc_a", "doc_b"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
-        )
         parts.append(
-            truth_n.crossJoin(
-                cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-            )
-            .crossJoin(hits)
-            .select(
-                F.lit(bands).alias("bands"),
-                "n_true_pairs",
-                "n_candidates",
-                "n_hits",
-                F.expr(
-                    "(n_hits * 1000000L) div greatest(n_true_pairs, 1L)"
-                ).alias("recall_ppm"),
-                F.expr(
-                    "(n_hits * 1000000L) div greatest(n_candidates, 1L)"
-                ).alias("precision_ppm"),
+            _pair_recall_row(
+                truth, truth_n, cand, F.lit(bands).alias("bands")
             )
         )
     out = parts[0]
@@ -778,27 +799,7 @@ row{bands} AS (
         for bands in LSH_BAND_GRID
     )
     return f"""
-WITH truth AS MATERIALIZED (SELECT doc_a, doc_b FROM ({O_NGRAM_JACCARD})),
-mtoks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-    FROM documents
-    WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 3
-),
-msh AS (
-    SELECT DISTINCT doc_id AS doc, unnest(
-        list_transform(range(len(w) - 2),
-                       i -> concat(w[i + 1], ' ', w[i + 2], ' ', w[i + 3]))
-    ) AS shingle
-    FROM mtoks
-),
-sigs AS MATERIALIZED (
-    SELECT doc, u.i AS i,
-           min(CAST(('0x' || substring(
-               md5('mh' || CAST(u.i // 4 AS VARCHAR) || ':' || shingle),
-               CAST((u.i % 4) * 8 + 1 AS INTEGER), 8)) AS BIGINT)) AS h
-    FROM msh, unnest(range(16)) AS u(i)
-    GROUP BY doc, u.i
-),
+{_truth_sigs_ctes("AS MATERIALIZED")},
 {", ".join(per_band)}
 {unions}
 """
@@ -856,16 +857,7 @@ pairs AS (
     WHERE doc_a IN (SELECT doc_id FROM kept)
       AND doc_b IN (SELECT doc_id FROM kept)
 ),
-sym AS (
-    SELECT doc_a AS u, doc_b AS v FROM pairs
-    UNION
-    SELECT doc_b, doc_a FROM pairs
-),
-reach(node, r) AS (
-    SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-    UNION
-    SELECT w.node, s.v FROM reach w JOIN sym s ON s.u = w.r
-),
+{_PAIR_REACH_SQL},
 lbl AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
 survivors AS (
     SELECT doc_id FROM kept
@@ -876,17 +868,7 @@ toks AS (
            len(regexp_extract_all(d.text, '\\w+|[^\\w\\s]')) AS n_tokens
     FROM documents d JOIN survivors USING (doc_id)
 ),
-c AS (
-    SELECT doc_id, n_tokens,
-           CAST(COALESCE(SUM(n_tokens) OVER (
-               ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ), 0) AS BIGINT) AS start_offset
-    FROM toks
-)
-SELECT doc_id, n_tokens, start_offset, start_offset // 2048 AS pack_id
-FROM c
-"""
+{_PACK_OFFSETS_SQL}"""
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -991,10 +973,13 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(t["embeddings"], queries, k=5)
 
 
-O_EMBEDDING_TOPK = """
-WITH q AS (
+def _cosine_scored_ctes(n_queries: int) -> str:
+    """`q` (the first `n_queries` vectors) and `scored`: each query's
+    6-decimal cosine to every other vector (query_id, neighbor_id,
+    sim6)."""
+    return f"""WITH q AS (
     SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-    FROM embeddings WHERE vec_id < 20
+    FROM embeddings WHERE vec_id < {n_queries}
 ),
 scored AS (
     SELECT q.query_id, e.vec_id AS neighbor_id,
@@ -1006,7 +991,11 @@ scored AS (
              6) AS sim6
     FROM embeddings e CROSS JOIN q
     WHERE e.vec_id <> q.query_id
-),
+)"""
+
+
+O_EMBEDDING_TOPK = f"""
+{_cosine_scored_ctes(20)},
 ranked AS (
     SELECT query_id, neighbor_id, sim6,
            row_number() OVER (PARTITION BY query_id
@@ -1817,9 +1806,9 @@ def q_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return remove_spans(t["documents"], "doc_id", "text", n=8)
 
 
-O_SPAN_REMOVAL = rf"""
-WITH spans AS ({O_DUPLICATE_SPANS}),
-t AS (
+#: the span mask shared by both removal oracles: every token of a doc
+#: outside its `spans` rows, re-joined in order, plus the removed count
+_SPAN_MASK_SQL = r"""t AS (
     SELECT doc_id, text, regexp_split_to_array(trim(text), '\s+') AS toks
     FROM documents
 ),
@@ -1851,6 +1840,11 @@ SELECT t.doc_id,
        END AS n_removed
 FROM t LEFT JOIN agg a USING (doc_id)
 """
+
+
+O_SPAN_REMOVAL = rf"""
+WITH spans AS ({O_DUPLICATE_SPANS}),
+{_SPAN_MASK_SQL}"""
 
 
 #: exact_spans gate: anchor window size and minimum match length
@@ -1953,38 +1947,7 @@ spans AS (
            start_b + match_len AS span_end
     FROM m
 ),
-t AS (
-    SELECT doc_id, text, regexp_split_to_array(trim(text), '\s+') AS toks
-    FROM documents
-),
-pos AS (
-    SELECT t.doc_id, toks[g] AS tok, g - 1 AS idx
-    FROM t, unnest(generate_series(1, len(toks))) AS u(g)
-    WHERE t.text IS NOT NULL
-),
-kept AS (
-    SELECT p.* FROM pos p
-    WHERE NOT EXISTS (
-        SELECT 1 FROM spans s
-        WHERE s.doc_id = p.doc_id
-          AND p.idx >= s.span_start AND p.idx < s.span_end
-    )
-),
-agg AS (
-    SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS cleaned_txt,
-           count(*) AS n_kept
-    FROM kept GROUP BY doc_id
-)
-SELECT t.doc_id,
-       CASE WHEN t.text IS NULL THEN NULL
-            ELSE coalesce(a.cleaned_txt, '') END AS cleaned,
-       CASE WHEN t.text IS NULL THEN NULL
-            ELSE CAST(len(t.toks) AS BIGINT) END AS n_tokens,
-       CASE WHEN t.text IS NULL THEN NULL
-            ELSE CAST(len(t.toks) - coalesce(a.n_kept, 0) AS BIGINT)
-       END AS n_removed
-FROM t LEFT JOIN agg a USING (doc_id)
-"""
+{_SPAN_MASK_SQL}"""
 
 
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2401,16 +2364,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 O_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE pairs AS ({O_NGRAM_JACCARD}),
-sym AS (
-    SELECT doc_a AS u, doc_b AS v FROM pairs
-    UNION
-    SELECT doc_b, doc_a FROM pairs
-),
-reach(node, r) AS (
-    SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-    UNION
-    SELECT w.node, s.v FROM reach w JOIN sym s ON s.u = w.r
-),
+{_PAIR_REACH_SQL},
 lbl AS (SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY node),
 sz AS (SELECT component, count(*) AS cluster_size FROM lbl GROUP BY component)
 SELECT l.doc_id, l.component, sz.cluster_size,
@@ -2469,16 +2423,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 O_LEAKAGE_SAFE_SPLIT = f"""
 WITH RECURSIVE pairs AS ({O_NGRAM_JACCARD}),
-sym AS (
-    SELECT doc_a AS u, doc_b AS v FROM pairs
-    UNION
-    SELECT doc_b, doc_a FROM pairs
-),
-reach(node, r) AS (
-    SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-    UNION
-    SELECT w.node, s.v FROM reach w JOIN sym s ON s.u = w.r
-),
+{_PAIR_REACH_SQL},
 lbl AS (SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY node),
 assigned AS (
     SELECT d.doc_id, coalesce(l.component, d.doc_id) AS component
@@ -2562,16 +2507,7 @@ e{i} AS MATERIALIZED (
 )"""
     return f"""
 WITH RECURSIVE pairs AS MATERIALIZED ({O_NGRAM_JACCARD}),
-sym AS (
-    SELECT doc_a AS u, doc_b AS v FROM pairs
-    UNION
-    SELECT doc_b, doc_a FROM pairs
-),
-reach(node, r) AS (
-    SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-    UNION
-    SELECT w.node, s.v FROM reach w JOIN sym s ON s.u = w.r
-),
+{_PAIR_REACH_SQL},
 lbl AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
 e0 AS MATERIALIZED (
     SELECT DISTINCT least(doc_a, doc_b) AS a, greatest(doc_a, doc_b) AS b
@@ -2641,26 +2577,38 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semdedup_oracle() -> str:
-    from jobinsight_data_pipeline_spark.operators.similarity import unit_centroids
+def _unit_cents_values() -> str:
+    """The seed-11 8×64 unit centroids as DuckDB VALUES rows
+    (j, c DOUBLE[])."""
+    from jobinsight_data_pipeline_spark.operators.similarity import (
+        unit_centroids,
+    )
 
-    cents = unit_centroids(64, 8, seed=11)
-    values = ",\n    ".join(
+    return ",\n    ".join(
         "({}, CAST([{}] AS DOUBLE[]))".format(
             j, ",".join(repr(float(x)) for x in row)
         )
-        for j, row in enumerate(cents)
+        for j, row in enumerate(unit_centroids(64, 8, seed=11))
     )
-    return f"""
-WITH cents(j, c) AS (VALUES
-    {values}
+
+
+def _cents_norms_ctes() -> str:
+    """`cents` (the unit centroids) and `n`: every embedding as a
+    DOUBLE[] with its L2 norm."""
+    return f"""WITH cents(j, c) AS (VALUES
+    {_unit_cents_values()}
 ),
 n AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
            sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
                                  CAST(embedding AS DOUBLE[]))) AS nrm
     FROM embeddings
-),
+)"""
+
+
+def _semdedup_oracle() -> str:
+    return f"""
+{_cents_norms_ctes()},
 scored AS (
     SELECT vec_id, v, nrm, j,
            round(list_dot_product(v, c) / nrm, 6) AS s
@@ -2720,20 +2668,9 @@ def q_incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sem_incr_oracle() -> str:
-    from jobinsight_data_pipeline_spark.operators.similarity import (
-        unit_centroids,
-    )
-
-    cents = unit_centroids(64, 8, seed=11)
-    values = ",\n    ".join(
-        "({}, CAST([{}] AS DOUBLE[]))".format(
-            j, ",".join(repr(float(x)) for x in row)
-        )
-        for j, row in enumerate(cents)
-    )
     return f"""
 WITH cents(j, c) AS (VALUES
-    {values}
+    {_unit_cents_values()}
 ),
 day1 AS (
     SELECT vec_id, embedding FROM embeddings WHERE vec_id < {SEMINCR_SPLIT}
@@ -2891,27 +2828,8 @@ def q_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _prototype_prune_oracle() -> str:
-    from jobinsight_data_pipeline_spark.operators.similarity import (
-        unit_centroids,
-    )
-
-    cents = unit_centroids(64, 8, seed=11)
-    values = ",\n    ".join(
-        "({}, CAST([{}] AS DOUBLE[]))".format(
-            j, ",".join(repr(float(x)) for x in row)
-        )
-        for j, row in enumerate(cents)
-    )
     return f"""
-WITH cents(j, c) AS (VALUES
-    {values}
-),
-n AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-           sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                 CAST(embedding AS DOUBLE[]))) AS nrm
-    FROM embeddings
-),
+{_cents_norms_ctes()},
 assigned AS (
     SELECT vec_id, v, nrm, CAST(j AS INTEGER) AS cell,
            CAST(floor(round(list_dot_product(v, c) / nrm, 6) * 1000000.0)
@@ -2954,9 +2872,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality", (F.col("doc_id") % 97).cast("long")
     )
     return exact_dedup_keep_best(pool, "doc_id", "text", "quality")
-
-
-
 
 
 O_DEDUP_KEEP_BEST = """
@@ -4488,21 +4403,19 @@ def q_sq8_serve_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sq8_topk_indexed(codes, stats, queries, k=10)
 
 
-def _sq8_many_oracle() -> str:
-    qids = ", ".join(str(q) for q in SERVE_MANY_QIDS)
-    return f"""
-WITH v AS (
+#: the SQ8 oracles' shared SQL: `v` (vec_id, e DOUBLE[]) with the
+#: per-dimension quantizer stats `dims` (i, mn, span) ...
+_SQ8_DIMS_SQL = """WITH v AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
 ),
 dims AS (
     SELECT i, min(e[i]) AS mn, max(e[i]) - min(e[i]) AS span
     FROM v, range(1, 65) t(i)
     GROUP BY i
-),
-q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id IN ({qids})),
-terms AS (
-    SELECT q.query_id, v.vec_id,
-           CAST(floor(
+)"""
+#: ... and each (q, v) pair's per-dimension floored micro term of the
+#: query against v's dequantized 8-bit code
+_SQ8_TERM_SQL = """CAST(floor(
              q.qe[t.i]
              * (d.mn
                 + CAST(CASE WHEN d.span = 0 THEN 0
@@ -4514,7 +4427,17 @@ terms AS (
     FROM v
     CROSS JOIN range(1, 65) t(i)
     JOIN dims d ON d.i = t.i
-    CROSS JOIN q
+    CROSS JOIN q"""
+
+
+def _sq8_many_oracle() -> str:
+    qids = ", ".join(str(q) for q in SERVE_MANY_QIDS)
+    return f"""
+{_SQ8_DIMS_SQL},
+q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id IN ({qids})),
+terms AS (
+    SELECT q.query_id, v.vec_id,
+           {_SQ8_TERM_SQL}
     WHERE v.vec_id <> q.query_id
 ),
 scored AS (
@@ -4698,22 +4621,8 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-O_HARD_NEGATIVES = """
-WITH q AS (
-    SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-    FROM embeddings WHERE vec_id < 8
-),
-scored AS (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           round(
-             list_dot_product(q.qv, CAST(e.embedding AS DOUBLE[]))
-             / (sqrt(list_dot_product(q.qv, q.qv))
-                * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                        CAST(e.embedding AS DOUBLE[])))),
-             6) AS sim6
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id
-),
+O_HARD_NEGATIVES = f"""
+{_cosine_scored_ctes(8)},
 ranked AS (
     SELECT query_id, neighbor_id, sim6,
            row_number() OVER (PARTITION BY query_id
@@ -4749,30 +4658,11 @@ def q_sq8_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 O_SQ8_SEARCH = f"""
-WITH v AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-),
-dims AS (
-    SELECT i, min(e[i]) AS mn, max(e[i]) - min(e[i]) AS span
-    FROM v, range(1, 65) t(i)
-    GROUP BY i
-),
+{_SQ8_DIMS_SQL},
 q AS (SELECT e AS qe FROM v WHERE vec_id = {SQ8_QUERY_ID}),
 terms AS (
     SELECT v.vec_id,
-           CAST(floor(
-             q.qe[t.i]
-             * (d.mn
-                + CAST(CASE WHEN d.span = 0 THEN 0
-                            ELSE least(255, greatest(0,
-                                   floor((v.e[t.i] - d.mn) * 255.0 / d.span
-                                         + 0.5)))
-                       END AS DOUBLE) * d.span / 255.0)
-             * 1000000.0) AS BIGINT) AS term
-    FROM v
-    CROSS JOIN range(1, 65) t(i)
-    JOIN dims d ON d.i = t.i
-    CROSS JOIN q
+           {_SQ8_TERM_SQL}
     WHERE v.vec_id <> {SQ8_QUERY_ID}
 ),
 scored AS (
@@ -4799,6 +4689,31 @@ QUALIFY rank <= 10
 # --------------------------------------------------------------------------
 PARA_BOILER_1 = "subscribe to our newsletter for daily updates"
 PARA_BOILER_2 = "all rights reserved contact us at example dot com"
+
+
+#: the paragraph fixture in DuckDB (`_paragraph_fixture`: ten-token
+#: lines plus the planted boilerplate) split into (doc_id, pos, para)
+_PARA_SPLIT_SQL = f"""base AS (
+    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
+),
+fix AS (
+    SELECT doc_id,
+           array_to_string(
+               list_transform(range(CAST(ceil(len(t) / 10.0) AS BIGINT)),
+                   i -> array_to_string(
+                       t[CAST(i * 10 + 1 AS INTEGER):CAST(i * 10 + 10 AS INTEGER)],
+                       ' ')),
+               chr(10))
+           || chr(10) || '{PARA_BOILER_1}'
+           || CASE WHEN doc_id % 3 = 0
+                   THEN chr(10) || '{PARA_BOILER_2}' ELSE '' END AS text2
+    FROM base
+),
+sp AS (SELECT doc_id, string_split(text2, chr(10)) AS s FROM fix),
+paras AS (
+    SELECT doc_id, CAST(u.i AS BIGINT) - 1 AS pos, s[CAST(u.i AS INTEGER)] AS para
+    FROM sp, unnest(generate_series(1, len(s))) AS u(i)
+)"""
 
 
 def _paragraph_fixture(docs: DataFrame) -> DataFrame:
@@ -4835,27 +4750,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 O_PARAGRAPH_DEDUP = f"""
-WITH base AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
-),
-fix AS (
-    SELECT doc_id,
-           array_to_string(
-               list_transform(range(CAST(ceil(len(t) / 10.0) AS BIGINT)),
-                   i -> array_to_string(
-                       t[CAST(i * 10 + 1 AS INTEGER):CAST(i * 10 + 10 AS INTEGER)],
-                       ' ')),
-               chr(10))
-           || chr(10) || '{PARA_BOILER_1}'
-           || CASE WHEN doc_id % 3 = 0
-                   THEN chr(10) || '{PARA_BOILER_2}' ELSE '' END AS text2
-    FROM base
-),
-sp AS (SELECT doc_id, string_split(text2, chr(10)) AS s FROM fix),
-paras AS (
-    SELECT doc_id, CAST(u.i AS BIGINT) - 1 AS pos, s[CAST(u.i AS INTEGER)] AS para
-    FROM sp, unnest(generate_series(1, len(s))) AS u(i)
-),
+WITH {_PARA_SPLIT_SQL},
 marked AS (
     SELECT doc_id, pos, para, trim(para) = '' AS blank, md5(trim(para)) AS h,
            row_number() OVER (PARTITION BY md5(trim(para))
@@ -4996,7 +4891,11 @@ FROM codes GROUP BY vec_id
 """
 
 
-def _pq_adc_oracle() -> str:
+def _pq_adc_topk_sql(q: str, limit: int) -> str:
+    """The ADC ranking over a `codes` (vec_id, j, code) CTE and the
+    `cube` books: the query CTE `q` (vec 0), per-subspace squared
+    distances to each code's centroid, their sum as adc, and the top
+    `limit` vec_id/adc_micro rows."""
     sub = PQ_SUB
     qdiff = (
         f"list_transform(range({sub}), t -> "
@@ -5007,18 +4906,22 @@ def _pq_adc_oracle() -> str:
     chain = " + ".join(
         f"max(CASE WHEN j = {j} THEN d END)" for j in range(PQ_M)
     )
-    return f"""
-WITH {_pq_codes_cte()},
-q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+    return f"""{q} AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
 dists AS (
     SELECT c.vec_id, c.j, list_dot_product({qdiff}, {qdiff}) AS d
-    FROM codes c, q, cube
+    FROM codes c, {q}, cube
 ),
 adc AS (
     SELECT vec_id, {chain} AS adc FROM dists GROUP BY vec_id
 )
 SELECT vec_id, CAST(floor(adc * 1000000.0) AS BIGINT) AS adc_micro
-FROM adc ORDER BY adc ASC, vec_id ASC LIMIT 20
+FROM adc ORDER BY adc ASC, vec_id ASC LIMIT {limit}"""
+
+
+def _pq_adc_oracle() -> str:
+    return f"""
+WITH {_pq_codes_cte()},
+{_pq_adc_topk_sql("q", 20)}
 """
 
 
@@ -5063,7 +4966,6 @@ def _ivfpq_oracle() -> str:
 
     cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
     cents_lit = _duck_matrix(cents)
-    sub = PQ_SUB
     cand_cte = f"""cents AS (SELECT {cents_lit} AS cm),
 allv AS (
     SELECT vec_id, embedding AS v,
@@ -5088,27 +4990,9 @@ probe AS (
 e AS (
     SELECT vec_id, v FROM assigned WHERE cell IN (SELECT cell FROM probe)
 )"""
-    qdiff = (
-        f"list_transform(range({sub}), t -> "
-        f"qv[CAST(c.j * {sub} + t + 1 AS INTEGER)] - "
-        f"cb[CAST(c.j + 1 AS INTEGER)][CAST(c.code + 1 AS INTEGER)]"
-        f"[CAST(t + 1 AS INTEGER)])"
-    )
-    chain = " + ".join(
-        f"max(CASE WHEN j = {j} THEN d END)" for j in range(PQ_M)
-    )
     return f"""
 WITH {_pq_codes_cte(cand_cte)},
-q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-dists AS (
-    SELECT c.vec_id, c.j, list_dot_product({qdiff}, {qdiff}) AS d
-    FROM codes c, q, cube
-),
-adc AS (
-    SELECT vec_id, {chain} AS adc FROM dists GROUP BY vec_id
-)
-SELECT vec_id, CAST(floor(adc * 1000000.0) AS BIGINT) AS adc_micro
-FROM adc ORDER BY adc ASC, vec_id ASC LIMIT {IVFPQ_K}
+{_pq_adc_topk_sql("q", IVFPQ_K)}
 """
 
 
@@ -5612,6 +5496,25 @@ def q_ivf_pq_day2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivfpq_probe_ctes(tbl: str, qids: str) -> str:
+    """`qs` (qid, qv): the `tbl` vectors with ids in `qids`, and
+    `qcells` (qid, cell): each query's IVFPQ_PROBE nearest `cents`
+    cells by dot product, lowest cell first on ties."""
+    return f"""qs AS (
+    SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+    FROM {tbl} WHERE vec_id IN ({qids})
+),
+qcells AS (
+    SELECT qid, CAST(u.j AS INTEGER) - 1 AS cell
+    FROM (SELECT qid, list_transform(cm, c -> list_dot_product(qv, c)) AS qd
+          FROM qs, cents) s,
+         unnest(generate_series(1, {IVFPQ_LISTS})) AS u(j)
+    QUALIFY row_number() OVER (
+        PARTITION BY qid
+        ORDER BY qd[CAST(u.j AS INTEGER)] DESC, u.j ASC) <= {IVFPQ_PROBE}
+)"""
+
+
 def _ivfpq_many_ranked_ctes(
     tbl: str = "embeddings",
     cube_sql: str | None = None,
@@ -5650,19 +5553,7 @@ def _ivfpq_many_ranked_ctes(
     e_cte = f"""e AS (SELECT vec_id, embedding AS v FROM {tbl})"""
     return f"""{_pq_codes_cte(e_cte, cube_sql=cube_sql, m=m, sub=sub)},
 cents AS (SELECT {cents_lit} AS cm),
-qs AS (
-    SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-    FROM {tbl} WHERE vec_id IN ({qids})
-),
-qcells AS (
-    SELECT qid, CAST(u.j AS INTEGER) - 1 AS cell
-    FROM (SELECT qid, list_transform(cm, c -> list_dot_product(qv, c)) AS qd
-          FROM qs, cents) s,
-         unnest(generate_series(1, {IVFPQ_LISTS})) AS u(j)
-    QUALIFY row_number() OVER (
-        PARTITION BY qid
-        ORDER BY qd[CAST(u.j AS INTEGER)] DESC, u.j ASC) <= {IVFPQ_PROBE}
-),
+{_ivfpq_probe_ctes(tbl, qids)},
 allv AS (
     SELECT vec_id,
            list_transform(cm, c -> list_dot_product(
@@ -5719,29 +5610,60 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole IVF-PQ replay (codes, probes, ADC), the exact-cosine
     ranking, AND every metric under one hash — deterministic because
     all routes are."""
+    return _ann_recall_metrics(
+        _clustered_emb(spark, sf_dir),
+        _ivfpq_index_clustered(spark, sf_dir),
+        _cemb_books(spark, sf_dir),
+        residual=False,
+    )
+
+
+def _cev_queries_qrels(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The eval queries (_CEV_QIDS as query_id, embedding) and their
+    qrels: each query's exact top-IVFPQ_K cosine neighbors over `emb`,
+    itself excluded."""
+    from jobinsight_data_pipeline_spark.operators.similarity import (
+        cosine_topk,
+    )
+
+    queries = (
+        emb.filter(F.col("vec_id").isin(*_CEV_QIDS))
+        .select(F.col("vec_id").alias("query_id"), "embedding")
+    )
+    qrels = cosine_topk(
+        emb, emb.filter(F.col("vec_id").isin(*_CEV_QIDS)), k=IVFPQ_K
+    ).select("query_id", F.col("neighbor_id").alias("vec_id"))
+    return queries, qrels
+
+
+def _ann_recall_metrics(
+    emb: DataFrame,
+    index: DataFrame,
+    books: list[list[list[float]]],
+    residual: bool,
+) -> DataFrame:
+    """MRR/NDCG/recall@IVFPQ_K of the batched IVF-PQ route over `index`
+    (seed-11 coarse quantizer, `books`) against exact-cosine qrels on
+    `emb`; the ANN list drops the query itself and re-ranks."""
     from pyspark.sql import Window
 
     from jobinsight_data_pipeline_spark.operators.ranking import (
         retrieval_metrics,
     )
     from jobinsight_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
         ivf_pq_topk_many,
         unit_centroids,
     )
 
-    emb = _clustered_emb(spark, sf_dir)
-    queries = (
-        emb.filter(F.col("vec_id").isin(*_CEV_QIDS))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
+    queries, qrels = _cev_queries_qrels(emb)
     top = ivf_pq_topk_many(
-        _ivfpq_index_clustered(spark, sf_dir),
+        index,
         queries,
         unit_centroids(64, IVFPQ_LISTS, seed=11),
-        _cemb_books(spark, sf_dir),
+        books,
         k=IVFPQ_K,
         n_probe=IVFPQ_PROBE,
+        residual=residual,
     )
     w = Window.partitionBy("query_id").orderBy("rank")
     ranked = (
@@ -5752,12 +5674,28 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).cast("long").alias("rank"),
         )
     )
-    qrels = cosine_topk(
-        emb, emb.filter(F.col("vec_id").isin(*_CEV_QIDS)), k=IVFPQ_K
-    ).select("query_id", F.col("neighbor_id").alias("vec_id"))
     return retrieval_metrics(
         ranked, qrels, query_col="query_id", doc_col="vec_id", k=IVFPQ_K
     )
+
+
+def _ann_exact_cte(tbl: str) -> str:
+    """`exact` (query_id, vec_id, er): each `qs` query's exact top
+    IVFPQ_K neighbors in `tbl` by 6-decimal cosine, itself excluded."""
+    k = IVFPQ_K
+    return f"""exact AS (
+    SELECT q.qid AS query_id, e.vec_id,
+           row_number() OVER (PARTITION BY q.qid ORDER BY
+             round(
+               list_dot_product(q.qv, CAST(e.embedding AS DOUBLE[]))
+               / (sqrt(list_dot_product(q.qv, q.qv))
+                  * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
+                                          CAST(e.embedding AS DOUBLE[])))),
+               6) DESC, e.vec_id ASC) AS er
+    FROM {tbl} e, qs q
+    WHERE e.vec_id <> q.qid
+    QUALIFY er <= {k}
+)"""
 
 
 def _ann_recall_oracle(ctes: str, tbl: str) -> str:
@@ -5782,19 +5720,7 @@ annranked AS (
                PARTITION BY qid ORDER BY rank ASC) AS BIGINT) AS rr
     FROM ranked WHERE rank <= {k} AND vec_id <> qid
 ),
-exact AS (
-    SELECT q.qid AS query_id, e.vec_id,
-           row_number() OVER (PARTITION BY q.qid ORDER BY
-             round(
-               list_dot_product(q.qv, CAST(e.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(q.qv, q.qv))
-                  * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(e.embedding AS DOUBLE[])))),
-               6) DESC, e.vec_id ASC) AS er
-    FROM {tbl} e, qs q
-    WHERE e.vec_id <> q.qid
-    QUALIFY er <= {k}
-),
+{_ann_exact_cte(tbl)},
 disc(i, d) AS (VALUES {disc_rows}),
 pre(i, p) AS (VALUES {pre_rows}),
 totals AS (
@@ -5865,32 +5791,38 @@ def q_ann_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweeps up more true neighbors and the recall separation across
     probe widths is the real latency/recall trade-off, pinned under
     the hash."""
-    from pyspark.sql import Window
+    return _ann_probe_table(
+        _clustered_emb(spark, sf_dir),
+        _ivfpq_index_clustered(spark, sf_dir),
+        _cemb_books(spark, sf_dir),
+        residual=False,
+    )
 
+
+def _ann_probe_table(
+    emb: DataFrame,
+    index: DataFrame,
+    books: list[list[list[float]]],
+    residual: bool,
+) -> DataFrame:
+    """recall@IVFPQ_K per (n_probe ∈ ANN_PROBE_GRID, query) of the
+    batched IVF-PQ route over `index` against exact-cosine qrels on
+    `emb` (computed once), the query itself excluded."""
     from jobinsight_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
         ivf_pq_topk_many,
         unit_centroids,
     )
 
-    emb = _clustered_emb(spark, sf_dir)
-    queries = (
-        emb.filter(F.col("vec_id").isin(*_CEV_QIDS))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
-    qrels = cosine_topk(
-        emb, emb.filter(F.col("vec_id").isin(*_CEV_QIDS)), k=IVFPQ_K
-    ).select("query_id", F.col("neighbor_id").alias("vec_id"))
+    queries, qrels = _cev_queries_qrels(emb)
     qrel_totals = qrels.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_rel")
     )
-    index = _ivfpq_index_clustered(spark, sf_dir)
     cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
-    books = _cemb_books(spark, sf_dir)
     parts = []
     for p in ANN_PROBE_GRID:
         top = ivf_pq_topk_many(
-            index, queries, cents, books, k=IVFPQ_K, n_probe=p
+            index, queries, cents, books,
+            k=IVFPQ_K, n_probe=p, residual=residual,
         )
         ann = top.where(F.col("vec_id") != F.col("query_id")).select(
             "query_id", "vec_id"
@@ -5983,19 +5915,7 @@ def _ann_probe_curve_oracle(base_ctes: str, tbl: str) -> str:
     return f"""
 WITH {base},
 probes(p) AS (VALUES {probe_rows}),
-exact AS (
-    SELECT q.qid AS query_id, e.vec_id,
-           row_number() OVER (PARTITION BY q.qid ORDER BY
-             round(
-               list_dot_product(q.qv, CAST(e.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(q.qv, q.qv))
-                  * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(e.embedding AS DOUBLE[])))),
-               6) DESC, e.vec_id ASC) AS er
-    FROM {tbl} e, qs q
-    WHERE e.vec_id <> q.qid
-    QUALIFY er <= {k}
-),
+{_ann_exact_cte(tbl)},
 totals AS (
     SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
     FROM exact GROUP BY query_id
@@ -6099,19 +6019,7 @@ codes AS (
     SELECT vec_id, j, list_position(darr, list_min(darr)) - 1 AS code
     FROM darrs
 ),
-qs AS (
-    SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-    FROM {tbl} WHERE vec_id IN ({qids})
-),
-qcells AS (
-    SELECT qid, CAST(u.j AS INTEGER) - 1 AS cell
-    FROM (SELECT qid, list_transform(cm, c -> list_dot_product(qv, c)) AS qd
-          FROM qs, cents) s,
-         unnest(generate_series(1, {IVFPQ_LISTS})) AS u(j)
-    QUALIFY row_number() OVER (
-        PARTITION BY qid
-        ORDER BY qd[CAST(u.j AS INTEGER)] DESC, u.j ASC) <= {IVFPQ_PROBE}
-),
+{_ivfpq_probe_ctes(tbl, qids)},
 cand AS (
     SELECT q.qid, a.vec_id, a.cell
     FROM assigned a JOIN qcells q USING (cell)
@@ -6192,15 +6100,8 @@ def q_ann_recall_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually compound into the recall separation the IVFADC paper
     reports, and the raw-vs-residual comparison ranks the encodings
     meaningfully."""
-    from pyspark.sql import Window
-
-    from jobinsight_data_pipeline_spark.operators.ranking import (
-        retrieval_metrics,
-    )
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
-        cosine_topk,
-        ivf_pq_topk_many,
         unit_centroids,
     )
 
@@ -6208,29 +6109,7 @@ def q_ann_recall_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
     books = _cemb_res_books(spark, sf_dir)
     index = build_ivf_pq_index(emb, cents, books, residual=True)
-    queries = (
-        emb.filter(F.col("vec_id").isin(*_CEV_QIDS))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
-    top = ivf_pq_topk_many(
-        index, queries, cents, books,
-        k=IVFPQ_K, n_probe=IVFPQ_PROBE, residual=True,
-    )
-    w = Window.partitionBy("query_id").orderBy("rank")
-    ranked = (
-        top.where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.row_number().over(w).cast("long").alias("rank"),
-        )
-    )
-    qrels = cosine_topk(
-        emb, emb.filter(F.col("vec_id").isin(*_CEV_QIDS)), k=IVFPQ_K
-    ).select("query_id", F.col("neighbor_id").alias("vec_id"))
-    return retrieval_metrics(
-        ranked, qrels, query_col="query_id", doc_col="vec_id", k=IVFPQ_K
-    )
+    return _ann_recall_metrics(emb, index, books, residual=True)
 
 
 _CEV_RES_CTES = (
@@ -6261,60 +6140,17 @@ def q_ann_probe_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the residual route's recall separation across probe widths is a
     real tuning signal rather than arbitrary-neighbor noise, and the
     two curves rank the encodings head-to-head."""
-    from pyspark.sql import Window
-
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
-        cosine_topk,
-        ivf_pq_topk_many,
         unit_centroids,
     )
 
     emb = _clustered_emb(spark, sf_dir)
-    cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
     books = _cemb_res_books(spark, sf_dir)
     index = build_ivf_pq_index(
-        emb, cents, books, residual=True
+        emb, unit_centroids(64, IVFPQ_LISTS, seed=11), books, residual=True
     ).localCheckpoint(eager=True)
-    queries = (
-        emb.filter(F.col("vec_id").isin(*_CEV_QIDS))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
-    qrels = cosine_topk(
-        emb, emb.filter(F.col("vec_id").isin(*_CEV_QIDS)), k=IVFPQ_K
-    ).select("query_id", F.col("neighbor_id").alias("vec_id"))
-    qrel_totals = qrels.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("n_rel")
-    )
-    parts = []
-    for p in ANN_PROBE_GRID:
-        top = ivf_pq_topk_many(
-            index, queries, cents, books,
-            k=IVFPQ_K, n_probe=p, residual=True,
-        )
-        ann = top.where(F.col("vec_id") != F.col("query_id")).select(
-            "query_id", "vec_id"
-        )
-        hits = ann.join(qrels, ["query_id", "vec_id"]).groupBy(
-            "query_id"
-        ).agg(F.count(F.lit(1)).alias("n_rel_topk"))
-        parts.append(
-            qrel_totals.join(hits, "query_id", "left").select(
-                F.lit(p).alias("n_probe"),
-                F.col("query_id").alias("query"),
-                "n_rel",
-                F.coalesce("n_rel_topk", F.lit(0).cast("long")).alias(
-                    "n_rel_topk"
-                ),
-                F.expr(
-                    "(coalesce(n_rel_topk, 0L) * 1000000L) div n_rel"
-                ).alias("recall_micro"),
-            )
-        )
-    out = parts[0]
-    for q in parts[1:]:
-        out = out.unionAll(q)
-    return out
+    return _ann_probe_table(emb, index, books, residual=True)
 
 
 O_ANN_PROBE_RESIDUAL = _ann_probe_curve_oracle(_CEV_RES_CTES, tbl="cemb")
@@ -6971,6 +6807,74 @@ O_BPE_LEARN = _bpe_learn_oracle()
 INCR_SPLIT = 250
 INCR_NH, INCR_BANDS = 16, 4
 
+
+#: the hash_mode='md5' MinHash signature as DuckDB aggregates over a
+#: (doc, shingle) table: component i = min of md5('i:' || shingle)'s
+#: first 15 hex digits, h0 … h{INCR_NH - 1}
+_MD5_SIG_AGGS = ", ".join(
+    f"min(CAST(('0x' || substring(md5('{i}:' || shingle), 1, 15)) "
+    f"AS BIGINT)) AS h{i}"
+    for i in range(INCR_NH)
+)
+
+
+def _md5_shingles_sql(src: str) -> str:
+    """Distinct word 3-shingles per doc of `src` (doc_id, text) as
+    (doc, shingle); docs under three tokens have none."""
+    return f"""
+    SELECT DISTINCT doc_id AS doc, unnest(
+        list_transform(range(len(w) - 2),
+                       i -> concat(w[i + 1], ' ', w[i + 2], ' ', w[i + 3]))
+    ) AS shingle
+    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+          FROM {src}
+          WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 3) t
+"""
+
+
+def _md5_buckets_sql(sig: str) -> str:
+    """One (doc, band, bucket) row per band of `sig`'s signature: the
+    md5 of the band's comma-joined components."""
+    rpb = INCR_NH // INCR_BANDS
+
+    def bucket(band: int) -> str:
+        cat = " || ',' || ".join(
+            f"CAST(h{band * rpb + j} AS VARCHAR)" for j in range(rpb)
+        )
+        return f"CAST(('0x' || substring(md5({cat}), 1, 15)) AS BIGINT)"
+
+    return " UNION ALL ".join(
+        f"SELECT doc, {band} AS band, {bucket(band)} AS bucket FROM {sig}"
+        for band in range(INCR_BANDS)
+    )
+
+
+def _md5_classify_ctes(hist: str) -> str:
+    """The incremental_dedup decision inputs for a `batch` CTE against
+    the `hist` CTE (both doc_id, text): md5 history membership
+    (hist_md5), the batch's first-copy id per md5 (base), and the
+    near-dup docs within the batch (near_batch) and against history
+    (near_hist) by shared band bucket."""
+    return f"""sh1 AS ({_md5_shingles_sql(hist)}),
+shb AS ({_md5_shingles_sql("batch")}),
+sig1 AS (SELECT doc, {_MD5_SIG_AGGS} FROM sh1 GROUP BY doc),
+sigb AS (SELECT doc, {_MD5_SIG_AGGS} FROM shb GROUP BY doc),
+b1 AS (SELECT DISTINCT band, bucket FROM ({_md5_buckets_sql("sig1")})),
+bb AS ({_md5_buckets_sql("sigb")}),
+hist_md5 AS (SELECT DISTINCT md5(text) AS m FROM {hist}),
+base AS (
+    SELECT doc_id, md5(text) AS m,
+           min(doc_id) OVER (PARTITION BY md5(text)) AS min_id
+    FROM batch
+),
+near_batch AS (
+    SELECT DISTINCT doc FROM (
+        SELECT doc, min(doc) OVER (PARTITION BY band, bucket) AS minb
+        FROM bb
+    ) WHERE doc > minb
+),
+near_hist AS (SELECT DISTINCT bb.doc FROM bb JOIN b1 USING (band, bucket))"""
+
 #: unigram-LM tokenizer gate constants (operators/unigram): hard-EM
 #: rounds, seed/vocab cuts, max piece length. PMAX is pinned to 4 — the
 #: oracle's recursive Viterbi carries exactly four (score, path) lags.
@@ -7191,30 +7095,35 @@ def _unigram_learn_oracle() -> str:
     )
 
 
-def _unigram_encode_ctes() -> list[str]:
-    """Train replay + final-model Viterbi + the per-document
-    (pos, idx, piece, piece_id) long frame (doc_toks ⋈ wpid) — shared
-    by the encode oracle and the tokenizer-fertility oracle."""
+def _unigram_score_ctes() -> list[str]:
+    """The final model's quantized log-probabilities: `sc_e` per pruned
+    piece and `unk_e` for an unknown char (tot_e is their normalizer)."""
     q = "CAST(floor(ln(CAST({} AS DOUBLE)) * 1000000.0) AS BIGINT)"
     qt = q.format("sum(cnt)")
     qc = q.format("cnt")
-    parts = _unigram_train_ctes()
-    parts.append(f"tot_e AS MATERIALIZED (SELECT {qt} AS qt FROM pruned)")
-    parts.append(f"""sc_e AS MATERIALIZED (
+    return [
+        f"tot_e AS MATERIALIZED (SELECT {qt} AS qt FROM pruned)",
+        f"""sc_e AS MATERIALIZED (
     SELECT piece, {qc} - (SELECT qt FROM tot_e) AS q FROM pruned
-)""")
-    parts.append("unk_e AS MATERIALIZED (SELECT 0 - qt AS u FROM tot_e)")
-    parts.append(_unigram_viterbi_cte("v_e", "w_tab", "sc_e", "unk_e"))
-    parts.append("""doc_toks AS MATERIALIZED (
+)""",
+        "unk_e AS MATERIALIZED (SELECT 0 - qt AS u FROM tot_e)",
+    ]
+
+
+def _unigram_piece_ctes(src: str) -> list[str]:
+    """`doc_toks` (doc_id, pos, w) over `src`'s whitespace words and
+    `wpid` (w, idx, piece_id): each word's Viterbi pieces from `v_e`
+    with their pruned-model ids (-1 if unknown)."""
+    doc_toks = f"""doc_toks AS MATERIALIZED (
     SELECT doc_id, u.g AS pos, toks[u.g] AS w
     FROM (
         SELECT doc_id, list_filter(
             regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS toks
-        FROM documents
+        FROM {src}
     ),
     unnest(generate_series(1, len(toks))) AS u(g)
-)""")
-    parts.append("""wpid AS MATERIALIZED (
+)"""
+    wpid = """wpid AS MATERIALIZED (
     SELECT wp.w, wp.idx, coalesce(pr.piece_id, -1) AS piece_id
     FROM (
         SELECT w, u.g AS idx, pieces[u.g] AS piece
@@ -7226,28 +7135,42 @@ def _unigram_encode_ctes() -> list[str]:
         unnest(generate_series(1, len(pieces))) AS u(g)
     ) wp
     LEFT JOIN pruned pr ON pr.piece = wp.piece
-)""")
-    return parts
+)"""
+    return [doc_toks, wpid]
 
 
-def _unigram_encode_oracle() -> str:
-    parts = _unigram_encode_ctes()
-    parts.append("""agg AS (
+def _unigram_encoded_sql(parts: list[str], src: str) -> str:
+    """Close a unigram encode replay: per-document piece count and
+    '-'-joined ids for every doc of `src`, '' for docs without words."""
+    parts = parts + ["""agg AS (
     SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_pieces,
            string_agg(CAST(piece_id AS VARCHAR), '-'
                       ORDER BY d.pos, wpid.idx) AS ids_str
     FROM doc_toks d JOIN wpid ON wpid.w = d.w
     GROUP BY d.doc_id
-)""")
+)"""]
     return (
         "WITH RECURSIVE "
         + ",\n".join(parts)
-        + """
+        + f"""
 SELECT d.doc_id,
        coalesce(a.n_pieces, 0) AS n_pieces,
        coalesce(a.ids_str, '') AS ids_str
-FROM documents d LEFT JOIN agg a USING (doc_id)"""
+FROM {src} d LEFT JOIN agg a USING (doc_id)"""
     )
+
+
+def _unigram_encode_ctes() -> list[str]:
+    """Train replay + final-model Viterbi + the per-document
+    (pos, idx, piece, piece_id) long frame (doc_toks ⋈ wpid) — shared
+    by the encode oracle and the tokenizer-fertility oracle."""
+    parts = _unigram_train_ctes() + _unigram_score_ctes()
+    parts.append(_unigram_viterbi_cte("v_e", "w_tab", "sc_e", "unk_e"))
+    return parts + _unigram_piece_ctes("documents")
+
+
+def _unigram_encode_oracle() -> str:
+    return _unigram_encoded_sql(_unigram_encode_ctes(), "documents")
 
 
 def _unigram_d1_model(spark: SparkSession, sf_dir: str) -> list:
@@ -7329,9 +7252,6 @@ def q_stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_unigram_oracle() -> str:
-    q = "CAST(floor(ln(CAST({} AS DOUBLE)) * 1000000.0) AS BIGINT)"
-    qt = q.format("sum(cnt)")
-    qc = q.format("cnt")
     day1 = (
         f"(SELECT doc_id, text FROM documents WHERE doc_id < {INCR_SPLIT})"
     )
@@ -7342,11 +7262,7 @@ def _stream_unigram_oracle() -> str:
     SELECT doc_id + 1000000, text FROM documents
     WHERE doc_id < {INCR_SPLIT} AND doc_id % 50 = 0
 )""")
-    parts.append(f"tot_e AS MATERIALIZED (SELECT {qt} AS qt FROM pruned)")
-    parts.append(f"""sc_e AS MATERIALIZED (
-    SELECT piece, {qc} - (SELECT qt FROM tot_e) AS q FROM pruned
-)""")
-    parts.append("unk_e AS MATERIALIZED (SELECT 0 - qt AS u FROM tot_e)")
+    parts += _unigram_score_ctes()
     parts.append("""ew_tab AS MATERIALIZED (
     SELECT tok AS w, CAST(count(*) AS BIGINT) AS freq
     FROM (
@@ -7357,44 +7273,7 @@ def _stream_unigram_oracle() -> str:
     GROUP BY 1
 )""")
     parts.append(_unigram_viterbi_cte("v_e", "ew_tab", "sc_e", "unk_e"))
-    parts.append("""doc_toks AS MATERIALIZED (
-    SELECT doc_id, u.g AS pos, toks[u.g] AS w
-    FROM (
-        SELECT doc_id, list_filter(
-            regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS toks
-        FROM day2
-    ),
-    unnest(generate_series(1, len(toks))) AS u(g)
-)""")
-    parts.append("""wpid AS MATERIALIZED (
-    SELECT wp.w, wp.idx, coalesce(pr.piece_id, -1) AS piece_id
-    FROM (
-        SELECT w, u.g AS idx, pieces[u.g] AS piece
-        FROM (
-            SELECT w, list_filter(string_split(p1, chr(30)),
-                                  x -> x <> '') AS pieces
-            FROM v_e WHERE pos = n
-        ),
-        unnest(generate_series(1, len(pieces))) AS u(g)
-    ) wp
-    LEFT JOIN pruned pr ON pr.piece = wp.piece
-)""")
-    parts.append("""agg AS (
-    SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_pieces,
-           string_agg(CAST(piece_id AS VARCHAR), '-'
-                      ORDER BY d.pos, wpid.idx) AS ids_str
-    FROM doc_toks d JOIN wpid ON wpid.w = d.w
-    GROUP BY d.doc_id
-)""")
-    return (
-        "WITH RECURSIVE "
-        + ",\n".join(parts)
-        + """
-SELECT d.doc_id,
-       coalesce(a.n_pieces, 0) AS n_pieces,
-       coalesce(a.ids_str, '') AS ids_str
-FROM day2 d LEFT JOIN agg a USING (doc_id)"""
-    )
+    return _unigram_encoded_sql(parts + _unigram_piece_ctes("day2"), "day2")
 
 
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7499,6 +7378,51 @@ O_TOKENIZER_FERTILITY = _tokenizer_fertility_oracle()
 
 
 
+def _planted_day2(
+    spark: SparkSession, sf_dir: str, *extra: str
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+    """The day-2 dedup fixture: the day-1 history (doc_id < INCR_SPLIT)
+    and the day-2 batch as four id-ordered shards — the rest of the
+    corpus, exact copies of day-1 docs ≡ 0 (mod 50) at +1M, near copies
+    (two appended tokens) of docs ≡ 1 at +2M, and an identical twin
+    pair per doc ≡ 2 at +3M/+3.1M. The `extra` columns ride along; the
+    twins carry the literal 'twin' in them."""
+    docs = load(spark, sf_dir, "documents")["documents"].select(
+        "doc_id", "text", *extra
+    )
+    day1 = docs.filter(F.col("doc_id") < INCR_SPLIT)
+    d2base = docs.filter(F.col("doc_id") >= INCR_SPLIT)
+    plants_exact = day1.filter(F.col("doc_id") % 50 == 0).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text", *extra
+    )
+    plants_near = day1.filter(F.col("doc_id") % 50 == 1).select(
+        (F.col("doc_id") + 2_000_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
+        *extra,
+    )
+    # twin text repeats the id inside every shingle window so distinct
+    # twin pairs share NO shingles (only the pair's own exact match)
+    twin_src = day1.filter(F.col("doc_id") % 50 == 2).select(
+        "doc_id",
+        F.concat(
+            F.lit("twin"),
+            F.lit(" t"), F.col("doc_id").cast("string"),
+            F.lit(" payload"),
+            F.lit(" p"), F.col("doc_id").cast("string"),
+            F.lit(" end"),
+        ).alias("text"),
+        *(F.lit("twin").alias(c) for c in extra),
+    )
+    twins = twin_src.select(
+        (F.col("doc_id") + 3_000_000).alias("doc_id"), "text", *extra
+    ).unionByName(
+        twin_src.select(
+            (F.col("doc_id") + 3_100_000).alias("doc_id"), "text", *extra
+        )
+    )
+    return day1, (d2base, plants_exact, plants_near, twins)
+
+
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The day-2 corpus story: build_dedup_state over the day-1 half of
     the corpus (doc_id < 250), then incremental_dedup classifies a day-2
@@ -7514,81 +7438,21 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_dedup,
     )
 
-    t = load(spark, sf_dir, "documents")
-    docs = t["documents"].select("doc_id", "text")
-    day1 = docs.filter(F.col("doc_id") < INCR_SPLIT)
-    d2base = docs.filter(F.col("doc_id") >= INCR_SPLIT)
-    plants_exact = day1.filter(F.col("doc_id") % 50 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    plants_near = day1.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-    )
-    # twin text repeats the id inside every shingle window so distinct
-    # twin pairs share NO shingles (only the pair's own exact match)
-    twin_src = day1.filter(F.col("doc_id") % 50 == 2).select(
-        "doc_id",
-        F.concat(
-            F.lit("twin"),
-            F.lit(" t"), F.col("doc_id").cast("string"),
-            F.lit(" payload"),
-            F.lit(" p"), F.col("doc_id").cast("string"),
-            F.lit(" end"),
-        ).alias("text"),
-    )
-    twins = twin_src.select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"), "text"
-    ).unionByName(
-        twin_src.select((F.col("doc_id") + 3_100_000).alias("doc_id"), "text")
-    )
-    batch = (
-        d2base.unionByName(plants_exact)
-        .unionByName(plants_near)
-        .unionByName(twins)
-    )
+    day1, shards = _planted_day2(spark, sf_dir)
     state = build_dedup_state(
         day1, n_hashes=INCR_NH, bands=INCR_BANDS, hash_mode="md5"
     )
     res = incremental_dedup(
-        batch, state, n_hashes=INCR_NH, bands=INCR_BANDS, hash_mode="md5"
+        reduce(DataFrame.unionByName, shards),
+        state,
+        n_hashes=INCR_NH,
+        bands=INCR_BANDS,
+        hash_mode="md5",
     )
     return res.select("doc_id", "status")
 
 
 def _incremental_dedup_oracle() -> str:
-    nh, nb = INCR_NH, INCR_BANDS
-    rpb = nh // nb
-
-    def comp(i: int) -> str:
-        return (
-            f"CAST(('0x' || substring(md5('{i}:' || shingle), 1, 15)) "
-            "AS BIGINT)"
-        )
-
-    sig_aggs = ", ".join(f"min({comp(i)}) AS h{i}" for i in range(nh))
-
-    def bucket(band: int) -> str:
-        cat = " || ',' || ".join(
-            f"CAST(h{band * rpb + j} AS VARCHAR)" for j in range(rpb)
-        )
-        return f"CAST(('0x' || substring(md5({cat}), 1, 15)) AS BIGINT)"
-
-    def buckets_cte(sig: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT doc, {band} AS band, {bucket(band)} AS bucket FROM {sig}"
-            for band in range(nb)
-        )
-
-    shingle_cte = """
-    SELECT DISTINCT doc_id AS doc, unnest(
-        list_transform(range(len(w) - 2),
-                       i -> concat(w[i + 1], ' ', w[i + 2], ' ', w[i + 3]))
-    ) AS shingle
-    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-          FROM {src}
-          WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 3) t
-"""
     return f"""
 WITH day1 AS (
     SELECT doc_id, text FROM documents WHERE doc_id < {INCR_SPLIT}
@@ -7608,25 +7472,7 @@ batch AS (
     UNION ALL SELECT doc_id + 3000000, text FROM twin_src
     UNION ALL SELECT doc_id + 3100000, text FROM twin_src
 ),
-sh1 AS ({shingle_cte.format(src="day1")}),
-shb AS ({shingle_cte.format(src="batch")}),
-sig1 AS (SELECT doc, {sig_aggs} FROM sh1 GROUP BY doc),
-sigb AS (SELECT doc, {sig_aggs} FROM shb GROUP BY doc),
-b1 AS (SELECT DISTINCT band, bucket FROM ({buckets_cte("sig1")})),
-bb AS ({buckets_cte("sigb")}),
-hist_md5 AS (SELECT DISTINCT md5(text) AS m FROM day1),
-base AS (
-    SELECT doc_id, md5(text) AS m,
-           min(doc_id) OVER (PARTITION BY md5(text)) AS min_id
-    FROM batch
-),
-near_batch AS (
-    SELECT DISTINCT doc FROM (
-        SELECT doc, min(doc) OVER (PARTITION BY band, bucket) AS minb
-        FROM bb
-    ) WHERE doc > minb
-),
-near_hist AS (SELECT DISTINCT bb.doc FROM bb JOIN b1 USING (band, bucket))
+{_md5_classify_ctes("day1")}
 SELECT doc_id,
        CASE WHEN m IN (SELECT m FROM hist_md5) OR doc_id > min_id
                 THEN 'exact_dup'
@@ -7769,46 +7615,13 @@ def q_stream_forget_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_forget_oracle() -> str:
-    nh, nb = INCR_NH, INCR_BANDS
-    rpb = nh // nb
-
-    def comp(i: int) -> str:
-        return (
-            f"CAST(('0x' || substring(md5('{i}:' || shingle), 1, 15)) "
-            "AS BIGINT)"
-        )
-
-    sig_aggs = ", ".join(f"min({comp(i)}) AS h{i}" for i in range(nh))
-
-    def bucket(band: int) -> str:
-        cat = " || ',' || ".join(
-            f"CAST(h{band * rpb + j} AS VARCHAR)" for j in range(rpb)
-        )
-        return f"CAST(('0x' || substring(md5({cat}), 1, 15)) AS BIGINT)"
-
-    def buckets_cte(sig: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT doc, {band} AS band, {bucket(band)} AS bucket FROM {sig}"
-            for band in range(nb)
-        )
-
-    shingle_cte = """
-    SELECT DISTINCT doc_id AS doc, unnest(
-        list_transform(range(len(w) - 2),
-                       i -> concat(w[i + 1], ' ', w[i + 2], ' ', w[i + 3]))
-    ) AS shingle
-    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-          FROM {src}
-          WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 3) t
-"""
-
     def phase(p: str, batch: str, hist: str) -> str:
-        return f"""sh_{p}h AS ({shingle_cte.format(src=hist)}),
-sh_{p}b AS ({shingle_cte.format(src=batch)}),
-sig_{p}h AS (SELECT doc, {sig_aggs} FROM sh_{p}h GROUP BY doc),
-sig_{p}b AS (SELECT doc, {sig_aggs} FROM sh_{p}b GROUP BY doc),
-b_{p}h AS (SELECT DISTINCT band, bucket FROM ({buckets_cte(f"sig_{p}h")})),
-b_{p}b AS MATERIALIZED ({buckets_cte(f"sig_{p}b")}),
+        return f"""sh_{p}h AS ({_md5_shingles_sql(hist)}),
+sh_{p}b AS ({_md5_shingles_sql(batch)}),
+sig_{p}h AS (SELECT doc, {_MD5_SIG_AGGS} FROM sh_{p}h GROUP BY doc),
+sig_{p}b AS (SELECT doc, {_MD5_SIG_AGGS} FROM sh_{p}b GROUP BY doc),
+b_{p}h AS (SELECT DISTINCT band, bucket FROM ({_md5_buckets_sql(f"sig_{p}h")})),
+b_{p}b AS MATERIALIZED ({_md5_buckets_sql(f"sig_{p}b")}),
 md5_{p}h AS (SELECT DISTINCT md5(text) AS m FROM {hist}),
 base_{p} AS (
     SELECT doc_id, md5(text) AS m,
@@ -8057,45 +7870,13 @@ def _forget_propagation_oracle() -> str:
     probe MUST hit itself before erasure and never after), and the six
     day-2 statuses replayed with the full md5-minhash machinery against
     the tombstone-FILTERED history."""
-    nh, nb = INCR_NH, INCR_BANDS
-    rpb = nh // nb
-
-    def comp(i: int) -> str:
-        return (
-            f"CAST(('0x' || substring(md5('{i}:' || shingle), 1, 15)) "
-            "AS BIGINT)"
-        )
-
-    sig_aggs = ", ".join(f"min({comp(i)}) AS h{i}" for i in range(nh))
-
-    def bucket(band: int) -> str:
-        cat = " || ',' || ".join(
-            f"CAST(h{band * rpb + j} AS VARCHAR)" for j in range(rpb)
-        )
-        return f"CAST(('0x' || substring(md5({cat}), 1, 15)) AS BIGINT)"
-
-    def buckets_cte(sig: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT doc, {band} AS band, {bucket(band)} AS bucket FROM {sig}"
-            for band in range(nb)
-        )
-
-    shingle_cte = """
-    SELECT DISTINCT doc_id AS doc, unnest(
-        list_transform(range(len(w) - 2),
-                       i -> concat(w[i + 1], ' ', w[i + 2], ' ', w[i + 3]))
-    ) AS shingle
-    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-          FROM {src}
-          WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 3) t
-"""
     tomb = f"% {FORGET_MOD} = {FORGET_RESIDUE}"
     srcs = ", ".join(
         str(i) for i in (*FORGET_SRC_FORGOTTEN, *FORGET_SRC_REMEMBERED)
     )
     state_rows = (
         "sum(CASE WHEN len(regexp_split_to_array(trim(text), '\\s+')) >= 3 "
-        f"THEN {nb} ELSE 1 END)"
+        f"THEN {INCR_BANDS} ELSE 1 END)"
     )
     return f"""
 WITH hist AS (
@@ -8106,25 +7887,7 @@ batch AS (
     SELECT doc_id + {FORGET_COPY_BASE} AS doc_id, text
     FROM documents WHERE doc_id IN ({srcs})
 ),
-sh1 AS ({shingle_cte.format(src="hist")}),
-shb AS ({shingle_cte.format(src="batch")}),
-sig1 AS (SELECT doc, {sig_aggs} FROM sh1 GROUP BY doc),
-sigb AS (SELECT doc, {sig_aggs} FROM shb GROUP BY doc),
-b1 AS (SELECT DISTINCT band, bucket FROM ({buckets_cte("sig1")})),
-bb AS ({buckets_cte("sigb")}),
-hist_md5 AS (SELECT DISTINCT md5(text) AS m FROM hist),
-base AS (
-    SELECT doc_id, md5(text) AS m,
-           min(doc_id) OVER (PARTITION BY md5(text)) AS min_id
-    FROM batch
-),
-near_batch AS (
-    SELECT DISTINCT doc FROM (
-        SELECT doc, min(doc) OVER (PARTITION BY band, bucket) AS minb
-        FROM bb
-    ) WHERE doc > minb
-),
-near_hist AS (SELECT DISTINCT bb.doc FROM bb JOIN b1 USING (band, bucket)),
+{_md5_classify_ctes("hist")},
 doc_counts AS (
     SELECT CAST(count(*) AS BIGINT) AS n_before,
            CAST(count(*) FILTER (WHERE doc_id {tomb}) AS BIGINT) AS n_del,
@@ -8189,53 +7952,13 @@ def q_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash. Candidates are materialized once through the memo
     (the multi-pass offset machinery would otherwise recompute the
     dedup+classify+encode chain ~5×)."""
-    from jobinsight_data_pipeline_spark.operators.bpe import bpe_encode
-    from jobinsight_data_pipeline_spark.operators.classifier import (
-        with_quality_classification,
-    )
     from jobinsight_data_pipeline_spark.operators.dedup import (
         build_dedup_state,
         incremental_dedup,
     )
-    from jobinsight_data_pipeline_spark.operators.sampling import (
-        select_until_budget,
-    )
 
-    t = load(spark, sf_dir, "documents")
-    docs = t["documents"].select("doc_id", "text", "source")
-    day1 = docs.filter(F.col("doc_id") < INCR_SPLIT)
-    d2base = docs.filter(F.col("doc_id") >= INCR_SPLIT)
-    plants_exact = day1.filter(F.col("doc_id") % 50 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text", "source"
-    )
-    plants_near = day1.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        "source",
-    )
-    twin_src = day1.filter(F.col("doc_id") % 50 == 2).select(
-        "doc_id",
-        F.concat(
-            F.lit("twin"),
-            F.lit(" t"), F.col("doc_id").cast("string"),
-            F.lit(" payload"),
-            F.lit(" p"), F.col("doc_id").cast("string"),
-            F.lit(" end"),
-        ).alias("text"),
-        F.lit("twin").alias("source"),
-    )
-    twins = twin_src.select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"), "text", "source"
-    ).unionByName(
-        twin_src.select(
-            (F.col("doc_id") + 3_100_000).alias("doc_id"), "text", "source"
-        )
-    )
-    batch = (
-        d2base.unionByName(plants_exact)
-        .unionByName(plants_near)
-        .unionByName(twins)
-    )
+    day1, shards = _planted_day2(spark, sf_dir, "source")
+    batch = reduce(DataFrame.unionByName, shards)
 
     def build() -> str:
         cand_path = scratch_dir("day2-gate-") + "/cand"
@@ -8250,20 +7973,41 @@ def q_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("status") == "kept")
             .drop("status")
         )
-        scored = with_quality_classification(
-            kept, "text", CLF_WEIGHTS, bias=CLF_BIAS, threshold_micro=0
-        ).select("doc_id", "score_micro")
-        (
-            bpe_encode(kept)
-            .select("doc_id", "n_ids")
-            .join(scored, "doc_id")
-            .join(kept.select("doc_id", "source"), "doc_id")
-            .filter(F.col("score_micro") >= 0)
-            .write.parquet(cand_path)
-        )
+        _write_day2_candidates(kept, cand_path)
         return cand_path
 
-    cand_path = memo(spark, "day2_pipeline", sf_dir, build)
+    return _day2_manifest(spark, memo(spark, "day2_pipeline", sf_dir, build))
+
+
+def _write_day2_candidates(kept: DataFrame, path: str) -> None:
+    """The day-2 tail's expensive half, written once: the kept docs
+    with classifier margin ≥ 0, their BPE id counts and source."""
+    from jobinsight_data_pipeline_spark.operators.bpe import bpe_encode
+    from jobinsight_data_pipeline_spark.operators.classifier import (
+        with_quality_classification,
+    )
+
+    scored = with_quality_classification(
+        kept, "text", CLF_WEIGHTS, bias=CLF_BIAS, threshold_micro=0
+    ).select("doc_id", "score_micro")
+    (
+        bpe_encode(kept)
+        .select("doc_id", "n_ids")
+        .join(scored, "doc_id")
+        .join(kept.select("doc_id", "source"), "doc_id")
+        .filter(F.col("score_micro") >= 0)
+        .write.parquet(path)
+    )
+
+
+def _day2_manifest(spark: SparkSession, cand_path: str) -> DataFrame:
+    """Fill DAY2_BUDGET best-first from the written candidates and roll
+    the selection up per source: doc count, total ids and a bit_xor id
+    checksum."""
+    from jobinsight_data_pipeline_spark.operators.sampling import (
+        select_until_budget,
+    )
+
     cand = spark.read.parquet(cand_path)
     selected = select_until_budget(
         cand, "score_micro", "n_ids", DAY2_BUDGET, ["doc_id"]
@@ -8371,51 +8115,15 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from jobinsight_data_pipeline_spark.operators.bpe import bpe_encode
-    from jobinsight_data_pipeline_spark.operators.classifier import (
-        with_quality_classification,
-    )
     from jobinsight_data_pipeline_spark.operators.dedup import (
         build_dedup_state,
-    )
-    from jobinsight_data_pipeline_spark.operators.sampling import (
-        select_until_budget,
     )
     from jobinsight_data_pipeline_spark.streaming.incremental import (
         stream_incremental_dedup,
         stream_jsonl_ingest,
     )
 
-    t = load(spark, sf_dir, "documents")
-    docs = t["documents"].select("doc_id", "text", "source")
-    day1 = docs.filter(F.col("doc_id") < INCR_SPLIT)
-    d2base = docs.filter(F.col("doc_id") >= INCR_SPLIT)
-    plants_exact = day1.filter(F.col("doc_id") % 50 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text", "source"
-    )
-    plants_near = day1.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        "source",
-    )
-    twin_src = day1.filter(F.col("doc_id") % 50 == 2).select(
-        "doc_id",
-        F.concat(
-            F.lit("twin"),
-            F.lit(" t"), F.col("doc_id").cast("string"),
-            F.lit(" payload"),
-            F.lit(" p"), F.col("doc_id").cast("string"),
-            F.lit(" end"),
-        ).alias("text"),
-        F.lit("twin").alias("source"),
-    )
-    twins = twin_src.select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"), "text", "source"
-    ).unionByName(
-        twin_src.select(
-            (F.col("doc_id") + 3_100_000).alias("doc_id"), "text", "source"
-        )
-    )
+    day1, shards = _planted_day2(spark, sf_dir, "source")
 
     schema = StructType(
         [
@@ -8430,9 +8138,7 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stage A input: one JSONL drop per shard + a corrupt drop
         jsonl_dir = f"{base}/jsonl"
         seen: set = set()
-        for i, shard in enumerate(
-            (d2base, plants_exact, plants_near, twins)
-        ):
+        for i, shard in enumerate(shards):
             shard.select(
                 F.to_json(F.struct("doc_id", "text", "source")).alias(
                     "value"
@@ -8489,35 +8195,11 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("status") == "kept")
             .select("doc_id", "text", "source")
         )
-        scored = with_quality_classification(
-            kept, "text", CLF_WEIGHTS, bias=CLF_BIAS, threshold_micro=0
-        ).select("doc_id", "score_micro")
-        (
-            bpe_encode(kept)
-            .select("doc_id", "n_ids")
-            .join(scored, "doc_id")
-            .join(kept.select("doc_id", "source"), "doc_id")
-            .filter(F.col("score_micro") >= 0)
-            .write.parquet(f"{base}/cand")
-        )
+        _write_day2_candidates(kept, f"{base}/cand")
         return f"{base}/cand"
 
-    cand_path = memo(spark, "stream_day2_pipeline", sf_dir, build)
-    cand = spark.read.parquet(cand_path)
-    selected = select_until_budget(
-        cand, "score_micro", "n_ids", DAY2_BUDGET, ["doc_id"]
-    )
-    chk = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    return (
-        selected.withColumn("_chk", chk)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_ids").cast("long").alias("total_ids"),
-            F.bit_xor("_chk").alias("id_checksum"),
-        )
+    return _day2_manifest(
+        spark, memo(spark, "stream_day2_pipeline", sf_dir, build)
     )
 
 
@@ -8538,32 +8220,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_incremental_dedup,
     )
 
-    t = load(spark, sf_dir, "documents")
-    docs = t["documents"].select("doc_id", "text")
-    day1 = docs.filter(F.col("doc_id") < INCR_SPLIT)
-    d2base = docs.filter(F.col("doc_id") >= INCR_SPLIT)
-    plants_exact = day1.filter(F.col("doc_id") % 50 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    plants_near = day1.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-    )
-    twin_src = day1.filter(F.col("doc_id") % 50 == 2).select(
-        "doc_id",
-        F.concat(
-            F.lit("twin"),
-            F.lit(" t"), F.col("doc_id").cast("string"),
-            F.lit(" payload"),
-            F.lit(" p"), F.col("doc_id").cast("string"),
-            F.lit(" end"),
-        ).alias("text"),
-    )
-    twins = twin_src.select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"), "text"
-    ).unionByName(
-        twin_src.select((F.col("doc_id") + 3_100_000).alias("doc_id"), "text")
-    )
+    day1, shards = _planted_day2(spark, sf_dir)
 
     def build() -> str:
         base = scratch_dir("streamincr-gate-")
@@ -8572,9 +8229,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # file source processes them in id order (the equivalence
         # precondition for record='all')
         stamped: set[str] = set()
-        for i, shard in enumerate(
-            (d2base, plants_exact, plants_near, twins)
-        ):
+        for i, shard in enumerate(shards):
             shard.coalesce(1).write.mode("append").parquet(raw)
             _stamp_new(raw, i, stamped)
         build_dedup_state(
@@ -8583,7 +8238,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_incremental_dedup(
             spark,
             raw,
-            d2base.schema,
+            shards[0].schema,
             f"{base}/sink",
             f"{base}/state",
             f"{base}/ckpt",
@@ -8976,9 +8631,6 @@ def _corpus_build_oracle() -> str:
         _sym_sql,
         bpe_vocab,
     )
-    from jobinsight_data_pipeline_spark.operators.similarity import (
-        unit_centroids,
-    )
 
     rounds = BPE_LEARN_ROUNDS
     learn_ctes = ",\n".join(_bpe_learn_ctes(rounds))
@@ -8988,13 +8640,6 @@ def _corpus_build_oracle() -> str:
     learned_rows = ", ".join(
         f"((SELECT l || r FROM m{i}), {len(BASE_SYMBOLS) + i})"
         for i in range(rounds)
-    )
-    cents = unit_centroids(64, 8, seed=11)
-    cent_values = ",\n    ".join(
-        "({}, CAST([{}] AS DOUBLE[]))".format(
-            j, ",".join(repr(float(x)) for x in row)
-        )
-        for j, row in enumerate(cents)
     )
     toks = "regexp_split_to_array(trim(text), '\\s+')"
     wc = f"CASE WHEN trim(text) = '' THEN 0 ELSE len({toks}) END"
@@ -9008,7 +8653,7 @@ def _corpus_build_oracle() -> str:
 WITH {learn_ctes},
 vocab(sym, id) AS (VALUES {vocab_rows}, {learned_rows}),
 cents(j, c) AS (VALUES
-    {cent_values}
+    {_unit_cents_values()}
 ),
 planted AS MATERIALIZED (
     SELECT doc_id, {_CB_CASE} AS text, source, n_chars FROM documents
@@ -10256,27 +9901,7 @@ def _corpus_refine_oracle() -> str:
         )
 
     return f"""
-WITH base AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
-),
-fix AS (
-    SELECT doc_id,
-           array_to_string(
-               list_transform(range(CAST(ceil(len(t) / 10.0) AS BIGINT)),
-                   i -> array_to_string(
-                       t[CAST(i * 10 + 1 AS INTEGER):CAST(i * 10 + 10 AS INTEGER)],
-                       ' ')),
-               chr(10))
-           || chr(10) || '{PARA_BOILER_1}'
-           || CASE WHEN doc_id % 3 = 0
-                   THEN chr(10) || '{PARA_BOILER_2}' ELSE '' END AS text2
-    FROM base
-),
-sp AS (SELECT doc_id, string_split(text2, chr(10)) AS s FROM fix),
-paras AS (
-    SELECT doc_id, CAST(u.i AS BIGINT) - 1 AS pos, s[CAST(u.i AS INTEGER)] AS para
-    FROM sp, unnest(generate_series(1, len(s))) AS u(i)
-),
+WITH {_PARA_SPLIT_SQL},
 marked AS (
     SELECT doc_id, pos, para, trim(para) = '' AS blank,
            row_number() OVER (PARTITION BY md5(trim(para))
@@ -10388,13 +10013,10 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jsonl_ingest_summary(back)
 
 
-def _jsonl_ingest_summary(back: DataFrame) -> DataFrame:
-    """Per-source (count, Σchars, bit_xor content checksum) + '_corrupt'
-    quarantine row over a raw parsed-JSONL frame (data columns +
-    ``_corrupt_record``) — shared by the batch roundtrip and streaming
-    ingest gates so ONE oracle pins both paths."""
-    corrupt = F.col("_corrupt_record").isNotNull()
-    chk = F.conv(
+def _doc_checksum() -> Column:
+    """A documents row's content checksum: the first 8 hex digits of
+    the md5 of its columns joined by \\x1f (NULLs skipped), as a long."""
+    return F.conv(
         F.substring(
             F.md5(
                 F.concat_ws(
@@ -10412,6 +10034,15 @@ def _jsonl_ingest_summary(back: DataFrame) -> DataFrame:
         16,
         10,
     ).cast("long")
+
+
+def _jsonl_ingest_summary(back: DataFrame) -> DataFrame:
+    """Per-source (count, Σchars, bit_xor content checksum) + '_corrupt'
+    quarantine row over a raw parsed-JSONL frame (data columns +
+    ``_corrupt_record``) — shared by the batch roundtrip and streaming
+    ingest gates so ONE oracle pins both paths."""
+    corrupt = F.col("_corrupt_record").isNotNull()
+    chk = _doc_checksum()
     return (
         back.withColumn("_chk", F.when(corrupt, F.lit(0)).otherwise(chk))
         .withColumn(
@@ -11268,10 +10899,11 @@ def _plant_bmp_fixture(base: str) -> None:
             fh.write(encode_bmp(rows, top_down=td))
 
 
-def _bmp_oracle() -> str:
+def _rgb_stats_oracle(grids: list[list[list[tuple[int, ...]]]]) -> str:
+    """The RGB decode gates' rows for pixel `grids` in media_id order
+    (from 1): size, per-channel sums and the position-weighted sum."""
     values = []
-    for i, name in enumerate(sorted(BMP_FIXTURE)):
-        rows, _td = BMP_FIXTURE[name]
+    for i, rows in enumerate(grids):
         h = len(rows)
         w = len(rows[0])
         sum_r = sum(p[0] for row in rows for p in row)
@@ -11300,6 +10932,10 @@ SELECT CAST(media_id AS BIGINT) AS media_id,
        CAST(pos_weighted AS BIGINT) AS pos_weighted
 FROM t
 """
+
+
+def _bmp_oracle() -> str:
+    return _rgb_stats_oracle([BMP_FIXTURE[n][0] for n in sorted(BMP_FIXTURE)])
 
 
 O_BMP_DECODE = _bmp_oracle()
@@ -11775,12 +11411,12 @@ def q_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bmp_resize_oracle() -> str:
-    values = []
-    for i, name in enumerate(sorted(BMP_FIXTURE)):
+    grids = []
+    for name in sorted(BMP_FIXTURE):
         rows, _td = BMP_FIXTURE[name]
         w, h = len(rows[0]), len(rows)
         ow, oh = w // 2, h // 2
-        small = [
+        grids.append([
             [
                 tuple(
                     (
@@ -11796,34 +11432,8 @@ def _bmp_resize_oracle() -> str:
                 for c in range(ow)
             ]
             for r in range(oh)
-        ]
-        sum_r = sum(p[0] for row in small for p in row)
-        sum_g = sum(p[1] for row in small for p in row)
-        sum_b = sum(p[2] for row in small for p in row)
-        weighted = sum(
-            (ri * ow + ci) * (r + g + b)
-            for ri, row in enumerate(small)
-            for ci, (r, g, b) in enumerate(row)
-        )
-        values.append(
-            f"({i + 1}, {ow}, {oh}, {ow * oh}, {sum_r}, {sum_g}, {sum_b},"
-            f" {weighted})"
-        )
-    rows_sql = ",\n    ".join(values)
-    return f"""
-WITH t(media_id, width, height, n_px, sum_r, sum_g, sum_b,
-       pos_weighted) AS (VALUES
-    {rows_sql})
-SELECT CAST(media_id AS BIGINT) AS media_id,
-       CAST(width AS INTEGER) AS width,
-       CAST(height AS INTEGER) AS height,
-       CAST(n_px AS BIGINT) AS n_px,
-       CAST(sum_r AS BIGINT) AS sum_r,
-       CAST(sum_g AS BIGINT) AS sum_g,
-       CAST(sum_b AS BIGINT) AS sum_b,
-       CAST(pos_weighted AS BIGINT) AS pos_weighted
-FROM t
-"""
+        ])
+    return _rgb_stats_oracle(grids)
 
 
 O_BMP_RESIZE = _bmp_resize_oracle()
@@ -12722,24 +12332,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .schema(docs.schema)
         .load(out)
     )
-    chk = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "\x1f",
-                    F.col("doc_id").cast("string"),
-                    F.col("text"),
-                    F.col("lang"),
-                    F.col("source"),
-                    F.col("n_chars").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    chk = _doc_checksum()
     return back.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("text").isNull(), 1).otherwise(0))
@@ -12780,24 +12373,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.repartition(64).write.mode("overwrite").parquet(frag)
     stats = compact_parquet(spark, frag, out, target_mb=128)
     back = spark.read.parquet(out)
-    chk = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "\x1f",
-                    F.col("doc_id").cast("string"),
-                    F.col("text"),
-                    F.col("lang"),
-                    F.col("source"),
-                    F.col("n_chars").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    chk = _doc_checksum()
     return (
         back.groupBy("source")
         .agg(
@@ -13242,12 +12818,19 @@ def q_kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     population, exact integer inertia, and the full centroid rendered
     as a scalar string (gate outputs must not carry ARRAY columns —
     CLAUDE.md array-hash rule)."""
+    return _kmeans_model_table(spark, sf_dir, _kmeans_centroids(spark, sf_dir))
+
+
+def _kmeans_model_table(
+    spark: SparkSession, sf_dir: str, cents: list[list[int]]
+) -> DataFrame:
+    """One row per cell of the fitted `cents`: population, integer
+    inertia, and the centroid as a '|'-joined string."""
     from jobinsight_data_pipeline_spark.operators.clustering import (
         kmeans_assign,
     )
 
     t = load(spark, sf_dir, "embeddings")
-    cents = _kmeans_centroids(spark, sf_dir)
     assigned = kmeans_assign(
         t["embeddings"], cents, "embedding", scale=_KMEANS_SCALE
     )
@@ -13653,25 +13236,8 @@ def q_kmeans_pp_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate and the D² draw materially lowers post-fit SSE
     (tests/test_operators.py planted-blob pin); on this near-uniform
     synthetic corpus the two land within ±0.1% of each other."""
-    from jobinsight_data_pipeline_spark.operators.clustering import (
-        kmeans_assign,
-    )
-
-    t = load(spark, sf_dir, "embeddings")
-    cents = _kmeans_pp_centroids(spark, sf_dir)
-    assigned = kmeans_assign(
-        t["embeddings"], cents, "embedding", scale=_KMEANS_SCALE
-    )
-    cent_rows = [
-        (j, "|".join(str(x) for x in c)) for j, c in enumerate(cents)
-    ]
-    cent_df = spark.createDataFrame(cent_rows, "cell int, centroid string")
-    agg = assigned.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("size"),
-        F.sum("dist").alias("inertia"),
-    )
-    return agg.join(F.broadcast(cent_df), "cell").select(
-        "cell", "size", "inertia", "centroid"
+    return _kmeans_model_table(
+        spark, sf_dir, _kmeans_pp_centroids(spark, sf_dir)
     )
 
 
@@ -13764,7 +13330,6 @@ def q_ivf_trained_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_trained_oracle() -> str:
     k, iters, scale = _KMEANS_K, _KMEANS_ITERS, _KMEANS_SCALE
-    sub = PQ_SUB
     cand_cte = f"""cents AS (
     SELECT list(cf ORDER BY cell) AS cm
     FROM (SELECT cell, list_transform(c,
@@ -13795,30 +13360,12 @@ probe AS (
 e AS (
     SELECT vec_id, v FROM assigned WHERE cell IN (SELECT cell FROM probe)
 )"""
-    qdiff = (
-        f"list_transform(range({sub}), t -> "
-        f"qv[CAST(c.j * {sub} + t + 1 AS INTEGER)] - "
-        f"cb[CAST(c.j + 1 AS INTEGER)][CAST(c.code + 1 AS INTEGER)]"
-        f"[CAST(t + 1 AS INTEGER)])"
-    )
-    chain = " + ".join(
-        f"max(CASE WHEN j = {j} THEN d END)" for j in range(PQ_M)
-    )
     # continue the kmeans WITH chain (q/c0…/a0…/m0…/afinal) with the
     # derived-centroid IVF-PQ replay; the ADC tail's query CTE is
     # renamed qt (the kmeans chain owns the name q)
     cont = f""",
 {_pq_codes_cte(cand_cte)},
-qt AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-dists AS (
-    SELECT c.vec_id, c.j, list_dot_product({qdiff}, {qdiff}) AS d
-    FROM codes c, qt, cube
-),
-adc AS (
-    SELECT vec_id, {chain} AS adc FROM dists GROUP BY vec_id
-)
-SELECT vec_id, CAST(floor(adc * 1000000.0) AS BIGINT) AS adc_micro
-FROM adc ORDER BY adc ASC, vec_id ASC LIMIT {IVFPQ_K}"""
+{_pq_adc_topk_sql("qt", IVFPQ_K)}"""
     return _kmeans_oracle_sql(cont)
 
 
@@ -13859,8 +13406,12 @@ def q_ivf_residual_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_residual_trained_oracle() -> str:
-    k_cells, iters, scale = _KMEANS_K, _KMEANS_ITERS, _KMEANS_SCALE
+def _residual_adc_topk_sql(cb: str, cube: str) -> str:
+    """The residual-ADC serve of vec 0 over the fitted `cents` (cm) and
+    the residuals `re`/`rassigned`: residual codes against the `cube`
+    table's `cb` books, the IVFPQ_PROBE nearest cells, and the top
+    IVFPQ_K probed vectors by residual ADC."""
+    k_cells = _KMEANS_K
     sub = PQ_SUB
     diff = (
         f"list_transform(range({sub}), t -> "
@@ -13871,39 +13422,17 @@ def _ivf_residual_trained_oracle() -> str:
         f"(q.qv[CAST(c.j * {sub} + t + 1 AS INTEGER)] - "
         f"cm[CAST(d.cell + 1 AS INTEGER)]"
         f"[CAST(c.j * {sub} + t + 1 AS INTEGER)]) - "
-        f"cb[CAST(c.j + 1 AS INTEGER)][CAST(c.code + 1 AS INTEGER)]"
+        f"{cb}[CAST(c.j + 1 AS INTEGER)][CAST(c.code + 1 AS INTEGER)]"
         f"[CAST(t + 1 AS INTEGER)])"
     )
     chain = " + ".join(
         f"max(CASE WHEN j = {j} THEN dd END)" for j in range(PQ_M)
     )
-    cont = f""",
-cents AS (
-    SELECT list(cf ORDER BY cell) AS cm
-    FROM (SELECT cell, list_transform(c,
-              x -> CAST(x - {scale} AS DOUBLE) / {scale}.0) AS cf
-          FROM c{iters})
-),
-cube AS (SELECT {_duck_cube(_pqr_cb())} AS cb),
-rassigned AS MATERIALIZED (
-    SELECT vec_id, v0, list_position(sarr, list_max(sarr)) - 1 AS cell
-    FROM (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0,
-               list_transform(cm, cc -> list_dot_product(
-                   CAST(embedding AS DOUBLE[]), cc)) AS sarr
-        FROM embeddings, cents)
-),
-re AS (
-    SELECT a.vec_id, a.cell,
-           list_transform(range(64), t -> v0[CAST(t + 1 AS INTEGER)]
-             - cm[CAST(cell + 1 AS INTEGER)][CAST(t + 1 AS INTEGER)]) AS v
-    FROM rassigned a, cents
-),
-rdarrs AS (
+    return f"""rdarrs AS (
     SELECT vec_id, cell, u.j AS j,
-           list_transform(cb[CAST(u.j + 1 AS INTEGER)],
+           list_transform({cb}[CAST(u.j + 1 AS INTEGER)],
                           c -> list_dot_product({diff}, {diff})) AS darr
-    FROM re, cube, unnest(range({PQ_M})) AS u(j)
+    FROM re, {cube}, unnest(range({PQ_M})) AS u(j)
 ),
 rcodes AS (
     SELECT vec_id, cell, j,
@@ -13926,13 +13455,40 @@ dists AS (
     FROM rcodes c
     JOIN (SELECT vec_id, cell FROM rassigned
           WHERE cell IN (SELECT cell FROM probe)) d USING (vec_id),
-    qv1 q, cube, cents
+    qv1 q, {cube}, cents
 ),
 adc AS (
     SELECT vec_id, {chain} AS adc FROM dists GROUP BY vec_id
 )
 SELECT vec_id, CAST(floor(adc * 1000000.0) AS BIGINT) AS adc_micro
 FROM adc ORDER BY adc ASC, vec_id ASC LIMIT {IVFPQ_K}"""
+
+
+def _ivf_residual_trained_oracle() -> str:
+    iters, scale = _KMEANS_ITERS, _KMEANS_SCALE
+    cont = f""",
+cents AS (
+    SELECT list(cf ORDER BY cell) AS cm
+    FROM (SELECT cell, list_transform(c,
+              x -> CAST(x - {scale} AS DOUBLE) / {scale}.0) AS cf
+          FROM c{iters})
+),
+cube AS (SELECT {_duck_cube(_pqr_cb())} AS cb),
+rassigned AS MATERIALIZED (
+    SELECT vec_id, v0, list_position(sarr, list_max(sarr)) - 1 AS cell
+    FROM (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0,
+               list_transform(cm, cc -> list_dot_product(
+                   CAST(embedding AS DOUBLE[]), cc)) AS sarr
+        FROM embeddings, cents)
+),
+re AS (
+    SELECT a.vec_id, a.cell,
+           list_transform(range(64), t -> v0[CAST(t + 1 AS INTEGER)]
+             - cm[CAST(cell + 1 AS INTEGER)][CAST(t + 1 AS INTEGER)]) AS v
+    FROM rassigned a, cents
+),
+{_residual_adc_topk_sql("cb", "cube")}"""
     return _kmeans_oracle_sql(cont)
 
 
@@ -13983,59 +13539,9 @@ def q_ivfadc_trained_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfadc_trained_full_oracle() -> str:
-    k_cells = _KMEANS_K
-    sub = PQ_SUB
-    diff = (
-        f"list_transform(range({sub}), t -> "
-        f"v[CAST(u.j * {sub} + t + 1 AS INTEGER)] - c[CAST(t + 1 AS INTEGER)])"
-    )
-    qdiff = (
-        f"list_transform(range({sub}), t -> "
-        f"(q.qv[CAST(c.j * {sub} + t + 1 AS INTEGER)] - "
-        f"cm[CAST(d.cell + 1 AS INTEGER)]"
-        f"[CAST(c.j * {sub} + t + 1 AS INTEGER)]) - "
-        f"tcb[CAST(c.j + 1 AS INTEGER)][CAST(c.code + 1 AS INTEGER)]"
-        f"[CAST(t + 1 AS INTEGER)])"
-    )
-    chain = " + ".join(
-        f"max(CASE WHEN j = {j} THEN dd END)" for j in range(PQ_M)
-    )
     cont = f""",
 {_pqrt_train_cte()},
-rdarrs AS (
-    SELECT vec_id, cell, u.j AS j,
-           list_transform(tcb[CAST(u.j + 1 AS INTEGER)],
-                          c -> list_dot_product({diff}, {diff})) AS darr
-    FROM re, tcube, unnest(range({PQ_M})) AS u(j)
-),
-rcodes AS (
-    SELECT vec_id, cell, j,
-           list_position(darr, list_min(darr)) - 1 AS code
-    FROM rdarrs
-),
-qv1 AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id = 0),
-probe AS (
-    SELECT CAST(u.j AS BIGINT) - 1 AS cell
-    FROM (SELECT list_transform(cm, cc -> list_dot_product(qv1.qv, cc))
-              AS qd
-          FROM cents, qv1) s,
-         unnest(generate_series(1, {k_cells})) AS u(j)
-    ORDER BY qd[CAST(u.j AS INTEGER)] DESC, u.j ASC
-    LIMIT {IVFPQ_PROBE}
-),
-dists AS (
-    SELECT c.vec_id, c.j, list_dot_product({qdiff}, {qdiff}) AS dd
-    FROM rcodes c
-    JOIN (SELECT vec_id, cell FROM rassigned
-          WHERE cell IN (SELECT cell FROM probe)) d USING (vec_id),
-    qv1 q, tcube, cents
-),
-adc AS (
-    SELECT vec_id, {chain} AS adc FROM dists GROUP BY vec_id
-)
-SELECT vec_id, CAST(floor(adc * 1000000.0) AS BIGINT) AS adc_micro
-FROM adc ORDER BY adc ASC, vec_id ASC LIMIT {IVFPQ_K}"""
+{_residual_adc_topk_sql("tcb", "tcube")}"""
     return _kmeans_oracle_sql(cont)
 
 

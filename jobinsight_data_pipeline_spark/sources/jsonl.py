@@ -26,7 +26,7 @@ around it:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, StringType
 
@@ -47,6 +47,29 @@ def write_jsonl(
     if compression:
         w = w.option("compression", compression)
     w.json(path)
+
+
+def _parse_lines(
+    lines: DataFrame, schema: StructType, *keep: Column
+) -> DataFrame:
+    """The one JSON-Lines parse, for batch and streaming text frames:
+    blank ``value`` lines dropped, the rest parsed permissively into the
+    struct ``_p`` (``schema``'s fields plus ``_corrupt_record``, which
+    holds each malformed line), next to the ``keep`` columns."""
+    full = StructType(
+        list(schema.fields) + [StructField("_corrupt_record", StringType())]
+    )
+    parsed = F.from_json(
+        F.col("value"),
+        full,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
+    )
+    return (
+        # the json datasource skips blank lines; mirror that, or every
+        # trailing newline would surface as a phantom corrupt row
+        lines.filter(F.length(F.trim(F.col("value"))) > 0)
+        .select(*keep, parsed.alias("_p"))
+    )
 
 
 def read_jsonl(
@@ -71,22 +94,7 @@ def read_jsonl(
     mode) and the byte-range splittability are identical; Catalyst's
     OptimizeJsonExprs still prunes the parse schema down to the fields
     a query actually touches."""
-    full = StructType(
-        list(schema.fields) + [StructField("_corrupt_record", StringType())]
-    )
-    parsed = F.from_json(
-        F.col("value"),
-        full,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-    )
-    df = (
-        spark.read.text(path)
-        # the json datasource skips blank lines; mirror that, or every
-        # trailing newline would surface as a phantom corrupt row
-        .filter(F.length(F.trim(F.col("value"))) > 0)
-        .select(parsed.alias("_p"))
-        .select("_p.*")
-    )
+    df = _parse_lines(spark.read.text(path), schema).select("_p.*")
     if keep_corrupt:
         return df
     return df.filter(F.col("_corrupt_record").isNull()).select(
@@ -97,18 +105,8 @@ def read_jsonl(
 def corrupt_lines(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """The quarantine view: just the raw lines that failed the schema
     (as ``line``), for counting and triage."""
-    full = StructType(
-        list(schema.fields) + [StructField("_corrupt_record", StringType())]
-    )
-    parsed = F.from_json(
-        F.col("value"),
-        full,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-    )
     return (
-        spark.read.text(path)
-        .filter(F.length(F.trim(F.col("value"))) > 0)
-        .select(F.col("value"), parsed.alias("_p"))
+        _parse_lines(spark.read.text(path), schema, F.col("value"))
         .filter(F.col("_p._corrupt_record").isNotNull())
         .select(F.col("value").alias("line"))
     )

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from jobinsight_data_pipeline_spark.schemas import RAW_JOBS
+from jobinsight_data_pipeline_spark.sources.jsonl import _parse_lines
 from jobinsight_data_pipeline_spark.sources.lake import ParquetLake
 
 
@@ -165,8 +166,8 @@ def stream_jsonl_ingest(
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """Streaming crawl ingestion from JSON-Lines drops — the streaming
-    twin of ``sources/jsonl.read_jsonl``: a text readStream parsed with
-    the SAME permissive ``from_json`` + corrupt-record options, landing
+    twin of ``sources/jsonl.read_jsonl``: a text readStream parsed by
+    the same ``sources/jsonl._parse_lines`` as the batch reader, landing
     in ONE unified parquet sink that carries the data columns plus
     ``_corrupt_record``. Clean view = filter corrupt IS NULL; quarantine
     view = the complement — and because a single native file sink is
@@ -177,21 +178,8 @@ def stream_jsonl_ingest(
     Blank lines are skipped like the json datasource does. One
     micro-batch per dropped shard, the cross-batch behavior tests want
     exercised."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    full = StructType(
-        list(schema.fields) + [StructField("_corrupt_record", StringType())]
-    )
-    parsed = F.from_json(
-        F.col("value"),
-        full,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-    )
-    stream = (
-        _drops(spark, raw_dir, fmt="text")
-        .filter(F.length(F.trim(F.col("value"))) > 0)
-        .select(parsed.alias("_p"))
-        .select("_p.*")
+    stream = _parse_lines(_drops(spark, raw_dir, fmt="text"), schema).select(
+        "_p.*"
     )
     return (
         stream.writeStream.format("parquet")

@@ -785,6 +785,53 @@ def test_jsonl_shard_count_and_compression(spark, tmp_path):
     assert back.count() == 100
 
 
+def test_stream_jsonl_ingest_matches_batch_parse(spark, tmp_path):
+    """The streamed JSON-Lines parse equals the batch one on the same
+    shard: the sink's clean rows are read_jsonl's rows, and its
+    quarantined ``_corrupt_record`` values are corrupt_lines' lines
+    (the blank line is skipped by both)."""
+    from jobinsight_data_pipeline_spark.sources.jsonl import (
+        corrupt_lines,
+        read_jsonl,
+    )
+    from jobinsight_data_pipeline_spark.streaming.incremental import (
+        stream_jsonl_ingest,
+    )
+
+    schema = spark.createDataFrame([], "id long, s string").schema
+    drops = tmp_path / "drops"
+    drops.mkdir()
+    (drops / "shard-0.json").write_text(
+        '{"id": 1, "s": "a"}\n'
+        "\n"
+        "{broken\n"
+        '{"id": 2, "s": "b \\"quoted\\""}\n'
+        '{"id": "not a long", "s": "typed wrong"}\n'
+    )
+    sink = str(tmp_path / "sink")
+    stream_jsonl_ingest(
+        spark, str(drops), schema, sink, str(tmp_path / "ckpt")
+    ).awaitTermination()
+    got = spark.read.parquet(sink)
+
+    clean = got.filter("_corrupt_record IS NULL").select("id", "s")
+    batch = read_jsonl(spark, str(drops), schema)
+    assert sorted(map(tuple, clean.collect())) == sorted(
+        map(tuple, batch.collect())
+    )
+    assert len(batch.collect()) == 2
+
+    quarantined = sorted(
+        r._corrupt_record
+        for r in got.filter("_corrupt_record IS NOT NULL").collect()
+    )
+    lines = sorted(
+        r.line for r in corrupt_lines(spark, str(drops), schema).collect()
+    )
+    assert quarantined == lines
+    assert lines == ['{"id": "not a long", "s": "typed wrong"}', "{broken"]
+
+
 def test_stream_incremental_dedup_kept_semantics(spark, tmp_path):
     """Production record='kept': a doc dropped as a duplicate does NOT
     join history, so a later doc identical to the DROPPED one (but not
